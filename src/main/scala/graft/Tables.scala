@@ -2,16 +2,32 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import java.util.concurrent.ConcurrentHashMap
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md /
   * FIXTURES.md). One parquet file per table under the scale-factor
   * directory passed to every query.
   *
-  * Reads are plain `spark.read.parquet` so Catalyst's column pruning
-  * and predicate pushdown reach the scan (verify with
-  * `.explain("formatted")` → `ReadSchema` / `PushedFilters`). On a
-  * real cluster these paths would be catalog tables with
-  * partitioning; the loader seam keeps that swap local.
+  * Every read builds a fresh parquet relation, so Catalyst's column
+  * pruning and predicate pushdown reach the scan (verify with
+  * `.explain("formatted")` → `ReadSchema` / `PushedFilters`) and two
+  * reads carry distinct attribute ids (self-joins through Dataset
+  * column references stay unambiguous). What is NOT repeated is
+  * schema inference: a bare `spark.read.parquet` runs a one-task
+  * footer job per call, which is most of a small search request's
+  * pre-planning time. [[table]] infers once and hands the schema to
+  * every later `spark.read.schema(s).parquet(p)`. The memo is keyed
+  * on the table's identity — its path plus the driver-side file
+  * listing (relative names, sizes, mtimes), so a rewrite at the same
+  * path infers afresh — and on the session's parquet read settings
+  * (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
+  * `spark.sql.caseSensitive`), which change the inferred types. It
+  * is JVM-wide, not per session: each new session (every benchmark
+  * set-up, every `newSession()`) would otherwise pay the footer job
+  * again for a schema it reads identically. On a real cluster these
+  * paths would be catalog tables whose schema lives in the metastore;
+  * the loader seam keeps that swap local.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -20,34 +36,77 @@ object Tables {
     // back. Every query reads its tables before pinning frames, so
     // the note is always fresh by the time loopPin consults it.
     spark.conf.set("spark.graft.fixture.dir", dir)
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    tableId(path) match {
+      case None => spark.read.parquet(path) // missing or non-local: Spark reports it
+      case Some(id) =>
+        val schema = memoized(schemaMemo, SchemaKey(id, readSettings(spark)))(_.table)(
+          spark.read.parquet(path).schema)
+        spark.read.schema(schema).parquet(path)
+    }
   }
+
+  /** A table's identity on disk: its path and every file under it by
+    * relative name, size and mtime. Spark names each written part file
+    * uniquely, so a rewrite at the same path yields a new identity. */
+  final case class TableId(path: String, files: Seq[(String, Long, Long)])
+
+  /** The identity of the table at `path` — a driver-side listing, no
+    * Spark job. None when the path is not a local file or directory. */
+  def tableId(path: String): Option[TableId] = {
+    val root = new java.io.File(path)
+    def walk(f: java.io.File, rel: String): Seq[(String, Long, Long)] =
+      if (f.isDirectory)
+        Option(f.listFiles()).fold(Seq.empty[(String, Long, Long)])(
+          _.sortBy(_.getName).toSeq.flatMap(c => walk(c, s"$rel/${c.getName}")))
+      else Seq((rel, f.length(), f.lastModified()))
+    if (root.exists()) Some(TableId(path, walk(root, ""))) else None
+  }
+
+  /** Session settings that change what parquet schema inference returns. */
+  private def readSettings(s: SparkSession): Seq[(String, String)] =
+    s.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }.sorted
+
+  private final case class SchemaKey(table: TableId, read: Seq[(String, String)])
+
+  private val schemaMemo = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** Memo lookup that, on a miss, first drops the entries of an older
+    * identity of the same table path, so rewrites do not accumulate. */
+  private def memoized[K, V](m: ConcurrentHashMap[K, V], key: K)(
+      table: K => TableId)(compute: => V): V =
+    Option(m.get(key)).getOrElse {
+      val id = table(key)
+      m.keySet.removeIf { k => val t = table(k); t.path == id.path && t != id }
+      m.computeIfAbsent(key, _ => compute)
+    }
 
   /** Total on-disk bytes of a table's parquet footprint — a FREE
     * driver-side size signal for plan gating (a directory listing,
     * no Spark job; on a real cluster this is the catalog's
     * sizeInBytes statistic). 0 for a missing table so gates degrade
     * to their small-input plan instead of throwing. */
-  def tableBytes(d: String, name: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).fold(0L)(_.map(walk).sum)
-      else f.length()
-    val f = new java.io.File(s"$d/$name.parquet")
-    if (f.exists()) walk(f) else 0L
-  }
+  def tableBytes(d: String, name: String): Long = diskBytes(s"$d/$name.parquet")
 
-  /** Per-(JVM, fixture-dir) documents row-count memo (round-15
-    * verdict #5): every size-gated text/dedup route reads this to
-    * dispatch, and the count is a parquet-footer-only job — but two
-    * footer scans per query invocation is pure overhead at
-    * 10⁶-file scale. The fixtures are immutable per run, so a stale
-    * entry cannot occur; a long-lived service would key this on the
-    * table's commit version instead. */
-  private val docCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def diskBytes(path: String): Long = tableId(path).fold(0L)(_.files.map(_._2).sum)
+
+  /** JVM-wide documents row-count memo (round-15 verdict #5): every
+    * size-gated text/dedup route reads this to dispatch, and the count
+    * is a parquet-footer-only job — but two footer scans per query
+    * invocation is pure overhead at 10⁶-file scale. Keyed on the
+    * table's [[TableId]], so a rewrite of `documents` at the same path
+    * is counted afresh. */
+  private val docCountMemo = new ConcurrentHashMap[TableId, java.lang.Long]()
 
   def docCount(s: SparkSession, d: String): Long =
-    docCountMemo.computeIfAbsent(d, dir => documents(s, dir).count())
+    tableId(s"$d/documents.parquet") match {
+      case None => documents(s, d).count()
+      case Some(id) =>
+        memoized(docCountMemo, id)(identity)(documents(s, d).count())
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -110,12 +169,7 @@ object Tables {
     * route; on a real cluster this is the catalog's table-level
     * sizeInBytes statistic. */
   def fixtureBytes(d: String): Long =
-    dirBytesMemo.computeIfAbsent(d, { dir =>
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles()).fold(0L)(_.map(walk).sum)
-        else f.length()
-      walk(new java.io.File(dir))
-    })
+    dirBytesMemo.computeIfAbsent(d, diskBytes(_))
 
   /** Loop-frame storage route (round 18): how a data-sized frame
     * that a query re-scans many times (graph-loop edge frames, the

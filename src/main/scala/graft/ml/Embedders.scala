@@ -38,20 +38,30 @@ trait Captioner extends Serializable {
 }
 
 object Embedders {
-  private def md5hex(b: Array[Byte]): String = {
-    // MessageDigest is NOT thread-safe; one instance per call is the
-    // simple executor-safe choice (cheap relative to the digest).
-    val d = MessageDigest.getInstance("MD5").digest(b)
-    val sb = new StringBuilder(32)
-    d.foreach(x => sb.append(f"${x & 0xff}%02x"))
-    sb.toString
-  }
+  // MessageDigest is NOT thread-safe; one instance per call (or per
+  // row, cloned per salt) is the simple executor-safe choice.
+  private def md5(): MessageDigest = MessageDigest.getInstance("MD5")
+
+  /** The digest's top 28 bits, which are its first 7 hex chars. */
+  private def top28(d: Array[Byte]): Long =
+    ((d(0) & 0xffL) << 20) | ((d(1) & 0xffL) << 12) | ((d(2) & 0xffL) << 4) |
+      ((d(3) & 0xffL) >>> 4)
 
   /** 28-bit hash = first 7 md5 hex chars — bit-for-bit the TextKit
     * SQL twin `conv(substr(md5(x),1,7),16,10)`. */
-  def h28(bytes: Array[Byte]): Long =
-    java.lang.Long.parseLong(md5hex(bytes).substring(0, 7), 16)
+  def h28(bytes: Array[Byte]): Long = top28(md5().digest(bytes))
   def h28(s: String): Long = h28(s.getBytes(UTF_8))
+
+  /** `h28(prefix ++ i.toString)` for i in [0, n): the shared prefix is
+    * hashed once and its digest state cloned for each index. */
+  private[ml] def h28Salted(prefix: Array[Byte], n: Int): Array[Long] = {
+    val head = md5()
+    head.update(prefix)
+    Array.tabulate(n) { i =>
+      val d = head.clone().asInstanceOf[MessageDigest]
+      top28(d.digest(i.toString.getBytes(UTF_8)))
+    }
+  }
 
   /** Conf-switched embedder selection — the production seam the
     * embedding queries compose (reference boundary: the Ollama HTTP
@@ -90,15 +100,9 @@ object Embedders {
   * hash-seeded uniform in [-0.5, 0.5), quantized to float32 exactly
   * as a real model head would emit. */
 final class HashTextEmbedder(val dim: Int = 64) extends TextEmbedder {
-  def embed(text: String): Array[Float] = {
-    val out = new Array[Float](dim)
-    var i = 0
-    while (i < dim) {
-      out(i) = (Embedders.h28(text + "#" + i).toDouble / 268435456.0 - 0.5).toFloat
-      i += 1
-    }
-    out
-  }
+  def embed(text: String): Array[Float] =
+    Embedders.h28Salted((text + "#").getBytes(UTF_8), dim)
+      .map(h => (h.toDouble / 268435456.0 - 0.5).toFloat)
 }
 
 /** Deterministic image-embedding surrogate over raw bytes. The decode
@@ -109,16 +113,9 @@ final class HashTextEmbedder(val dim: Int = 64) extends TextEmbedder {
   * deliberately incomparable, like the reference's separate CLIP
   * towers). */
 final class HashImageEmbedder(val dim: Int = 64) extends ImageEmbedder {
-  def embed(content: Array[Byte]): Array[Float] = {
-    val out = new Array[Float](dim)
-    var i = 0
-    while (i < dim) {
-      val salted = content ++ ("#img#" + i).getBytes(UTF_8)
-      out(i) = (Embedders.h28(salted).toDouble / 268435456.0 - 0.5).toFloat
-      i += 1
-    }
-    out
-  }
+  def embed(content: Array[Byte]): Array[Float] =
+    Embedders.h28Salted(content ++ "#img#".getBytes(UTF_8), dim)
+      .map(h => (h.toDouble / 268435456.0 - 0.5).toFloat)
 }
 
 /** Deterministic captioner surrogate (Ollama stand-in,

@@ -15,13 +15,18 @@ import scala.math.BigDecimal.RoundingMode
   * for the single-JVM harness.
   */
 object IvfIndex {
-  final case class Entry(probes: Int, centroids: Seq[(Long, Array[Double])])
+  /** `source` is the identity of the table the index was built from,
+    * so a builder can tell a current index from one left by another
+    * input under the same index-table name. */
+  final case class Entry(probes: Int, centroids: Seq[(Long, Array[Double])],
+      source: Option[graft.Tables.TableId])
 
   private val reg = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
   def register(table: String, probes: Int,
-      centroids: Seq[(Long, Array[Double])]): Unit =
-    reg.put(table.toLowerCase, Entry(probes, centroids))
+      centroids: Seq[(Long, Array[Double])],
+      source: Option[graft.Tables.TableId]): Unit =
+    reg.put(table.toLowerCase, Entry(probes, centroids, source))
 
   def lookup(table: String): Option[Entry] = Option(reg.get(table.toLowerCase))
 

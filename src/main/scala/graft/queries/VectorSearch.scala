@@ -41,14 +41,17 @@ object VectorSearch {
     * every query that probes it (the reference's collection-creation
     * step, photo_vector_search.py:17-20) — it must never run inside
     * the timed query path. Memoization = the session catalog itself:
-    * if the table exists and is registered, the build is skipped;
-    * a fresh session (new warehouse) rebuilds on first use. */
+    * if the table exists and is registered from the embeddings table
+    * as it is now ([[Tables.TableId]]), the build is skipped; a fresh
+    * session (new warehouse), a rewritten source, or another directory
+    * with the same basename (the table name) rebuilds. */
   private def ensureIvfIndex(s: SparkSession, d: String): String = {
     val tbl = "graft_ivf_" +
       new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
+    val source = Tables.tableId(s"$d/embeddings.parquet")
     this.synchronized {
       if (s.catalog.tableExists(tbl) &&
-          graft.plans.IvfIndex.lookup(tbl).isDefined) return tbl
+          graft.plans.IvfIndex.lookup(tbl).exists(_.source == source)) return tbl
       val e = Tables.embeddings(s, d)
       val cents = e.filter(col("vec_id") < IvfCells)
         .select(col("vec_id").as("cid"), col("embedding").as("cv"))
@@ -82,7 +85,8 @@ object VectorSearch {
         .write.mode("overwrite").partitionBy("ivf_cell").saveAsTable(tbl)
       graft.plans.IvfIndex.register(tbl, probes = IvfProbes,
         centroids = cents.collect().map(r =>
-          (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)).toSeq)
+          (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)).toSeq,
+        source = source)
       tbl
     }
   }

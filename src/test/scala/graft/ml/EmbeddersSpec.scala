@@ -21,6 +21,26 @@ class EmbeddersSpec extends SparkTestBase {
     assert(i.embed("hello world".getBytes("UTF-8")).toSeq !== a.toSeq)
   }
 
+  test("h28 is the digest's first 7 hex chars, high-bit bytes included") {
+    def hexForm(b: Array[Byte]): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5").digest(b)
+        .map("%02x".format(_)).mkString.take(7), 16)
+    val r = new scala.util.Random(42)
+    val inputs = Seq(Array.empty[Byte], Array[Byte](-1, -128, 127, 0)) ++
+      Seq.fill(500)(Array.fill(r.nextInt(64))(r.nextInt(256).toByte))
+    inputs.foreach(b => assert(Embedders.h28(b) === hexForm(b), b.toSeq))
+    // Digests whose leading bytes have the high bit set are covered.
+    assert(inputs.exists(b => hexForm(b) >= (1L << 27)))
+    // The embedders' cloned-prefix hashing equals one hash per salt.
+    val text = "naïve café #7 ✓"
+    assert(new HashTextEmbedder(64).embed(text).toSeq === (0 until 64).map(i =>
+      (Embedders.h28(text + "#" + i).toDouble / 268435456.0 - 0.5).toFloat))
+    val bytes = Array[Byte](-1, 0, 65, -128)
+    assert(new HashImageEmbedder(64).embed(bytes).toSeq === (0 until 64).map(i =>
+      (Embedders.h28(bytes ++ ("#img#" + i).getBytes("UTF-8")).toDouble /
+        268435456.0 - 0.5).toFloat))
+  }
+
   test("captioner grounds on metadata and tokenization") {
     val c = new TemplateCaptioner
     assert(c.describe(3, "en", "src1", "Key Agg row") ===

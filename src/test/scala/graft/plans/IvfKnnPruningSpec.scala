@@ -99,4 +99,29 @@ class IvfKnnPruningSpec extends SparkTestBase {
     assert(!touched)
     assert(plain.collect().length === 5)
   }
+
+  test("a second input directory with the same basename gets its own index") {
+    val s = spark
+    import s.implicits._
+    // Two directories, one basename, so one index-table name.
+    def stage(seed: Int): String = {
+      val r = new scala.util.Random(seed)
+      val d = java.nio.file.Files.createTempDirectory("graft_ivf_reuse_")
+        .resolve("ivf_reused").toString
+      (0 until 48).map(i => (i.toLong, Seq.fill(64)(r.nextGaussian().toFloat), i % 3))
+        .toDF("vec_id", "embedding", "label").write.parquet(s"$d/embeddings.parquet")
+      d
+    }
+    val (a, b) = (stage(1), stage(2))
+    SparkEntry.queries("q_knn_ivf_rule")(spark, a).collect()
+    val got = SparkEntry.queries("q_knn_ivf_rule")(spark, b).collect().map(_.toSeq).toSeq
+    assert(got === SparkEntry.queries("q_knn_ivf")(spark, b).collect().map(_.toSeq).toSeq)
+    val indexed = spark.table("graft_ivf_ivf_reused").select("vec_id", "embedding")
+      .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
+    val source = graft.Tables.embeddings(spark, b).select("vec_id", "embedding")
+      .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
+    assert(indexed === source)
+    assert(IvfIndex.lookup("graft_ivf_ivf_reused").get.source ===
+      graft.Tables.tableId(s"$b/embeddings.parquet"))
+  }
 }
