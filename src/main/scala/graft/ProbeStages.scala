@@ -41,52 +41,6 @@ object ProbeStages {
         time("dedup_pairs scored-candidates") {
           noop(queries.DedupStages.bandedScoredPairs(docs, 64))
         }
-      case "knn_split" =>
-        // q_mutual_knn / ann-family decomposition (round 19, verdict
-        // #4): IVF probe-assignment stage vs the cell self-join +
-        // kernel + top-3 fold. Mirrors knnCandidates' ann arm.
-        val e = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"),
-            col("embedding").cast("array<double>").as("v"))
-          .localCheckpoint(eager = false)
-        val cells = queries.SimilarityStages
-          .annCells(e, "spark.graft.knn.ann.cells")
-        val probes = queries.SimilarityStages
-          .annProbes(e, "spark.graft.knn.ann.probes", cells, pinned = 8)
-        println(s"[probe] knn_split cells=$cells probes=$probes")
-        val asg = time("knn_split probe assignments materialize") {
-          queries.SimilarityStages.probeAssignmentsProbe(
-            e.select(col("vec_id"), col("v").as("embedding")),
-            cells, probes, "cosine")
-            .withColumn("nsq",
-              graft.functions.GraftFunctions.norm_sq(col("v")))
-            .localCheckpoint()
-        }
-        time("knn_split cell join + kernel + top3 fold") {
-          val p = asg.select(col("cid"), col("vec_id").as("a"),
-              col("v").as("av"), col("cids").as("acids"),
-              col("nsq").as("ansq"))
-            .join(asg.select(col("cid"), col("vec_id").as("b"),
-              col("v").as("bv"), col("cids").as("bcids"),
-              col("nsq").as("bnsq"))
-              .hint("SHUFFLE_HASH"), "cid")
-            .filter(col("a") =!= col("b"))
-            .filter(expr("min_common_long(acids, bcids) = cid"))
-            .select(col("a").as("aid"), col("b").as("bid"),
-              queries.SimilarityStages.knnDistPre(
-                "cosine", col("av"), col("bv"),
-                col("ansq"), col("bnsq")).as("dist"))
-            .filter(!isnan(col("dist")))
-          val topkAgg = org.apache.spark.sql.functions.udaf(
-            new graft.functions.TopKNeighborsAggregator(3),
-            org.apache.spark.sql.Encoders.tuple(
-              org.apache.spark.sql.Encoders.scalaLong,
-              org.apache.spark.sql.Encoders.scalaLong,
-              org.apache.spark.sql.Encoders.scalaDouble))
-          noop(p.groupBy("aid")
-            .agg(topkAgg(col("bid"), lit(0L), negate(col("dist")))
-              .as("tk")))
-        }
       case "knn_count" =>
         // Candidate-pair volume of the ann knn arm at the current
         // confs (count prunes the kernel column — volume only).
@@ -101,30 +55,6 @@ object ProbeStages {
             .select("a").count()
           println(s"[probe] knn_count pairs: $n")
         }
-      case "knn_skew" =>
-        // Per-cell assignment-row and pair-volume distribution of the
-        // ann knn arm — is the cell join straggler-bound? (AQE's skew
-        // splitter only handles SortMergeJoin, not SHUFFLE_HASH.)
-        val e = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"),
-            col("embedding").cast("array<double>").as("v"))
-          .localCheckpoint(eager = false)
-        val cells = queries.SimilarityStages
-          .annCells(e, "spark.graft.knn.ann.cells")
-        val probes = queries.SimilarityStages
-          .annProbes(e, "spark.graft.knn.ann.probes", cells, pinned = 8)
-        val asg = queries.SimilarityStages.probeAssignmentsProbe(
-          e.select(col("vec_id"), col("v").as("embedding")),
-          cells, probes, "cosine")
-        val sizes = asg.groupBy("cid").agg(count(lit(1)).as("rows"))
-          .orderBy(col("rows").desc)
-        val top = sizes.limit(12).collect()
-        val tot = sizes.agg(sum(col("rows") * col("rows"))).head.getLong(0)
-        println(s"[probe] knn_skew cells=$cells probes=$probes " +
-          s"sum(rows^2)=$tot")
-        top.foreach(r => println(
-          s"[probe] knn_skew cell ${r.getLong(0)}: rows=${r.getLong(1)} " +
-            s"pairs~=${r.getLong(1) * r.getLong(1)}"))
       case "dup_pairs_tau" =>
         // The banded scored candidate stream with the >=tau screen,
         // NO distinct — isolates the distinct's cost in

@@ -63,6 +63,28 @@ object Tables {
     if (root.exists()) Some(TableId(path, walk(root, ""))) else None
   }
 
+  /** The source identities each derived catalog table was last built
+    * from in this JVM, by lower-cased table name. */
+  private val derivedFrom = new ConcurrentHashMap[String, Option[TableId]]()
+
+  /** Build-once rule for a catalog table derived from a fixture table
+    * (the IVF index, the bucketed join layouts): `build` (which writes
+    * `table`) runs unless `table` exists in the session catalog and its
+    * last build read `source` as it is now. A fresh session (new
+    * warehouse), a rewritten source, or another directory with the same
+    * basename (the usual table-name tag) therefore rebuilds. Builds
+    * are serialized JVM-wide. */
+  def ensureDerived(s: SparkSession, table: String, source: String)(
+      build: => Unit): Unit = synchronized {
+    val id = tableId(source)
+    val key = table.toLowerCase
+    if (!s.catalog.tableExists(table) || derivedFrom.get(key) != id) {
+      derivedFrom.remove(key)
+      build
+      derivedFrom.put(key, id)
+    }
+  }
+
   /** Session settings that change what parquet schema inference returns. */
   private def readSettings(s: SparkSession): Seq[(String, String)] =
     s.conf.getAll.toSeq.filter { case (k, _) =>

@@ -15,9 +15,7 @@ import scala.math.BigDecimal.RoundingMode
   * for the single-JVM harness.
   */
 object IvfIndex {
-  /** `source` is the identity of the table the index was built from,
-    * so a builder can tell a current index from one left by another
-    * input under the same index-table name. */
+  /** `source` is the identity of the table the index was built from. */
   final case class Entry(probes: Int, centroids: Seq[(Long, Array[Double])],
       source: Option[graft.Tables.TableId])
 

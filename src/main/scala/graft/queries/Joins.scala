@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.GraftFunctions.{cosine_distance, cosine_distance_pre_norm, norm_sq}
+import graft.functions.GraftFunctions.{cosine_distance, cosine_distance_pre_norm, norm_sq, sq_l2_distance}
 
 /** Join surface (SURVEY §2B). Strategy choices are explicit where the
   * 100 TB plan differs from what a tiny scale factor would pick:
@@ -388,9 +388,9 @@ object Joins {
     // sim 0.40001), so no sublinear candidate scheme can be exact —
     // hyperplane-LSH recall at a 66° threshold needs band counts that
     // admit every pair. The declared operator is therefore the exact
-    // quadratic join; `spark.graft.simjoin.mode=ann` switches the
+    // quadratic join; `spark.graft.knn.mode=ann` switches the
     // pair stage to IVF multi-probe candidates + exact verify (the
-    // 100 TB route, sub-quadratic with cells ∝ n; set-equal to the
+    // 100 TB route, sub-quadratic with cells ≈ √n; set-equal to the
     // exact form at the test sfs — ScalePathSpec), and q_knn_ivf /
     // q_dedup_minhash remain the dedicated search/dedup regimes.
     Q("q_similarity_join",
@@ -557,33 +557,53 @@ object Joins {
   )
 }
 
-/** The exact all-pairs cosine stage shared by q_similarity_join and
-  * q_dedup_embed — BLOCK-CHUNKED so the quadratic pair volume is
-  * processed in bounded slices at any scale.
+/** The vector pair stages. Every operator that compares embeddings
+  * pairwise goes through one core with two routes: q_similarity_join,
+  * q_dedup_embed and q_lsh_embed's truth arm ([[allPairsSim]]), the
+  * kNN family q_mutual_knn / q_lof / q_dbscan ([[knnCandidates]]) and
+  * q_knn_classifier ([[knnCandidatesBipartite]]). Each entry returns
+  * (id, id, score) rows with the kernel fused into the candidate
+  * stage, never vector pairs: the only pair-sized exchange then
+  * carries ~24-byte rows (the round-12 100× smoke shipped ~200 GB of
+  * re-attached vector pairs through an exchange).
   *
-  * Why exact at all: at τ=0.4 this corpus has a similarity CONTINUUM
-  * at the threshold (~15k pairs in [0.3,0.6] at sf0.1, min qualifying
-  * sim 0.40001), so no sublinear candidate scheme can be exact —
-  * hyperplane-LSH recall at a 66° threshold needs band counts that
-  * admit every pair. The declared operator is therefore the exact
-  * quadratic join; the sub-quadratic paths the engine offers are
-  * q_knn_ivf (centroid-pruned search) and q_dedup_minhash's banding
-  * for the high-similarity dedup regime where pruning is sound.
+  * `spark.graft.knn.mode` picks the route; its default `auto`
+  * ([[resolveMode]]) goes by the input's size estimate, so the oracled
+  * test sfs run the declared exact plan and large inputs route to ann
+  * with no conf change.
   *
-  * Why chunked: one all-pairs join materializes the FULL build side
-  * per task (broadcast or buffered cartesian block) and its peak pair
-  * volume grows n² with no knob. Hash-bucketing the build side into B
-  * blocks (pmod on vec_id) and unioning the per-block joins keeps
-  * every individual join's build side at n/B rows — peak memory and
-  * per-stage pair volume are bounded by CHOOSING B ∝ n, while the
-  * union of disjoint blocks keeps the result exactly the all-pairs
-  * set (partition-of-unity over id2; ScalePathSpec pins both
-  * properties). `spark.graft.simjoin.blocks` tunes B: an explicit
-  * integer pins the count (1 = the single-join plan); the default
-  * `auto` sizes B from the plan's size ESTIMATE so a small input
-  * pays zero chunking overhead while a large one still gets
-  * bounded build sides (B ∝ bytes — the same posture, chosen by
-  * the data instead of a constant; round-9 VERDICT #6).
+  *  - `exact` (the declared, oracled semantics): a BLOCK-CHUNKED theta
+  *    join. The build side is split into B blocks (pmod on its id) and
+  *    the per-block joins are unioned, so each join's build side holds
+  *    n/B rows while the union of disjoint blocks is exactly the
+  *    all-pairs set (ScalePathSpec and PairStageSpec pin both).
+  *    B is [[blockCount]], sized from the plan's estimate. No broadcast
+  *    hint: a whole-table block on every executor hits the 8 GB
+  *    broadcast ceiling long before 100 TB; at small sizes Catalyst
+  *    broadcasts by its own estimate, and past it the plan degrades to
+  *    a spillable cartesian instead of an executor OOM. The kernel is
+  *    the fused `cosine_distance` / `sq_l2_distance`.
+  *  - `ann` (the 100 TB route): IVF multi-probe candidates. Each vector
+  *    is assigned to its P nearest of C codebook cells
+  *    ([[probeAssignments]], carrying the vector), and the candidates
+  *    are a cell-keyed self-join: the exchange ships n·P vector rows,
+  *    and pairs exist only inside the join stage, where the kernel
+  *    reduces them to score rows. A pair sharing several probe cells
+  *    is kept only in its smallest shared cell
+  *    (`min_common_long(a_cids, b_cids) = cid`), a scan-local filter over
+  *    two ≤P-element arrays; the distinct() it replaced hashed the raw
+  *    duplicated pair stream and spilled 154-157 GB per query at the
+  *    100× fixture. The cell join is SHUFFLE_HASH: a sort-merge join
+  *    buffers each cell's whole vector-carrying match group per probe
+  *    row. The kernel is `cosine_distance_pre_norm` with the
+  *    pair-invariant `norm_sq` hoisted onto the n·P assignment rows
+  *    (bit-identical to the fused kernel, CosinePreNormSpec), or
+  *    `sq_l2_distance`, which has no pair-invariant part. C is
+  *    [[annCells]] (≈ √n) and P is [[annProbes]]: candidate volume is
+  *    ~n²·P²/C and assignment volume n·C, so C ≈ √n with few probes is
+  *    the joint optimum (BENCH.md round 10). Precision is exact;
+  *    recall is governed by P/C and is total at the test sfs, so
+  *    ScalePathSpec pins ann ≡ exact for every operator.
   */
 object SimilarityStages {
 
@@ -646,19 +666,16 @@ object SimilarityStages {
     }
   }
 
-  /** Pair-stage mode resolution shared by [[allPairsSim]] and
-    * [[knnCandidates]]. Explicit `exact`/`ann` pins; the default
-    * `auto` picks by the input's size estimate against
-    * `spark.graft.ann.autoThresholdBytes` (default 4 MiB — the
-    * measured crossover: at sf0.1 (~0.8 MB embeddings) the chunked
-    * exact stage wins, at 10× (~8 MB) IVF multi-probe with C ≈ √n and
-    * few probes beats it 1.3–2× and the gap widens with n — BENCH.md
-    * round 10). Below the threshold — which includes every oracled
-    * test sf — the plan IS the declared exact semantics; at or above
-    * it the ann route takes over, whose recall is total at the
-    * settings the specs pin and the standard IVF trade beyond.
-    * An unknown estimate resolves to exact (declared semantics). */
-  def resolveMode(e: DataFrame, key: String): String =
+  /** The pair-stage route. `spark.graft.knn.mode` = `exact` | `ann`
+    * pins it; the default `auto` picks by the input's size estimate
+    * against `spark.graft.ann.autoThresholdBytes` (default 4 MiB — the
+    * measured crossover: at sf0.1 (~0.8 MB embeddings) the exact route
+    * wins, at 10× (~8 MB) IVF multi-probe with C ≈ √n and few probes
+    * beats it 1.3–2× and the gap widens with n — BENCH.md round 10).
+    * Every oracled test sf sits below the threshold. An unknown
+    * estimate resolves to exact (declared semantics). */
+  def resolveMode(e: DataFrame): String = {
+    val key = "spark.graft.knn.mode"
     e.sparkSession.conf.get(key, "auto") match {
       case "auto" =>
         val thr = BigInt(parsePositive(
@@ -673,39 +690,11 @@ object SimilarityStages {
       case other => throw new IllegalArgumentException(
         s"$key must be exact|ann|auto, got '$other'")
     }
+  }
 
-  /** Pair stage dispatcher. `spark.graft.simjoin.mode` (default
-    * `auto` — size-gated via [[resolveMode]], so every oracled test
-    * sf stays on the declared exact plan while estimates past the
-    * measured crossover route to ann WITHOUT a conf change):
-    *  - `exact` (the declared/oracled semantics): the
-    *    block-chunked exact all-pairs join below;
-    *  - `ann`: the 100 TB route — IVF-style multi-probe candidate
-    *    generation (each vector joins only vectors sharing one of its
-    *    `spark.graft.simjoin.ann.probes` nearest codebook cells, cell
-    *    count `spark.graft.simjoin.ann.cells`) followed by the SAME
-    *    exact cosine verify. Precision is always exact; recall is
-    *    governed by probes/cells. Candidate volume is ~n²·P²/C and
-    *    assignment volume is n·C, so the joint optimum is C ≈ √n
-    *    with FEW probes (measured at 10× sf0.1: C=√n, P=2 beats the
-    *    exact arm 1.3–2×, while C ∝ n makes the assignment stage the
-    *    new quadratic term and the P=8-of-16 default degenerates to
-    *    all-pairs — see BENCH.md round 10). `cells=auto` derives
-    *    C ≈ √n from the plan's size estimate ([[annCells]]); at the
-    *    test sfs the default P=6 of 16 cells has TOTAL recall, so
-    *    ScalePathSpec pins ann ≡ exact by set equality (the
-    *    q_mixture_apply_threshold precedent: declared form stays the
-    *    oracle, scale form proven equivalent where recall allows).
-    */
-  def allPairsSim(e: DataFrame, tau: Double): DataFrame =
-    resolveMode(e, "spark.graft.simjoin.mode") match {
-      case "exact" => exactSim(e, tau)
-      case "ann" => annSim(e, tau)
-    }
-
-  /** IVF cell count for the ann candidate stages. An explicit
-    * integer pins it; the default `auto` derives C ≈ √n from
-    * Catalyst's plan statistics — the joint optimum of the n·C
+  /** IVF cell count for the ann route, `spark.graft.knn.ann.cells`.
+    * An explicit integer pins it; the default `auto` derives C ≈ √n
+    * from Catalyst's plan statistics — the joint optimum of the n·C
     * assignment stage and the n²·P²/C bucket stage (both
     * sub-quadratic at √n; BENCH.md round 10 has the measurements —
     * C=16 fixed degenerates to all-pairs at 10×, C ∝ n makes the
@@ -718,9 +707,9 @@ object SimilarityStages {
     * (beyond that the codebook broadcast itself needs the
     * hierarchical treatment). An UNKNOWN size estimate
     * ([[planBytes]]) resolves to the 16 floor. */
-  def annCells(e: DataFrame, key: String): Int = {
-    val conf = e.sparkSession.conf
-    conf.get(key, "auto") match {
+  def annCells(e: DataFrame): Int = {
+    val key = "spark.graft.knn.ann.cells"
+    e.sparkSession.conf.get(key, "auto") match {
       case "auto" =>
         val rows = e.queryExecution.optimizedPlan.stats.rowCount
           .map(_.toLong)
@@ -733,86 +722,196 @@ object SimilarityStages {
     }
   }
 
-  /** Probe count for the ann candidate stages. An explicit integer
-    * pins it; the default `auto` scales DOWN from the family's
-    * pinned coverage at the 16-cell floor (`pinned` of 16 — total
-    * recall at the test sfs, spec-pinned set-equality) as the cell
-    * count grows: P = max(2, ceil(16·pinned / C)), i.e. constant
+  /** Probe count for the ann route, `spark.graft.knn.ann.probes`. An
+    * explicit integer pins it; the default `auto` scales DOWN from the
+    * entry's pinned coverage at the 16-cell floor (`pinned` of 16 —
+    * total recall at the test sfs, spec-pinned set-equality) as the
+    * cell count grows: P = max(2, ceil(16·pinned / C)), i.e. constant
     * P/C coverage until it bottoms out at the measured large-n
     * optimum of 2 probes (BENCH.md round 10: C≈√n with P=2 beats
-    * the exact arm 1.3–2× at 10×, while P=8-of-16 re-degenerates to
+    * the exact route 1.3–2× at 10×, while P=8-of-16 re-degenerates to
     * all-pairs). At C = the 16 floor this is exactly the pinned
     * constant, so small-sf behavior is unchanged. */
-  def annProbes(e: DataFrame, key: String, cells: Int, pinned: Int): Int =
+  def annProbes(e: DataFrame, cells: Int, pinned: Int): Int = {
+    val key = "spark.graft.knn.ann.probes"
     e.sparkSession.conf.get(key, "auto") match {
       case "auto" => math.max(2, math.ceil(16.0 * pinned / cells).toInt)
       case explicit => parsePositive(explicit, key, floor = 1)
     }
+  }
 
-  /** Multi-probe IVF candidates: pairs sharing ≥1 of each side's
-    * `probes` nearest cells (deterministic codebook = vec_id < cells,
-    * as q_knn_ivf). One broadcast of the codebook, one keyed window
-    * for the top-P assignment, one equi-join per shared cell —
-    * never an all-pairs comparison. `metric` picks the cell-distance
-    * kernel: cosine (the simjoin/mutual-kNN space) or l2 (the
-    * LOF/DBSCAN space — probing cells by the WRONG metric would
-    * silently cost recall on unnormalized embeddings). */
-  /** Top-`probes` IVF cell assignments, CARRYING the vector:
-    * (vec_id, v, cid) — one broadcast of the ≤`cells`-row codebook,
-    * one keyed window. Shared by [[annCandidates]] (which drops `v`)
-    * and the [[knnCandidates]] ann arm (which joins ON `v`'s cell so
-    * vectors never ride a pair-level exchange — see there). */
-  /** Test/probe seam for [[probeAssignments]] (ProbeStages knn_split
-    * times the assignment stage in isolation). */
-  private[graft] def probeAssignmentsProbe(e: DataFrame, cells: Int,
-      probes: Int, metric: String): DataFrame =
-    probeAssignments(e, cells, probes, metric)
+  /** All pairs id1 < id2 with cosine similarity round(1 - d, 6) ≥ τ,
+    * as (id1, id2, sim), over the embeddings frame (vec_id,
+    * embedding). The gates size `e` itself; ann probes 6 of 16 cells
+    * at the floor. */
+  def allPairsSim(e: DataFrame, tau: Double): DataFrame =
+    pairStage(e, doubles(e), None, col("id1") < col("id2"),
+      pinned = 6, "cosine", simCols)(d => round(lit(1.0) - d, 6))
+      .filter(col("sim") >= tau)
 
-  private def probeAssignments(e: DataFrame, cells: Int, probes: Int,
+  /** Directed neighbor candidates for the kNN-shaped operators
+    * (q_mutual_knn top-3, q_lof top-5, q_dbscan eps-neighbors).
+    * Input (vec_id, v ARRAY<DOUBLE>); output (a, b, dist) for every
+    * a ≠ b the route admits, dist = round(metric kernel, 6) — callers
+    * apply their top-k window or eps filter on top. Both orientations
+    * come out of the a ≠ b join. Ann probes 8 of 16 cells at the
+    * floor. */
+  def knnCandidates(e: DataFrame, metric: String): DataFrame =
+    pairStage(e, e, None, col("a") =!= col("b"),
+      pinned = 8, metric, knnCols)(round(_, 6))
+
+  /** [[knnCandidates]] for classifier-shaped operators: input (vec_id,
+    * v ARRAY<DOUBLE>, lab BOOLEAN); anchors `a` are the rows where
+    * `lab` is false, neighbors `b` the rows where it is true. The
+    * restriction is pushed INTO the candidate stage (a post-filter
+    * computed the kernel for every same-cell pair and dropped 3/4 of
+    * them), and the result is exactly [[knnCandidates]]' rows
+    * restricted to that orientation (PairStageSpec): the gates read the
+    * bare (vec_id, v) frame — a frame widened by `lab` would size
+    * differently — and the ann route splits the SAME per-vector probe
+    * assignments. */
+  def knnCandidatesBipartite(e: DataFrame, metric: String): DataFrame =
+    pairStage(e.select(col("vec_id"), col("v")), e, Some("lab"),
+      col("a") =!= col("b"), pinned = 8, metric, knnCols)(round(_, 6))
+
+  /** The ann route's candidate pairs (id1, id2), id1 < id2, over the
+    * embeddings frame at an explicit cell and probe count — no
+    * kernel survives into the output. */
+  def annCandidates(e: DataFrame, cells: Int, probes: Int,
+                    metric: String = "cosine"): DataFrame =
+    annRoute(doubles(e), None, col("id1") < col("id2"), cells, probes,
+      metric, simCols, identity).select("id1", "id2")
+
+  /** (vec_id, v) with the embedding cast f32→f64 once per row, below
+    * every join, so the pair kernels read doubles directly. */
+  private def doubles(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+
+  /** The column names one side of a pair stage carries: its id (an
+    * output column), its vector, and on the ann route its probe-cell
+    * set and squared norm. */
+  private final case class Side(id: String, v: String, cids: String, nsq: String)
+
+  /** Both sides' columns plus the output score column. */
+  private final case class PairCols(a: Side, b: Side, score: String)
+
+  private val simCols = PairCols(Side("id1", "v1", "c1", "n1"),
+    Side("id2", "v2", "c2", "n2"), "sim")
+  private val knnCols = PairCols(Side("a", "av", "acids", "ansq"),
+    Side("b", "bv", "bcids", "bnsq"), "dist")
+
+  /** The pair-stage core. `gate` is the frame the size gates read;
+    * `vecs` holds (vec_id, v ARRAY<DOUBLE>) and, when `side` names a
+    * boolean column, pairs its false rows (side a) with its true rows
+    * (side b); `pair` is the predicate on the two id columns;
+    * `pinned` is the probe count at the 16-cell floor; `score` maps
+    * the raw kernel distance to the output score. */
+  private def pairStage(gate: DataFrame, vecs: DataFrame,
+      side: Option[String], pair: Column, pinned: Int, metric: String,
+      cols: PairCols)(score: Column => Column): DataFrame =
+    resolveMode(gate) match {
+      case "exact" =>
+        exactRoute(vecs, side, pair, blockCount(gate), metric, cols, score)
+      case "ann" =>
+        val cells = annCells(gate)
+        annRoute(vecs, side, pair, cells, annProbes(gate, cells, pinned),
+          metric, cols, score)
+    }
+
+  /** (side a rows, side b rows): the split by `side`, or both whole. */
+  private def sides(df: DataFrame, side: Option[String]): (DataFrame, DataFrame) =
+    side.fold((df, df))(s => (df.filter(!col(s)), df.filter(col(s))))
+
+  /** The pair distance in `metric`: the fused kernel, or with
+    * `hoisted` norms the cosine kernel that reads each side's
+    * `norm_sq` column (l2 has no pair-invariant part). */
+  private def kernel(metric: String, cols: PairCols, hoisted: Boolean): Column = {
+    val (a, b) = (cols.a, cols.b)
+    metric match {
+      case "cosine" if hoisted =>
+        cosine_distance_pre_norm(col(a.v), col(b.v), col(a.nsq), col(b.nsq))
+      case "cosine" => cosine_distance(col(a.v), col(b.v))
+      case "l2" => sq_l2_distance(col(a.v), col(b.v))
+      case other => throw new IllegalArgumentException(
+        s"pair metric must be cosine|l2, got '$other'")
+    }
+  }
+
+  private def exactRoute(vecs: DataFrame, side: Option[String], pair: Column,
+      blocks: Int, metric: String, cols: PairCols,
+      score: Column => Column): DataFrame = {
+    val (va, vb) = sides(vecs, side)
+    val a = fanout(va.select(col("vec_id").as(cols.a.id), col("v").as(cols.a.v)))
+    val bAll = vb.select(col("vec_id").as(cols.b.id), col("v").as(cols.b.v))
+    val dist = kernel(metric, cols, hoisted = false)
+    (0 until blocks).map { k =>
+      val b = if (blocks == 1) bAll
+              else bAll.filter(pmod(col(cols.b.id), lit(blocks)) === k)
+      a.join(b, pair)
+        .select(col(cols.a.id), col(cols.b.id), score(dist).as(cols.score))
+    }.reduce(_ unionByName _)
+  }
+
+  private def annRoute(vecs: DataFrame, side: Option[String], pair: Column,
+      cells: Int, probes: Int, metric: String, cols: PairCols,
+      score: Column => Column): DataFrame = {
+    // l2 rows carry a constant norm the kernel never reads: one plan
+    // shape for both metrics.
+    val asg0 = probeAssignments(vecs.select(col("vec_id"), col("v")),
+        cells, probes, metric)
+      .withColumn("nsq",
+        if (metric == "cosine") norm_sq(col("v")) else lit(0.0))
+    // The side flag re-attaches to the full frame's assignments, so
+    // both sides keep the centroids and probe sets of the unsplit stage.
+    val asg = side.fold(asg0)(s =>
+      asg0.join(broadcast(vecs.select(col("vec_id"), col(s))), "vec_id"))
+    val (ra, rb) = sides(asg, side)
+    def cellRows(rows: DataFrame, s: Side): DataFrame =
+      rows.select(col("cid"), col("vec_id").as(s.id), col("v").as(s.v),
+        col("cids").as(s.cids), col("nsq").as(s.nsq))
+    val joined = cellRows(ra, cols.a)
+      .join(cellRows(rb, cols.b).hint("SHUFFLE_HASH"), "cid")
+    // Split sides never pair a vector with itself.
+    (if (side.isEmpty) joined.filter(pair) else joined)
+      .filter(expr(s"min_common_long(${cols.a.cids}, ${cols.b.cids}) = cid"))
+      .select(col(cols.a.id), col(cols.b.id),
+        score(kernel(metric, cols, hoisted = true)).as(cols.score))
+  }
+
+  /** Top-`probes` IVF cell assignments of (vec_id, v ARRAY<DOUBLE>),
+    * CARRYING the vector: (vec_id, v, cid, cids), where `cids` is the
+    * vector's full probe-cell set. The codebook is the first `cells`
+    * vectors (vec_id < cells, as q_knn_ivf): one broadcast of it, one
+    * keyed window for the top-P ranking. `metric` picks the
+    * cell-distance kernel — probing cells by the WRONG metric would
+    * silently cost recall on unnormalized embeddings. */
+  private def probeAssignments(vecs: DataFrame, cells: Int, probes: Int,
       metric: String): DataFrame = {
     // Cosine hoists the pair-invariant squared norms out of the
-    // n×cells kernel (round 19, verdict #4): the codebook side's
-    // norm is computed once per centroid at broadcast time, the
-    // vector side's once per row below the join — the per-pair
-    // kernel is then the dot product alone, bit-identical by the
-    // CosineDistancePreNorm un-fusing argument. l2 has no
-    // pair-invariant part (the diff couples the sides).
-    val cents0 = e.filter(col("vec_id") < cells)
-      .select(col("vec_id").as("cid"),
-        col("embedding").cast("array<double>").as("cv"))
+    // n×cells kernel: the codebook side's once per centroid at
+    // broadcast time, the vector side's once per row below the join.
+    val cents0 = vecs.filter(col("vec_id") < cells)
+      .select(col("vec_id").as("cid"), col("v").as("cv"))
     val cents = if (metric == "cosine")
       cents0.withColumn("cnsq", norm_sq(col("cv"))) else cents0
     val cdist = metric match {
       case "cosine" =>
         cosine_distance_pre_norm(col("v"), col("cv"),
           col("nsq"), col("cnsq"))
-      case "l2" => sqDist(col("v"), col("cv"))
+      case "l2" => sq_l2_distance(col("v"), col("cv"))
       case other => throw new IllegalArgumentException(
         s"ann metric must be cosine|l2, got '$other'")
     }
-    // `cids` carries the vector's FULL probe-cell set alongside each
-    // exploded (vec_id, cid) row (round 17): the candidate joins
-    // dedup a multi-cell pair SCAN-LOCALLY by keeping only its
-    // minimal shared cell (the min_common_long kernel over two
-    // ≤P-element arrays) instead of a global distinct() — whose
-    // map-side partial agg held the RAW duplicated pair stream and
-    // spilled 154-157 GB per query at the 100× fixture (q_lof /
-    // q_mutual_knn, caught by the new spill column). The second
-    // window reuses the rn window's vec_id partitioning — no
-    // additional exchange; intersection order doesn't matter under
-    // array_min.
-    // The vector must NOT ride the ranking window: the crossJoin
-    // emits n×cells rows, and sorting them with the ~512 B embedding
-    // aboard spilled a deterministic ~28 GB into EVERY ann-family
-    // query at the 100× fixture (the recurring spill-column
-    // constant). Distance is computed per (v, cv) row, then the
-    // window ranks 24-byte (vec_id, cid, cdist) rows; the vector
-    // re-attaches afterwards via one node-sized broadcast join.
-    val ev = e.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-    val evIn = if (metric == "cosine")
-      ev.withColumn("nsq", norm_sq(col("v"))) else ev
-    evIn.crossJoin(broadcast(cents))
+    // The second window reuses the rn window's vec_id partitioning —
+    // no additional exchange. The vector must NOT ride the ranking
+    // window: the crossJoin emits n×cells rows, and sorting them with
+    // the ~512 B embedding aboard spilled ~28 GB into every ann query
+    // at the 100× fixture. The window ranks 24-byte (vec_id, cid,
+    // cdist) rows; the vector re-attaches afterwards by an un-hinted
+    // join (node-sized, Catalyst broadcasts it at the test sfs).
+    val vIn = if (metric == "cosine")
+      vecs.withColumn("nsq", norm_sq(col("v"))) else vecs
+    vIn.crossJoin(broadcast(cents))
       .withColumn("cdist", round(cdist, 6))
       .select(col("vec_id"), col("cid"), col("cdist"))
       .withColumn("rn", row_number().over(
@@ -822,279 +921,7 @@ object SimilarityStages {
         Window.partitionBy("vec_id")
           .rowsBetween(Window.unboundedPreceding,
             Window.unboundedFollowing)))
-      // No broadcast hint on the re-attach: ev is the full embedding
-      // table (node-sized, fine as a shuffle join at any scale;
-      // Catalyst broadcasts it by size estimate at the test sfs).
-      .join(ev, "vec_id")
+      .join(vecs, "vec_id")
       .select(col("vec_id"), col("v"), col("cid"), col("cids"))
-  }
-
-  def annCandidates(e: DataFrame, cells: Int, probes: Int,
-                    metric: String = "cosine"): DataFrame = {
-    val asg = probeAssignments(e, cells, probes, metric)
-      .select(col("vec_id"), col("cid"), col("cids"))
-    asg.select(col("vec_id").as("id1"), col("cid"),
-        col("cids").as("c1"))
-      .join(asg.select(col("vec_id").as("id2"), col("cid"),
-        col("cids").as("c2")).hint("SHUFFLE_HASH"), "cid")
-      .filter(col("id1") < col("id2"))
-      // Minimal-shared-cell dedup — see the knnCandidates ann arm.
-      .filter(expr("min_common_long(c1, c2) = cid"))
-      .select("id1", "id2")
-  }
-
-  /** Squared L2 over two DOUBLE array columns — the codegen kernel
-    * (graft.functions.SqL2Distance), which accumulates (x-y)·(x-y)
-    * left-to-right exactly like the HOF fold it replaced, so both
-    * engines still see identical doubles. */
-  def sqDist(x: Column, y: Column): Column =
-    graft.functions.GraftFunctions.sq_l2_distance(x, y)
-
-  /** The kNN family's verified distance: round(kernel, 6) in the
-    * caller's metric — computed INSIDE the candidate stage so the
-    * arrays die in the same stage that joined them. */
-  def knnDist(metric: String, x: Column, y: Column): Column = metric match {
-    case "cosine" => round(cosine_distance(x, y), 6)
-    case "l2" => round(sqDist(x, y), 6)
-    case other => throw new IllegalArgumentException(
-      s"knn metric must be cosine|l2, got '$other'")
-  }
-
-  /** [[knnDist]] with the squared norms hoisted to per-vector columns
-    * (round 19, verdict #4): the cosine kernel's na/nb sums are
-    * pair-INVARIANT, so the quadratic candidate join evaluates only
-    * the dot product per pair (bit-identical by the
-    * CosineDistancePreNorm un-fusing argument — CosinePreNormSpec) —
-    * at the 100× fixture that is 5.3·10⁸ pair kernels cut to a third
-    * of their flops while the hoisted norm_sq runs n·P times. l2 has
-    * no pair-invariant part; its arm ignores the norm columns. */
-  def knnDistPre(metric: String, x: Column, y: Column,
-      xnsq: Column, ynsq: Column): Column = metric match {
-    case "cosine" => round(cosine_distance_pre_norm(x, y, xnsq, ynsq), 6)
-    case "l2" => round(sqDist(x, y), 6)
-    case other => throw new IllegalArgumentException(
-      s"knn metric must be cosine|l2, got '$other'")
-  }
-
-  /** Directed neighbor-candidate stage for the kNN-shaped operators
-    * (q_mutual_knn top-3, q_lof top-5, q_dbscan eps-neighbors).
-    * Input contract: (vec_id, v ARRAY<DOUBLE>); output (a, b, dist)
-    * rows with a ≠ b, dist = round(metric kernel, 6) — callers apply
-    * their top-k window or eps filter on top. Returning the DISTANCE
-    * rather than the vector pair is load-bearing at scale (round-12
-    * 100× smoke: the old (a, b, av, bv) contract re-attached both
-    * 64-dim arrays to every candidate pair, so the exchange between
-    * the two attachment joins shipped pairs × ~1 KB — ~200 GB at
-    * 200 k vectors, which filled the spill disk; with the kernel
-    * fused into the candidate join the only pair-sized exchange
-    * carries 24-byte (a, b, dist) rows).
-    *
-    * `spark.graft.knn.mode` (default `auto` — size-gated via
-    * [[resolveMode]]: the oracled test sfs stay on the declared exact
-    * plan, estimates past the measured crossover route to ann):
-    *  - `exact` (the declared/oracled semantics): every
-    *    directed pair, block-chunked exactly like [[allPairsSim]]'s
-    *    exact arm — NO broadcast hint (a whole-table block on every
-    *    executor hits the 8 GB broadcast ceiling long before 100 TB;
-    *    at tiny sfs Catalyst picks a broadcast by size estimate on
-    *    its own, and past the threshold the plan degrades to a
-    *    spillable cartesian instead of an executor OOM). Build sides
-    *    are bounded by `spark.graft.simjoin.blocks` (B blocks of
-    *    ~n/B rows; ScalePathSpec pins the partition-of-unity).
-    *  - `ann`: the 100 TB route — top-P IVF assignments KEEP their
-    *    vector ((vec_id, v, cid), [[probeAssignments]]) and the
-    *    candidate stage is a cell-keyed SELF-join: the exchange
-    *    ships n·P vector rows (not pairs), pairs materialize only
-    *    inside the join stage where the kernel immediately reduces
-    *    them to (a, b, dist). A pair sharing several probe cells
-    *    must count once (dbscan's k-threshold); that dedup is the
-    *    scan-local minimal-shared-cell filter
-    *    (`min_common_long(acids, bcids) = cid`, see the inline note
-    *    below) — NO pair-sized exchange exists anywhere in the arm
-    *    (the round-16 form's 24-byte-row distinct() was replaced in
-    *    round 17 after the spill column caught its map-side hash of
-    *    the raw duplicated pair stream). Both
-    *    orientations emerge from the a ≠ b self-join. Recall is
-    *    governed by probes/cells; at the test sfs the defaults have
-    *    total recall, so ScalePathSpec pins ann ≡ exact per
-    *    operator (the simjoin precedent).
-    */
-  def knnCandidates(e: DataFrame, metric: String): DataFrame =
-    resolveMode(e, "spark.graft.knn.mode") match {
-      case "exact" =>
-        val blocks = blockCount(e)
-        val a = fanout(e.select(col("vec_id").as("a"), col("v").as("av")))
-        val bAll = e.select(col("vec_id").as("b"), col("v").as("bv"))
-        (0 until blocks).map { k =>
-          val b = if (blocks == 1) bAll
-                  else bAll.filter(pmod(col("b"), lit(blocks)) === k)
-          a.join(b, col("a") =!= col("b"))
-            .select(col("a"), col("b"),
-              knnDist(metric, col("av"), col("bv")).as("dist"))
-        }.reduce(_ unionByName _)
-      case "ann" =>
-        val cells = annCells(e, "spark.graft.knn.ann.cells")
-        val probes = annProbes(
-          e, "spark.graft.knn.ann.probes", cells, pinned = 8)
-        // For cosine, nsq rides the assignment rows (n·P scalar
-        // doubles) so the pair kernel below is dot-only — see
-        // knnDistPre. l2 has no pair-invariant part: its rows carry
-        // a constant the kernel ignores (SHIPPED bytes unchanged in
-        // spirit — 8 B on ~550 B vector rows; keeping one plan shape
-        // beats a second join codepath).
-        val asg = probeAssignments(
-          e.select(col("vec_id"), col("v").as("embedding")),
-          cells, probes, metric)
-          .withColumn("nsq",
-            if (metric == "cosine") norm_sq(col("v")) else lit(0.0))
-        // Minimal-shared-cell dedup (round 17 — the bandedScoredPairs
-        // first_eq_index discipline carried to IVF cells): a pair
-        // sharing k probe cells is kept ONLY in its smallest shared
-        // cell, so the dedup is a scan-local ≤P-element array filter
-        // and the kernel runs once per pair — the old distinct()'s
-        // map-side hash of the RAW duplicated pair stream spilled
-        // 154-157 GB per query at the 100× fixture (q_lof /
-        // q_mutual_knn, caught by the new spill column). Same rows
-        // by construction: every colliding pair survives in exactly
-        // one cell. The cell join is SHUFFLE_HASH: SMJ buffers each
-        // cid's FULL vector-carrying match group per probe row
-        // (ExternalAppendOnlyUnsafeRowArray — the residual ~45 GB
-        // spill), where the hash build is just the partition's
-        // assignment rows.
-        asg.select(col("cid"), col("vec_id").as("a"), col("v").as("av"),
-            col("cids").as("acids"), col("nsq").as("ansq"))
-          .join(asg.select(col("cid"), col("vec_id").as("b"),
-            col("v").as("bv"), col("cids").as("bcids"),
-            col("nsq").as("bnsq"))
-            .hint("SHUFFLE_HASH"), "cid")
-          .filter(col("a") =!= col("b"))
-          .filter(expr("min_common_long(acids, bcids) = cid"))
-          .select(col("a"), col("b"),
-            knnDistPre(metric, col("av"), col("bv"),
-              col("ansq"), col("bnsq")).as("dist"))
-    }
-
-  /** Bipartite variant of [[knnCandidates]] for classifier-shaped
-    * operators (round-17 — verdict #6 on q_knn_classifier's 100×
-    * cell): anchors are the rows where `lab` is FALSE, probe
-    * neighbors the rows where it is TRUE, and the restriction is
-    * pushed INTO the candidate stage — the old post-filter plan
-    * computed the distance kernel for every same-cell pair and then
-    * dropped 3/4 of them (eval×eval, train×train, train×eval).
-    * Input contract: (vec_id, v ARRAY<DOUBLE>, lab BOOLEAN); output
-    * (a, b, dist) with a from the false side, b from the true side —
-    * exactly [[knnCandidates]]' rows restricted to that orientation
-    * (same block chunking, same probe assignments; in the ann arm
-    * the side split filters the SAME per-vector assignments, so the
-    * surviving pairs and distances are bit-identical). Gates read
-    * the full frame's stats, so auto routes exactly as the
-    * all-pairs stage would. */
-  def knnCandidatesBipartite(e: DataFrame, metric: String): DataFrame = {
-    // Gates (mode, blocks, cells, probes) read the SAME bare
-    // (vec_id, v) shape the all-pairs stage sees — the size
-    // estimates feed the auto heuristics, and a frame widened by
-    // the lab column would tessellate differently and break the
-    // pair-set identity with [[knnCandidates]]' restriction.
-    val ev = e.select(col("vec_id"), col("v"))
-    resolveMode(ev, "spark.graft.knn.mode") match {
-      case "exact" =>
-        val blocks = blockCount(ev)
-        val a = fanout(e.filter(!col("lab"))
-          .select(col("vec_id").as("a"), col("v").as("av")))
-        val bAll = e.filter(col("lab"))
-          .select(col("vec_id").as("b"), col("v").as("bv"))
-        (0 until blocks).map { k =>
-          val b = if (blocks == 1) bAll
-                  else bAll.filter(pmod(col("b"), lit(blocks)) === k)
-          a.join(b, col("a") =!= col("b"))
-            .select(col("a"), col("b"),
-              knnDist(metric, col("av"), col("bv")).as("dist"))
-        }.reduce(_ unionByName _)
-      case "ann" =>
-        val cells = annCells(ev, "spark.graft.knn.ann.cells")
-        val probes = annProbes(
-          ev, "spark.graft.knn.ann.probes", cells, pinned = 8)
-        // Assignments run over the FULL frame (identical centroids
-        // and probe sets to the all-pairs stage); the node-sized lab
-        // frame re-attaches by broadcast and splits the sides.
-        val asg = probeAssignments(
-          ev.select(col("vec_id"), col("v").as("embedding")),
-          cells, probes, metric)
-          .withColumn("nsq",
-            if (metric == "cosine") norm_sq(col("v")) else lit(0.0))
-          .join(broadcast(e.select(col("vec_id"), col("lab"))), "vec_id")
-        asg.filter(!col("lab"))
-          .select(col("cid"), col("vec_id").as("a"), col("v").as("av"),
-            col("cids").as("acids"), col("nsq").as("ansq"))
-          .join(asg.filter(col("lab"))
-            .select(col("cid"), col("vec_id").as("b"), col("v").as("bv"),
-              col("cids").as("bcids"), col("nsq").as("bnsq"))
-            .hint("SHUFFLE_HASH"),
-            "cid")
-          // Minimal-shared-cell dedup — see the knnCandidates ann arm.
-          .filter(expr("min_common_long(acids, bcids) = cid"))
-          .select(col("a"), col("b"),
-            knnDistPre(metric, col("av"), col("bv"),
-              col("ansq"), col("bnsq")).as("dist"))
-    }
-  }
-
-  /** The same kernel-fusion shape as the [[knnCandidates]] ann arm
-    * (round-12): cell-keyed self-join over vector-carrying top-P
-    * assignments, sim computed INSIDE the join stage, τ-filter
-    * BEFORE the distinct — so the only pair-sized exchange carries
-    * the ≥τ survivors as 24-byte rows. The previous
-    * candidates-then-attach form shipped (id1, id2, v1) pair rows
-    * (~0.5 KB each) through the exchange between its two vector
-    * joins — ~100 GB at the 100× fixture's candidate volume. Result
-    * set identical: same verified pairs, same 6 dp sim, dedup on
-    * (id1, id2, sim) where sim is deterministic per pair. */
-  private def annSim(e: DataFrame, tau: Double): DataFrame = {
-    val cells = annCells(e, "spark.graft.simjoin.ann.cells")
-    val probes = annProbes(
-      e, "spark.graft.simjoin.ann.probes", cells, pinned = 6)
-    // Pair-invariant squared norms hoisted to the assignment rows —
-    // the pair kernel is dot-only (round 19; see knnDistPre).
-    val asg = probeAssignments(e, cells, probes, metric = "cosine")
-      .withColumn("nsq", norm_sq(col("v")))
-    asg.select(col("cid"), col("vec_id").as("id1"), col("v").as("v1"),
-        col("cids").as("c1"), col("nsq").as("n1"))
-      .join(asg.select(col("cid"), col("vec_id").as("id2"),
-        col("v").as("v2"), col("cids").as("c2"), col("nsq").as("n2"))
-        .hint("SHUFFLE_HASH"),
-        "cid")
-      .filter(col("id1") < col("id2"))
-      // Minimal-shared-cell dedup — see the knnCandidates ann arm.
-      .filter(expr("min_common_long(c1, c2) = cid"))
-      .select(col("id1"), col("id2"),
-        round(lit(1.0) - cosine_distance_pre_norm(
-          col("v1"), col("v2"), col("n1"), col("n2")), 6)
-          .alias("sim"))
-      .filter(col("sim") >= tau)
-  }
-
-  private def exactSim(e: DataFrame, tau: Double): DataFrame = {
-    val blocks = blockCount(e)
-    // Cast f32→f64 BEFORE the join on both sides: projections below
-    // a join are evaluated once per input row (never per pair), so
-    // the per-pair kernel reads doubles directly instead of
-    // re-casting one side 2000× per row. NO broadcast hint on the
-    // build side: forcing a whole-table block onto every executor
-    // hits the 8 GB broadcast ceiling long before 100 TB. At this sf
-    // Catalyst's size estimate picks a broadcast nested-loop join by
-    // itself; past the threshold it degrades to a spillable
-    // cartesian join instead of an executor OOM.
-    val a = fanout(e.select(col("vec_id").alias("id1"),
-      col("embedding").cast("array<double>").alias("v1")))
-    val bAll = e.select(col("vec_id").alias("id2"),
-      col("embedding").cast("array<double>").alias("v2"))
-    (0 until blocks).map { k =>
-      val b = if (blocks == 1) bAll
-              else bAll.filter(pmod(col("id2"), lit(blocks)) === k)
-      a.join(b, col("id1") < col("id2"))
-        .select(col("id1"), col("id2"),
-          round(lit(1.0) - cosine_distance(col("v1"), col("v2")), 6).alias("sim"))
-        .filter(col("sim") >= tau)
-    }.reduce(_ unionByName _)
   }
 }

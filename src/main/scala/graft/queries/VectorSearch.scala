@@ -40,18 +40,14 @@ object VectorSearch {
     * [[graft.plans.IvfIndex]]. An index build is amortized across
     * every query that probes it (the reference's collection-creation
     * step, photo_vector_search.py:17-20) — it must never run inside
-    * the timed query path. Memoization = the session catalog itself:
-    * if the table exists and is registered from the embeddings table
-    * as it is now ([[Tables.TableId]]), the build is skipped; a fresh
-    * session (new warehouse), a rewritten source, or another directory
-    * with the same basename (the table name) rebuilds. */
+    * the timed query path. Memoization is [[Tables.ensureDerived]]:
+    * the build is skipped while the table exists and was built from the
+    * embeddings table as it is now. */
   private def ensureIvfIndex(s: SparkSession, d: String): String = {
     val tbl = "graft_ivf_" +
       new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val source = Tables.tableId(s"$d/embeddings.parquet")
-    this.synchronized {
-      if (s.catalog.tableExists(tbl) &&
-          graft.plans.IvfIndex.lookup(tbl).exists(_.source == source)) return tbl
+    val source = s"$d/embeddings.parquet"
+    Tables.ensureDerived(s, tbl, source) {
       val e = Tables.embeddings(s, d)
       val cents = e.filter(col("vec_id") < IvfCells)
         .select(col("vec_id").as("cid"), col("embedding").as("cv"))
@@ -86,9 +82,9 @@ object VectorSearch {
       graft.plans.IvfIndex.register(tbl, probes = IvfProbes,
         centroids = cents.collect().map(r =>
           (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)).toSeq,
-        source = source)
-      tbl
+        source = Tables.tableId(source))
     }
+    tbl
   }
 
   /** 1-row DataFrame holding the query vector (stand-in for the
@@ -818,8 +814,8 @@ object VectorSearch {
     // q_semdedup clusters then prunes, q_dedup_embed thresholds a
     // distance — reciprocity needs neither constant). Scale: the
     // pairwise stage is SimilarityStages.knnCandidates — the
-    // block-chunked exact join by default (NO broadcast hint; the
-    // exactSim stance), `spark.graft.knn.mode=ann` = IVF multi-probe
+    // block-chunked exact join by default (NO broadcast hint),
+    // `spark.graft.knn.mode=ann` = IVF multi-probe
     // candidates + exact verify, set-equal at the test sfs
     // (ScalePathSpec); top-3 is a vec-id-PARTITIONED window; the
     // reciprocity check is a plain self-equi-join of the n·3 edge
@@ -1229,11 +1225,11 @@ object VectorSearch {
     // (q_confusion_metrics grades a PARAMETRIC classifier the same
     // way; q_retrieval_eval grades the ranking — this grades the
     // label-propagation operator itself). Scale: the pairwise stage
-    // is SimilarityStages.knnCandidates (block-chunked exact by
-    // default, `spark.graft.knn.mode=ann` = the IVF cell-join route,
-    // set-equal at the test sfs per ScalePathSpec), the bipartite
-    // labeled/held-out restriction is two co-partitioned flag joins
-    // on the pair frame, top-5 is an anchor-partitioned window, and
+    // is SimilarityStages.knnCandidatesBipartite (block-chunked exact
+    // by default, `spark.graft.knn.mode=ann` = the IVF cell-join
+    // route, set-equal at the test sfs per ScalePathSpec) with the
+    // held-out × labeled restriction inside the candidate stage,
+    // top-5 is an anchor-partitioned window, and
     // the vote + accuracy folds are ≤|classes|-sized per anchor.
     // Determinism: distances round 6dp, neighbor rank breaks ties on
     // vec_id, the vote breaks ties on (votes DESC, label ASC), and

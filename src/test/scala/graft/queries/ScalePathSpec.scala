@@ -215,7 +215,7 @@ class ScalePathSpec extends SparkTestBase {
   }
 
   test("simjoin ann mode: set-equal to exact at total-recall sfs, sub-all-pairs candidates") {
-    // The `spark.graft.simjoin.mode=ann` route's claim: IVF
+    // The ann route's claim for allPairsSim: IVF
     // multi-probe candidates + exact verify reproduce the exact
     // all-pairs result wherever recall is total (it is at the test
     // sfs with the default 6 probes of 16 cells — measured, not
@@ -228,12 +228,12 @@ class ScalePathSpec extends SparkTestBase {
     val exactPairs = pairs()
     val exactSurvivors = graft.SparkEntry.queries("q_dedup_embed")(spark, sf)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    spark.conf.set("spark.graft.simjoin.mode", "ann")
+    spark.conf.set("spark.graft.knn.mode", "ann")
     val (annPairs, annSurvivors) =
       try (pairs(),
         graft.SparkEntry.queries("q_dedup_embed")(spark, sf)
           .select("vec_id").collect().map(_.getLong(0)).toSet)
-      finally spark.conf.unset("spark.graft.simjoin.mode")
+      finally spark.conf.unset("spark.graft.knn.mode")
     assert(annPairs === exactPairs,
       s"ann pair delta: +${(annPairs -- exactPairs).size} " +
         s"-${(exactPairs -- annPairs).size} of ${exactPairs.size}")
@@ -570,23 +570,23 @@ class ScalePathSpec extends SparkTestBase {
     val key = "spark.graft.knn.ann.cells"
     // explicit value wins untouched
     s.conf.set(key, "48")
-    try assert(SimilarityStages.annCells(frame(5000), key) === 48)
+    try assert(SimilarityStages.annCells(frame(5000)) === 48)
     finally s.conf.unset(key)
     // default (conf unset) IS auto (round-11: the measured posture
     // became the default): small inputs sit on the pinned 16 floor…
-    assert(SimilarityStages.annCells(frame(100), key) === 16)
+    assert(SimilarityStages.annCells(frame(100)) === 16)
     s.conf.set(key, "auto")
     try {
-      val small = SimilarityStages.annCells(frame(100), key)
+      val small = SimilarityStages.annCells(frame(100))
       assert(small === 16, s"floor: got $small")
-      val big = SimilarityStages.annCells(frame(40000), key)
+      val big = SimilarityStages.annCells(frame(40000))
       // √40000 = 200; allow the size-estimate fallback's row-width
       // guess a generous band — auto needs the right ORDER, not n.
       assert(big >= 60 && big <= 700, s"sqrt scaling: got $big")
       assert(big > small, "auto must grow with input size")
       // …and default-unset equals explicit auto.
       val defaulted = { s.conf.unset(key)
-        SimilarityStages.annCells(frame(40000), key) }
+        SimilarityStages.annCells(frame(40000)) }
       assert(defaulted === big, "conf-unset default must equal auto")
     } finally s.conf.unset(key)
   }
@@ -602,19 +602,19 @@ class ScalePathSpec extends SparkTestBase {
     val frame = Seq((1L, Array.fill(8)(0.5))).toDF("vec_id", "v")
     val key = "spark.graft.knn.ann.probes"
     s.conf.set(key, "5")
-    try assert(SimilarityStages.annProbes(frame, key, cells = 999, pinned = 8) === 5)
+    try assert(SimilarityStages.annProbes(frame, cells = 999, pinned = 8) === 5)
     finally s.conf.unset(key)
-    assert(SimilarityStages.annProbes(frame, key, cells = 16, pinned = 8) === 8)
-    assert(SimilarityStages.annProbes(frame, key, cells = 16, pinned = 6) === 6)
-    assert(SimilarityStages.annProbes(frame, key, cells = 32, pinned = 8) === 4)
-    assert(SimilarityStages.annProbes(frame, key, cells = 128, pinned = 8) === 2)
-    assert(SimilarityStages.annProbes(frame, key, cells = 65536, pinned = 8) === 2,
+    assert(SimilarityStages.annProbes(frame, cells = 16, pinned = 8) === 8)
+    assert(SimilarityStages.annProbes(frame, cells = 16, pinned = 6) === 6)
+    assert(SimilarityStages.annProbes(frame, cells = 32, pinned = 8) === 4)
+    assert(SimilarityStages.annProbes(frame, cells = 128, pinned = 8) === 2)
+    assert(SimilarityStages.annProbes(frame, cells = 65536, pinned = 8) === 2,
       "auto must bottom out at 2 probes")
   }
 
   test("mode auto: size-gated — exact below the threshold, ann at it, explicit wins") {
     // Round-10 verdict #1: the measured scale posture is the DEFAULT.
-    // `spark.graft.{knn,simjoin}.mode` default `auto` resolves by the
+    // `spark.graft.knn.mode` default `auto` resolves by the
     // input's size estimate against spark.graft.ann.autoThresholdBytes:
     // the oracled test sfs stay on the declared exact plan, scaled-up
     // frames route to IVF multi-probe without any conf change.
@@ -623,11 +623,11 @@ class ScalePathSpec extends SparkTestBase {
     val emb = Seq.tabulate(64)(i =>
       (i.toLong, Array.fill(8)(i / 64.0 - 0.5))).toDF("vec_id", "v")
     // tiny frame, default threshold (4 MiB) → exact
-    assert(SimilarityStages.resolveMode(emb, "spark.graft.knn.mode") === "exact")
+    assert(SimilarityStages.resolveMode(emb) === "exact")
     // threshold forced to 1 byte → every frame is "large" → ann
     s.conf.set("spark.graft.ann.autoThresholdBytes", "1")
     try {
-      assert(SimilarityStages.resolveMode(emb, "spark.graft.knn.mode") === "ann")
+      assert(SimilarityStages.resolveMode(emb) === "ann")
       // the ann-routed candidate stage must genuinely prune: no
       // CartesianProduct in the plan (IVF equi-join on cell keys)
       val plan = SimilarityStages.knnCandidates(emb, "l2")
@@ -636,19 +636,19 @@ class ScalePathSpec extends SparkTestBase {
         s"auto-ann plan still carries an all-pairs stage:\n$plan")
       // explicit mode beats the size gate in both directions
       s.conf.set("spark.graft.knn.mode", "exact")
-      try assert(SimilarityStages.resolveMode(emb, "spark.graft.knn.mode") === "exact")
+      try assert(SimilarityStages.resolveMode(emb) === "exact")
       finally s.conf.unset("spark.graft.knn.mode")
     } finally s.conf.unset("spark.graft.ann.autoThresholdBytes")
     s.conf.set("spark.graft.knn.mode", "ann")
-    try assert(SimilarityStages.resolveMode(emb, "spark.graft.knn.mode") === "ann")
+    try assert(SimilarityStages.resolveMode(emb) === "ann")
     finally s.conf.unset("spark.graft.knn.mode")
     // malformed mode names the key
-    s.conf.set("spark.graft.simjoin.mode", "fuzzy")
+    s.conf.set("spark.graft.knn.mode", "fuzzy")
     try {
       val ex = intercept[IllegalArgumentException](
-        SimilarityStages.resolveMode(emb, "spark.graft.simjoin.mode"))
-      assert(ex.getMessage.contains("spark.graft.simjoin.mode"))
-    } finally s.conf.unset("spark.graft.simjoin.mode")
+        SimilarityStages.resolveMode(emb))
+      assert(ex.getMessage.contains("spark.graft.knn.mode"))
+    } finally s.conf.unset("spark.graft.knn.mode")
   }
 
   test("sizing treats an unknown estimate as unknown: RDD-backed frame → 4 blocks, exact mode, 16 cells") {
@@ -672,9 +672,9 @@ class ScalePathSpec extends SparkTestBase {
       "RDD-backed frame must report an unknown size estimate")
     assert(SimilarityStages.blockCount(rddFrame) === 4,
       "unknown estimate must fall back to 4 blocks, not the 4096 cap")
-    assert(SimilarityStages.resolveMode(rddFrame, "spark.graft.knn.mode")
+    assert(SimilarityStages.resolveMode(rddFrame)
       === "exact", "unknown estimate must resolve to the declared exact mode")
-    assert(SimilarityStages.annCells(rddFrame, "spark.graft.knn.ann.cells")
+    assert(SimilarityStages.annCells(rddFrame)
       === 16, "unknown estimate must resolve to the 16-cell floor")
   }
 
@@ -699,11 +699,11 @@ class ScalePathSpec extends SparkTestBase {
     failsNaming("spark.graft.simjoin.blocks", "many")(
       SimilarityStages.blockCount(emb))
     failsNaming("spark.graft.ann.autoThresholdBytes", "-1")(
-      SimilarityStages.resolveMode(emb, "spark.graft.knn.mode"))
+      SimilarityStages.resolveMode(emb))
     failsNaming("spark.graft.knn.ann.cells", "0")(
-      SimilarityStages.annCells(emb, "spark.graft.knn.ann.cells"))
+      SimilarityStages.annCells(emb))
     failsNaming("spark.graft.knn.ann.probes", "zero")(
-      SimilarityStages.annProbes(emb, "spark.graft.knn.ann.probes", 16, 8))
+      SimilarityStages.annProbes(emb, 16, 8))
   }
 
   test("min-label propagation stops at the fixpoint: round count = diameter-bound + proof round") {
