@@ -1,17 +1,39 @@
 #!/usr/bin/env bash
-# Dump per-query explain("formatted") into plans/<tag>/<key>_<suffix>.txt
+# Dump per-query explain("formatted") into <out_dir>/<key>_<suffix>.txt,
+# plus a normalized copy <out_dir>/norm_<suffix>/<key>.txt with the
+# per-run ids stripped (expression ids #N, exchange ids [plan_id=N], RDD
+# ids, temp-directory names, source line numbers and lambda names), so two
+# dumps compare with one command:
+#   diff -r <out_dir>/norm_before <out_dir>/norm_after
 # Usage: scripts/dump_plans.sh <repo_dir> <out_dir> <suffix> <sf_dir> <keys...>
 # The repo_dir must be compiled (target/scala-2.13/classes); <suffix> is
-# e.g. "before" (r17 worktree) or "after" (HEAD).
+# e.g. "before" (the parent commit's checkout) or "after" (HEAD).
+# The session is sized like the test session unless the caller says
+# otherwise: SPARK_GRAFT_CPUS defaults to nproc and SPARK_DRIVER_MEM to
+# half the machine's memory, clamped to 2g..8g.
 set -euo pipefail
 REPO="$1"; OUT="$2"; SUF="$3"; SF="$4"; shift 4
-mkdir -p "$OUT"
+OUT="$(mkdir -p "$OUT" && cd "$OUT" && pwd)"
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+mkdir -p "$OUT/norm_$SUF"
 TMP=$(mktemp)
-(cd "$REPO" && SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 \
-  SPARK_DRIVER_MEM=48g scripts/run.sh graft.Explain "$@" 2>/dev/null) > "$TMP"
+(cd "$REPO" && SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
+  SPARK_DRIVER_MEM="$MEM" scripts/run.sh graft.Explain "$@" 2>/dev/null) > "$TMP"
 awk -v out="$OUT" -v suf="$SUF" '
-  /^===== / { if (f) close(f); key=$2; f=out "/" key "_" suf ".txt"; next }
-  f { print > f }
+  /^===== / {
+    if (f) { close(f); close(nf) }
+    key = $2; f = out "/" key "_" suf ".txt"; nf = out "/norm_" suf "/" key ".txt"
+    next
+  }
+  f {
+    print > f
+    line = $0; gsub(/#[0-9]+/, "", line); gsub(/\[plan_id=[0-9]+\]/, "", line)
+    gsub(/RDD\[[0-9]+\]/, "RDD[]", line); gsub(/\/tmp\/[A-Za-z_]+[0-9]+/, "/tmp/TMP", line)
+    gsub(/\.scala:[0-9]+/, ".scala", line); gsub(/\$Lambda[^ ,]*/, "$Lambda", line)
+    print line > nf
+  }
 ' "$TMP"
 rm -f "$TMP"
 ls -la "$OUT" | tail -n +2

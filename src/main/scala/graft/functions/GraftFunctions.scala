@@ -16,7 +16,8 @@ object GraftFunctions {
     Seq("dot_product", "cosine_distance", "l2_distance", "sq_l2_distance",
       "l2_norm", "norm_sq", "cosine_distance_pre_norm", "char_shingles",
       "sorted_intersect_count", "sorted_dot_stats", "word_shingles",
-      "first_eq_index", "bloom_might_contain", "min_common_long")
+      "first_eq_index", "bloom_might_contain", "min_common_long",
+      "nearest_cells")
 
   // Names graft itself registered, per session (weak keys — a closed
   // session drops its entry). A foreign squatter is also recorded
@@ -116,6 +117,13 @@ object GraftFunctions {
         "bloom_might_contain expects (foldable BINARY bloom, BIGINT probe), " +
           s"got a non-foldable ${other.dataType.simpleString} bloom side")
     }))
+    // The codebook, p and the metric fold out of the tree the same way.
+    def folded(e: Expression, what: String): Any = {
+      require(e.foldable, s"nearest_cells expects a foldable $what, got $e")
+      e.eval()
+    }
+    ensure("nearest_cells")(es => NearestCells(es(0), Codebook.fold(es(1)),
+      folded(es(2), "INT p").asInstanceOf[Int], CellMetric(folded(es(3), "metric").toString)))
   }
 
   def dot_product(a: Column, b: Column): Column =
@@ -133,6 +141,13 @@ object GraftFunctions {
   def cosine_distance_pre_norm(a: Column, b: Column,
       nasq: Column, nbsq: Column): Column =
     call_function("cosine_distance_pre_norm", a, b, nasq, nbsq)
+
+  /** The `p` nearest cells of `v` in `codebook`, nearest first:
+    * ARRAY<BIGINT> ([[NearestCells]]). */
+  def nearest_cells(v: Column, codebook: Codebook, p: Int,
+      metric: CellMetric): Column =
+    call_function("nearest_cells", v, Codebook.literal(codebook), lit(p),
+      lit(metric.name))
 
   // ---- Higher-order-function fallbacks (pure built-in Catalyst
   // expressions, no registration needed). Used by the test suite to

@@ -16,15 +16,17 @@ import scala.math.BigDecimal.RoundingMode
   */
 object IvfIndex {
   /** `source` is the identity of the table the index was built from. */
-  final case class Entry(probes: Int, centroids: Seq[(Long, Array[Double])],
-      source: Option[graft.Tables.TableId])
+  final case class Entry(probes: Int, codebook: graft.functions.Codebook,
+      source: Option[graft.Tables.TableId]) {
+    def centroids: Seq[(Long, Array[Double])] =
+      codebook.cids.toSeq.zip(codebook.vecs)
+  }
 
   private val reg = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
-  def register(table: String, probes: Int,
-      centroids: Seq[(Long, Array[Double])],
+  def register(table: String, probes: Int, codebook: graft.functions.Codebook,
       source: Option[graft.Tables.TableId]): Unit =
-    reg.put(table.toLowerCase, Entry(probes, centroids, source))
+    reg.put(table.toLowerCase, Entry(probes, codebook, source))
 
   def lookup(table: String): Option[Entry] = Option(reg.get(table.toLowerCase))
 
@@ -33,12 +35,14 @@ object IvfIndex {
     * `Double.toString` (decimal semantics, NOT the exact binary
     * expansion of `new java.math.BigDecimal(double)`), then HALF_UP —
     * which is precisely what Spark's own `Round` expression does for
-    * DoubleType. Driver-side probe ranking is therefore bit-identical
+    * DoubleType, NaN and the infinities included (they pass through
+    * unrounded). Driver-side probe ranking is therefore bit-identical
     * to `round(cdist, 6)` evaluated by the engine (asserted in
     * IvfKnnPruningSpec); any residual DuckDB-vs-Spark divergence is
     * the same systemic round(6) parity every oracled query relies on. */
   def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, RoundingMode.HALF_UP).toDouble
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(6, RoundingMode.HALF_UP).toDouble
 
   /** The distance metrics [[IvfKnnPruning]] can rewrite under. Probe
     * ranking must use the QUERY's metric (an L2 top-k probes the
@@ -46,41 +50,15 @@ object IvfIndex {
     * assigned rows to cells at build time — standard IVF practice:
     * the coarse quantizer is fixed, the probe order follows the
     * query. */
-  sealed trait Metric
-  case object Cosine extends Metric
-  case object L2 extends Metric
-
-  /** Mirrors graft.functions.CosineDistance's loop exactly (same
-    * accumulation order, same `1 - dot / sqrt(na * nb)` final form)
-    * so driver-side distances are bit-identical to the kernel's. */
-  private def cosineDist(a: Array[Double], b: Array[Double]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-    1.0 - dot / math.sqrt(na * nb)
-  }
-
-  /** Mirrors graft.functions.L2Distance's loop (same accumulation
-    * order, `sqrt(Σ (x-y)²)`) for the same bit-parity contract. */
-  private def l2Dist(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { val d = a(i) - b(i); s += d * d; i += 1 }
-    math.sqrt(s)
-  }
+  type Metric = graft.functions.CellMetric
+  val Cosine: Metric = graft.functions.CellMetric.Cosine
+  val L2: Metric = graft.functions.CellMetric.L2
 
   /** The `probes` nearest cells to the query vector, by
-    * (round6(distance), cid) under the query's metric — identical
-    * ordering to the SQL probe CTE in the q_knn_ivf* oracles. */
+    * (round6(distance), cid) under the query's metric — the codebook's
+    * own ranking, so identical to the cells the index build assigned
+    * and to the SQL probe CTE in the q_knn_ivf* oracles. */
   def probeCells(e: Entry, query: Array[Double],
-      metric: Metric = Cosine): Seq[Long] = {
-    val dist: (Array[Double], Array[Double]) => Double = metric match {
-      case Cosine => cosineDist
-      case L2 => l2Dist
-    }
-    e.centroids.map { case (cid, c) => (r6(dist(c, query)), cid) }
-      .sorted.take(e.probes).map(_._2)
-  }
+      metric: Metric = Cosine): Seq[Long] =
+    e.codebook.nearest(query, e.probes, metric).toSeq
 }

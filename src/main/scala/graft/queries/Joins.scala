@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.GraftFunctions.{cosine_distance, cosine_distance_pre_norm, norm_sq, sq_l2_distance}
+import graft.functions.{CellMetric, Codebook}
+import graft.functions.GraftFunctions.{cosine_distance, cosine_distance_pre_norm, nearest_cells, norm_sq, sq_l2_distance}
 
 /** Join surface (SURVEY §2B). Strategy choices are explicit where the
   * 100 TB plan differs from what a tiny scale factor would pick:
@@ -585,8 +586,9 @@ object Joins {
   *    the fused `cosine_distance` / `sq_l2_distance`.
   *  - `ann` (the 100 TB route): IVF multi-probe candidates. Each vector
   *    is assigned to its P nearest of C codebook cells
-  *    ([[probeAssignments]], carrying the vector), and the candidates
-  *    are a cell-keyed self-join: the exchange ships n·P vector rows,
+  *    ([[probeAssignments]]: one `nearest_cells` projection and an
+  *    explode, carrying the vector), and the candidates are a
+  *    cell-keyed self-join: the exchange ships n·P vector rows,
   *    and pairs exist only inside the join stage, where the kernel
   *    reduces them to score rows. A pair sharing several probe cells
   *    is kept only in its smallest shared cell
@@ -600,8 +602,8 @@ object Joins {
   *    (bit-identical to the fused kernel, CosinePreNormSpec), or
   *    `sq_l2_distance`, which has no pair-invariant part. C is
   *    [[annCells]] (≈ √n) and P is [[annProbes]]: candidate volume is
-  *    ~n²·P²/C and assignment volume n·C, so C ≈ √n with few probes is
-  *    the joint optimum (BENCH.md round 10). Precision is exact;
+  *    ~n²·P²/C and assignment work n·C distances, so C ≈ √n with few
+  *    probes is the joint optimum (BENCH.md round 10). Precision is exact;
   *    recall is governed by P/C and is total at the test sfs, so
   *    ScalePathSpec pins ann ≡ exact for every operator.
   */
@@ -856,15 +858,11 @@ object SimilarityStages {
       cells: Int, probes: Int, metric: String, cols: PairCols,
       score: Column => Column): DataFrame = {
     // l2 rows carry a constant norm the kernel never reads: one plan
-    // shape for both metrics.
-    val asg0 = probeAssignments(vecs.select(col("vec_id"), col("v")),
-        cells, probes, metric)
+    // shape for both metrics. The sides split after the assignment, so
+    // both keep the codebook and probe sets of the unsplit stage.
+    val asg = probeAssignments(vecs, cells, probes, metric)
       .withColumn("nsq",
         if (metric == "cosine") norm_sq(col("v")) else lit(0.0))
-    // The side flag re-attaches to the full frame's assignments, so
-    // both sides keep the centroids and probe sets of the unsplit stage.
-    val asg = side.fold(asg0)(s =>
-      asg0.join(broadcast(vecs.select(col("vec_id"), col(s))), "vec_id"))
     val (ra, rb) = sides(asg, side)
     def cellRows(rows: DataFrame, s: Side): DataFrame =
       rows.select(col("cid"), col("vec_id").as(s.id), col("v").as(s.v),
@@ -878,50 +876,26 @@ object SimilarityStages {
         score(kernel(metric, cols, hoisted = true)).as(cols.score))
   }
 
-  /** Top-`probes` IVF cell assignments of (vec_id, v ARRAY<DOUBLE>),
-    * CARRYING the vector: (vec_id, v, cid, cids), where `cids` is the
+  /** Top-`probes` IVF cell assignments of `vecs` (vec_id, v
+    * ARRAY<DOUBLE>, any other columns), CARRYING every input column:
+    * one row per (vector, probe cell) with `cid` and `cids`, the
     * vector's full probe-cell set. The codebook is the first `cells`
-    * vectors (vec_id < cells, as q_knn_ivf): one broadcast of it, one
-    * keyed window for the top-P ranking. `metric` picks the
-    * cell-distance kernel — probing cells by the WRONG metric would
-    * silently cost recall on unnormalized embeddings. */
+    * vectors (vec_id < cells, as q_knn_ivf), collected once on the
+    * driver; the ranking is one `nearest_cells` projection and an
+    * explode, with no join, window or shuffle. `metric` picks the
+    * cell distance (cosine, or l2 ranked by squared l2 like the pair
+    * kernel) — probing cells by the WRONG metric would silently cost
+    * recall on unnormalized embeddings. */
   private def probeAssignments(vecs: DataFrame, cells: Int, probes: Int,
       metric: String): DataFrame = {
-    // Cosine hoists the pair-invariant squared norms out of the
-    // n×cells kernel: the codebook side's once per centroid at
-    // broadcast time, the vector side's once per row below the join.
-    val cents0 = vecs.filter(col("vec_id") < cells)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val cents = if (metric == "cosine")
-      cents0.withColumn("cnsq", norm_sq(col("cv"))) else cents0
-    val cdist = metric match {
-      case "cosine" =>
-        cosine_distance_pre_norm(col("v"), col("cv"),
-          col("nsq"), col("cnsq"))
-      case "l2" => sq_l2_distance(col("v"), col("cv"))
+    val cellMetric = metric match {
+      case "cosine" => CellMetric.Cosine
+      case "l2" => CellMetric.SqL2
       case other => throw new IllegalArgumentException(
         s"ann metric must be cosine|l2, got '$other'")
     }
-    // The second window reuses the rn window's vec_id partitioning —
-    // no additional exchange. The vector must NOT ride the ranking
-    // window: the crossJoin emits n×cells rows, and sorting them with
-    // the ~512 B embedding aboard spilled ~28 GB into every ann query
-    // at the 100× fixture. The window ranks 24-byte (vec_id, cid,
-    // cdist) rows; the vector re-attaches afterwards by an un-hinted
-    // join (node-sized, Catalyst broadcasts it at the test sfs).
-    val vIn = if (metric == "cosine")
-      vecs.withColumn("nsq", norm_sq(col("v"))) else vecs
-    vIn.crossJoin(broadcast(cents))
-      .withColumn("cdist", round(cdist, 6))
-      .select(col("vec_id"), col("cid"), col("cdist"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("cdist"), col("cid"))))
-      .filter(col("rn") <= probes)
-      .withColumn("cids", collect_list(col("cid")).over(
-        Window.partitionBy("vec_id")
-          .rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)))
-      .join(vecs, "vec_id")
-      .select(col("vec_id"), col("v"), col("cid"), col("cids"))
+    val cb = Codebook.collect(vecs.filter(col("vec_id") < cells).select("vec_id", "v"))
+    vecs.withColumn("cids", nearest_cells(col("v"), cb, probes, cellMetric))
+      .withColumn("cid", explode(col("cids")))
   }
 }

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
-import graft.functions.GraftFunctions.{cosine_distance, sq_l2_distance}
+import graft.functions.{CellMetric, Codebook}
+import graft.functions.GraftFunctions.{cosine_distance, nearest_cells, sq_l2_distance}
 import TextKit.toksDuck
 
 /** SEMANTIC (clustered) embedding dedup — the SemDeDup recipe
@@ -23,14 +24,15 @@ import TextKit.toksDuck
   *
   * Determinism across engines (the oracle replays the SAME
   * algorithm): seeds are the k vectors with the smallest md5-derived
-  * id hash (hash-ranked, not rand()); every Lloyd assignment key is
-  * round(dist, 6) + cid·ε with ε = 1e-6/(2k) — the tie-break SCALES
-  * with k, so the whole cid term stays < 0.5·1e-6 (strictly inside
-  * the rounded-distance grain) at ANY k in the derived range, and
-  * distinct cids stay ≥ ε ≈ 5e-12 apart at the clamp — far above
-  * ulp(2.0) ≈ 4.4e-16, so no two keys can collapse to the same
-  * double. Both engines evaluate the identical double expression
-  * (1e-6 / (2·k) is one IEEE division of the same operands); every
+  * id hash (hash-ranked, not rand()); every Lloyd assignment is the
+  * nearest centroid by (round(dist, 6), cid) — the engine's one
+  * quantizer, [[graft.functions.Codebook]]. The oracle states that
+  * order as the key round(dist, 6) + cid·ε with ε = 1e-6/(2k): the
+  * tie-break SCALES with k, so the whole cid term stays < 0.5·1e-6
+  * (strictly inside the rounded-distance grain) at ANY k in the
+  * derived range, and distinct cids stay ≥ ε ≈ 5e-12 apart at the
+  * clamp — far above ulp(2.0) ≈ 4.4e-16, so no two keys can collapse
+  * to the same double and the key orders exactly as (round, cid); every
   * centroid mean is an exact DECIMAL(38,12) sum over doubles divided
   * by the count, rounded to 6 — associative, so partition order
   * can't move it (the q_vector_centroid recipe).
@@ -122,9 +124,9 @@ object Semantic {
       // groupBy(vec_id) shuffle. Per round the cluster pays exactly
       // one (cid, pos)-keyed aggregation job over n·dim rows.
       val cents2 = (1 to 2).foldLeft(seedCentroids(e, k)) { (cents, _) =>
-        lloydCentroids(e.withColumn("cid", assignExpr(cents, k)))
+        lloydCentroids(e.withColumn("cid", assignExpr(cents)))
       }
-      val m = e.withColumn("cid", assignExpr(cents2, k))
+      val m = e.withColumn("cid", assignExpr(cents2))
       val dup = m.as("a")
         .join(m.as("b"),
           col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
@@ -968,23 +970,11 @@ object Semantic {
         .map { case (r, i) => i -> r.getSeq[Double](0).toArray }
     }
 
-  /** Scan-local literal argmin over the ≤k driver-held centroids:
-    * key_i = round(dist(v, c_i), 6) + i·ε with ε = 1e-6/(2k) — the
-    * tie-break scales with k so the rounded-distance grain dominates
-    * it at any derived k (see the object scaladoc; identical
-    * expression in the oracle, one IEEE division of the same
-    * operands). array_min over the (key, cid) structs picks the
-    * cluster. */
-  private def assignExpr(cents: Seq[(Int, Array[Double])], k: Int):
-      org.apache.spark.sql.Column = {
-    val eps = 1e-6 / (2.0 * k)
-    array_min(array(cents.map { case (cid, c) =>
-      struct(
-        (round(cosine_distance(col("v"), typedLit(c)), 6) +
-          lit(cid) * lit(eps)).as("key"),
-        lit(cid).as("cid"))
-    }: _*)).getField("cid")
-  }
+  /** Scan-local argmin over the ≤k driver-held centroids: the
+    * cosine-nearest by (round(dist, 6), cid), in the row's projection. */
+  private def assignExpr(cents: Seq[(Int, Array[Double])]): Column =
+    nearest_cells(col("v"), Codebook(cents.map { case (c, v) => (c.toLong, v) }),
+      1, CellMetric.Cosine)(0).cast("int")
 
   /** Exact-decimal elementwise centroid means (the q_vector_centroid
     * recipe): one (cid, pos)-keyed partial+final aggregation, with

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
-import graft.functions.GraftFunctions.{cosine_distance, l2_distance}
+import graft.functions.{CellMetric, Codebook}
+import graft.functions.GraftFunctions.{cosine_distance, l2_distance, nearest_cells}
 
 /** k-NN vector search — the reference's core capability
   * (photo_vector_search.py:156-193, A8-A12 in SURVEY §2A).
@@ -30,6 +31,24 @@ object VectorSearch {
   private val IvfCells = 16
   private val IvfProbes = 4
 
+  /** The IVF codebook of a directory: its first IvfCells embeddings (a
+    * deterministic k-means-init stand-in), one bounded driver collect.
+    * Every IVF user in this file ranks cells with it, and its
+    * sub-slices are the PQ codebooks. */
+  private def ivfCodebook(s: SparkSession, d: String): Codebook =
+    Codebook.collect(Tables.embeddings(s, d).filter(col("vec_id") < IvfCells)
+      .select("vec_id", "embedding"))
+
+  /** The IVF cell of `v`: its cosine-nearest codebook vector. */
+  private def ivfCell(v: Column, cb: Codebook): Column =
+    nearest_cells(v, cb, 1, CellMetric.Cosine)(0)
+
+  /** The 8 PQ codes of a 64-dim `v`: per 8-dim subspace, the id of the
+    * L2-nearest codebook sub-slice. */
+  private def pqCodes(v: Column, cb: Codebook): Column =
+    array((0 until 8).map(m => nearest_cells(slice(v, m * 8 + 1, 8),
+      cb.slice(m * 8, 8), 1, CellMetric.L2)(0)): _*)
+
   /** Build-once IVF index for q_knn_ivf_rule / q_knn_ivfpq:
     * nearest-centroid assignment written as a table PARTITIONED BY
     * the cell id, WITH the 8-subspace PQ code array per vector
@@ -37,7 +56,12 @@ object VectorSearch {
     * exactly this reason: encoding is BUILD work, amortized like the
     * assignment — a query must only read codes plus the few raw rows
     * it re-ranks), plus codebook registration in
-    * [[graft.plans.IvfIndex]]. An index build is amortized across
+    * [[graft.plans.IvfIndex]]. The build is one row-local pass: the
+    * codebook is collected once (the same collect registers it), the
+    * cell and the 8 codes are one projection of `nearest_cells` calls,
+    * and a rebalance by cell before the partitioned write keeps one
+    * file per cell. Its jobs carry the description
+    * `graft ivf build <table>`. An index build is amortized across
     * every query that probes it (the reference's collection-creation
     * step, photo_vector_search.py:17-20) — it must never run inside
     * the timed query path. Memoization is [[Tables.ensureDerived]]:
@@ -48,44 +72,30 @@ object VectorSearch {
       new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
     val source = s"$d/embeddings.parquet"
     Tables.ensureDerived(s, tbl, source) {
-      val e = Tables.embeddings(s, d)
-      val cents = e.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-      val asg = e.crossJoin(broadcast(cents))
-        .withColumn("cdist", round(cosine_distance(col("embedding"), col("cv")), 6))
-        .groupBy("vec_id")
-        .agg(expr("min_by(struct(label, embedding, cid), struct(cdist, cid))").as("m"))
-        .select(col("vec_id"), col("m.label").as("label"),
-          col("m.embedding").as("embedding"), col("m.cid").as("ivf_cell"))
-      // PQ encode (shared codebook contract with q_knn_pq/q_knn_ivfpq:
-      // sub-slices of the first IvfCells vectors in DOUBLE space,
-      // 6dp-rounded subspace L2, code tiebreak) — one min_by shuffle
-      // over corpus×8 rows, paid once per index lifetime.
-      val edd = e.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      val codebook = cents
-        .select(col("cid").as("code"), explode(expr("sequence(0, 7)")).as("m"),
-          col("cv").cast("array<double>").as("cvd"))
-        .select(col("code"), col("m"), expr("slice(cvd, m*8+1, 8)").as("cs"))
-      val pq = fanout(edd).crossJoin(broadcast(codebook))
-        .select(col("vec_id"), col("m"), col("code"),
-          round(l2_distance(expr("slice(v, m*8+1, 8)"), col("cs")), 6)
-            .as("dist"))
-        .groupBy("vec_id", "m")
-        .agg(expr("min_by(code, struct(dist, code))").as("code"))
-        .groupBy("vec_id")
-        .agg(expr("transform(array_sort(collect_list(struct(m, code)))," +
-          " x -> x.code)").as("pq"))
-      asg.join(pq, "vec_id")
-        .select("vec_id", "label", "embedding", "pq", "ivf_cell")
-        .write.mode("overwrite").partitionBy("ivf_cell").saveAsTable(tbl)
-      graft.plans.IvfIndex.register(tbl, probes = IvfProbes,
-        centroids = cents.collect().map(r =>
-          (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)).toSeq,
-        source = Tables.tableId(source))
+      val sc = s.sparkContext
+      val caller = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"graft ivf build $tbl")
+      try {
+        val cb = ivfCodebook(s, d)
+        val v = col("embedding")
+        Tables.embeddings(s, d)
+          .select(col("vec_id"), col("label"), v, pqCodes(v, cb).as("pq"),
+            ivfCell(v, cb).as("ivf_cell"))
+          .hint("rebalance", col("ivf_cell"))
+          .write.mode("overwrite").partitionBy("ivf_cell").saveAsTable(tbl)
+        graft.plans.IvfIndex.register(tbl, probes = IvfProbes, cb,
+          source = Tables.tableId(source))
+      } finally sc.setLocalProperty("spark.job.description", caller)
     }
     tbl
   }
+
+  /** The query vector `id` as a driver-local double array (the
+    * reference embeds the query before searching, cli.py:109-121). */
+  private def queryArray(s: SparkSession, d: String, id: Long): Array[Double] =
+    Tables.embeddings(s, d).filter(col("vec_id") === id)
+      .select(col("embedding").cast("array<double>"))
+      .head.getSeq[Double](0).toArray
 
   /** 1-row DataFrame holding the query vector (stand-in for the
     * driver-local query-image/text embedding, photo_vector_search.py:160). */
@@ -177,10 +187,10 @@ object VectorSearch {
     // deterministic k-means init stand-in); a query probes only the
     // P=4 cells nearest its own vector, scanning 1/4 of the data. On
     // a cluster the cell id is the table's partition column, so the
-    // probe IS a partition-pruned scan. Assignment is a broadcast of
-    // the codebook + per-row argmin (min_by) — one partial-aggregated
-    // shuffle, amortized across all queries as a build step. Fully
-    // deterministic, exact-oracled; recall loss is the declared
+    // probe IS a partition-pruned scan. Assignment is the codebook's
+    // nearest_cells ranking inside each row's projection (no join, no
+    // shuffle), and the probes are the same ranking of the query
+    // vector. Fully deterministic, exact-oracled; recall loss is the declared
     // IVF tradeoff (here the true top-5 sits in probed cells or not —
     // both engines agree exactly on which).
     Q("q_knn_ivf",
@@ -198,23 +208,12 @@ object VectorSearch {
          |SELECT vec_id, label, round(1 - list_cosine_similarity(v, qv), 6) AS dist
          |FROM a2 CROSS JOIN q WHERE cid IN (SELECT cid FROM probe)
          |ORDER BY dist, vec_id LIMIT $K""".stripMargin) { (s, d) =>
-      val e = Tables.embeddings(s, d)
-      val cents = e.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+      val cb = ivfCodebook(s, d)
       val qv = queryVec(s, d, 0)
-      // argmin over the broadcast codebook via min_by on the rounded
-      // distance (unique (dist, cid) order key → engine-stable).
-      val asgn = e.crossJoin(broadcast(cents))
-        .withColumn("cdist", round(cosine_distance(col("embedding"), col("cv")), 6))
-        .groupBy("vec_id")
-        .agg(expr("min_by(struct(label, embedding, cid), struct(cdist, cid))").as("m"))
-        .select(col("vec_id"), col("m.label").as("label"),
-          col("m.embedding").as("embedding"), col("m.cid").as("cid"))
-      val probes = cents.crossJoin(broadcast(qv))
-        .select(col("cid"),
-          round(cosine_distance(col("cv"), col("qvec")), 6).as("qdist"))
-        .orderBy(col("qdist"), col("cid")).limit(IvfProbes)
-      asgn.join(broadcast(probes.select("cid")), "cid")
+      val probes = qv.select(
+        explode(nearest_cells(col("qvec"), cb, IvfProbes, CellMetric.Cosine)).as("cid"))
+      Tables.embeddings(s, d).withColumn("cid", ivfCell(col("embedding"), cb))
+        .join(broadcast(probes), "cid")
         .crossJoin(broadcast(qv))
         .select(col("vec_id"), col("label"),
           round(cosine_distance(col("embedding"), col("qvec")), 6).as("dist"))
@@ -248,11 +247,7 @@ object VectorSearch {
       // ONLY the probe: embed the query, issue the naive exact top-k,
       // let the injected rule prune the scan to the probed cells.
       val tbl = ensureIvfIndex(s, d)
-      // Driver-local query embedding as an array literal (the
-      // reference embeds the query before searching, cli.py:109-121).
-      val qv = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head.getSeq[Double](0).toArray
+      val qv = queryArray(s, d, 0)
       s.table(tbl)
         .select(col("vec_id"), col("label"),
           round(cosine_distance(col("embedding"), lit(qv)), 6).as("dist"))
@@ -282,9 +277,7 @@ object VectorSearch {
          |FROM a2 CROSS JOIN q WHERE cid IN (SELECT cid FROM probe)
          |ORDER BY dist, vec_id LIMIT $K""".stripMargin) { (s, d) =>
       val tbl = ensureIvfIndex(s, d)
-      val qv = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head.getSeq[Double](0).toArray
+      val qv = queryArray(s, d, 0)
       s.table(tbl)
         .select(col("vec_id"), col("label"),
           round(l2_distance(col("embedding"), lit(qv)), 6).as("dist"))
@@ -301,8 +294,9 @@ object VectorSearch {
     // cluster's memory). Search is ADC: the query precomputes an
     // 8×16 distance table (broadcast), each encoded row sums 8 table
     // lookups — no float math against raw vectors at scan time.
-    // Encode = one min_by shuffle (a build step in a real deployment,
-    // like the IVF assignment); distances pre-rounded to 6dp then
+    // Encode = one row-local nearest_cells projection per subspace (a
+    // build step in a real deployment, like the IVF assignment, and the
+    // same codes the index build stores); distances pre-rounded to 6dp then
     // DECIMAL-summed so the ADC total is order-independent and
     // engine-exact. Top-k recall loss vs exact kNN is the declared
     // PQ tradeoff — both engines agree exactly on codes and sums.
@@ -335,13 +329,8 @@ object VectorSearch {
         .select(col("vec_id").as("cid"), col("v").as("cv"))
         .select(col("cid"), explode(expr("sequence(0, 7)")).as("m"), col("cv"))
         .select(col("cid"), col("m"), expr("slice(cv, m*8+1, 8)").as("cs"))
-      // Encode: per (vector, subspace) nearest code — min_by on the
-      // rounded subspace L2 with cid tiebreak (engine-stable).
-      val asg = fanout(ed).crossJoin(broadcast(codes))
-        .select(col("vec_id"), col("m"), col("cid"),
-          round(l2_distance(expr("slice(v, m*8+1, 8)"), col("cs")), 6).as("dist"))
-        .groupBy("vec_id", "m")
-        .agg(expr("min_by(cid, struct(dist, cid))").as("cid"))
+      val asg = ed.select(col("vec_id"),
+        posexplode(pqCodes(col("v"), ivfCodebook(s, d))).as(Seq("m", "cid")))
       // ADC table: 8×16 query-to-code distances, broadcast to every
       // encoded row.
       val qv = ed.filter(col("vec_id") === 0).select(col("v").as("qv"))
@@ -423,15 +412,12 @@ object VectorSearch {
       val cents = ed.filter(col("vec_id") < IvfCells)
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       val qv = ed.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      // Probe selection: IvfCells rows × 1 query — a bounded driver
-      // read (the q_knn_ivf_rule qv-collect idiom) so the cell list
+      // Probe selection on the driver (the q_knn_ivf_rule query-collect
+      // idiom, ranked by the registered codebook) so the cell list
       // lands as a LITERAL isin on the partition column and the scan
       // is partition-pruned.
-      val probeCids = cents.crossJoin(broadcast(qv))
-        .select(col("cid"),
-          round(cosine_distance(col("cv"), col("qv")), 6).as("qdist"))
-        .orderBy(col("qdist"), col("cid")).limit(IvfProbes)
-        .collect().map(_.getLong(0))
+      val probeCids = graft.plans.IvfIndex.probeCells(
+        graft.plans.IvfIndex.lookup(tbl).get, queryArray(s, d, 0))
       val cand = s.table(tbl)
         .filter(col("ivf_cell").isin(probeCids: _*))
         .localCheckpoint(eager = false) // probed partitions only
@@ -570,23 +556,13 @@ object VectorSearch {
          |GROUP BY ex.qid ORDER BY ex.qid""".stripMargin) { (s, d) =>
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"))
-      val cents = e.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+      val cb = ivfCodebook(s, d)
       val q = e.filter(col("vec_id") < 4)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val asgn = e.crossJoin(broadcast(cents))
-        .withColumn("cdist",
-          round(cosine_distance(col("embedding"), col("cv")), 6))
-        .groupBy("vec_id")
-        .agg(expr("min_by(struct(embedding, cid), struct(cdist, cid))").as("m"))
-        .select(col("vec_id"), col("m.embedding").as("embedding"),
-          col("m.cid").as("cid"))
+      val asgn = e.withColumn("cid", ivfCell(col("embedding"), cb))
       val wq = Window.partitionBy("qid")
-      val pr = cents.crossJoin(broadcast(q))
-        .withColumn("qdist", round(cosine_distance(col("cv"), col("qv")), 6))
-        .withColumn("rn", row_number().over(
-          wq.orderBy(col("qdist"), col("cid"))))
-        .filter(col("rn") <= IvfProbes).select("qid", "cid")
+      val pr = q.select(col("qid"),
+        explode(nearest_cells(col("qv"), cb, IvfProbes, CellMetric.Cosine)).as("cid"))
       val iv = asgn.join(broadcast(pr), "cid").join(broadcast(q), "qid")
         .filter(col("vec_id") =!= col("qid"))
         .withColumn("dist",
@@ -755,9 +731,9 @@ object VectorSearch {
     // skew that kills IVF latency at scale, and the reason this
     // audit ships with the index). share and load_factor are
     // small-denominator rationals → exact-integer-space rounding.
-    // Scale: ONE broadcast-codebook argmin pass (the assignment
+    // Scale: ONE row-local nearest_cells pass (the assignment
     // every IVF query already pays) + a k-sized aggregate; the
-    // centroid left-join that surfaces empty cells is k-sized.
+    // cell-id left-join that surfaces empty cells is k-sized.
     Q("q_index_stats",
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v
          |           FROM embeddings),
@@ -777,24 +753,18 @@ object VectorSearch {
          |    / (2.0 * n)) / 1000000.0 AS DOUBLE) AS load_factor
          |FROM c LEFT JOIN cnt ON cnt.cid = c.cid CROSS JOIN nn
          |ORDER BY 1""".stripMargin) { (s, d) =>
-      val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      // The 16-row codebook feeds both the assignment and the
-      // empty-cell join; pinning it leaves exactly ONE corpus scan
-      // in the final plan (N comes from the cell counts, not a
-      // second pass — the counts partition the corpus by argmin
-      // totality).
-      val cents = e.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-        .localCheckpoint(eager = false)
-      val asgn = e.crossJoin(broadcast(cents))
-        .withColumn("cdist",
-          round(cosine_distance(col("embedding"), col("cv")), 6))
-        .groupBy("vec_id")
-        .agg(expr("min_by(cid, struct(cdist, cid))").as("cid"))
-      val cnt = asgn.groupBy("cid").agg(count(lit(1)).as("members"))
+      import s.implicits._
+      // The collected codebook feeds both the assignment and the
+      // empty-cell join, leaving exactly ONE corpus scan in the final
+      // plan (N comes from the cell counts, not a second pass — the
+      // counts partition the corpus by argmin totality).
+      val cb = ivfCodebook(s, d)
+      val cnt = Tables.embeddings(s, d)
+        .groupBy(ivfCell(col("embedding"), cb).as("cid"))
+        .agg(count(lit(1)).as("members"))
         .localCheckpoint(eager = false)
       val nn = cnt.agg(sum("members").cast("long").as("n"))
-      cents.select("cid")
+      cb.cids.toSeq.toDF("cid")
         .join(broadcast(cnt), Seq("cid"), "left")
         .crossJoin(broadcast(nn))
         .selectExpr("cid", "coalesce(members, 0) AS members",

@@ -1,6 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -22,14 +21,23 @@ trait SparkTestBase extends AnyFunSuite {
   /** Spark jobs started while `body` runs. The listener bus is drained
     * before the listener is added, so earlier work is not counted, and
     * again before the count is read, so every job of `body` is. */
-  def jobsDuring(body: => Any): Int = {
+  def jobsDuring(body: => Any): Int = jobDescriptionsDuring(body).size
+
+  /** The description (`spark.job.description`, "" when unset) of each
+    * Spark job started while `body` runs, drained as in [[jobsDuring]]. */
+  def jobDescriptionsDuring(body: => Any): Seq[String] = {
     val sc = spark.sparkContext
     TestBus.drain(sc)
-    val jobs = new AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
     }
     sc.addSparkListener(l)
-    try { body; TestBus.drain(sc); jobs.get } finally sc.removeSparkListener(l)
+    try {
+      body; TestBus.drain(sc)
+      scala.jdk.CollectionConverters.IteratorHasAsScala(jobs.iterator).asScala.toSeq
+    } finally sc.removeSparkListener(l)
   }
 }

@@ -1,7 +1,10 @@
 package graft.plans
 
-import graft.{SparkEntry, SparkTestBase}
+import graft.{SparkEntry, SparkTestBase, Tables}
+import graft.functions.{CellMetric, GraftFunctions}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.functions._
 
 /** The ANN rewrite must actually FIRE (the DuckDB oracle can't tell:
   * for this query vector the probed cells happen to contain the true
@@ -57,11 +60,17 @@ class IvfKnnPruningSpec extends SparkTestBase {
     assume(new java.io.File(s"$sf/embeddings.parquet").exists())
     SparkEntry.queries("q_knn_ivf_rule")(spark, sf).collect() // ensures built
     val t0 = System.nanoTime()
-    SparkEntry.queries("q_knn_ivf_rule")(spark, sf).collect()
+    val second = jobDescriptionsDuring(
+      SparkEntry.queries("q_knn_ivf_rule")(spark, sf).collect())
     val warmSec = (System.nanoTime() - t0) / 1e9
     // A rebuild would saveAsTable + collect centroids (~seconds); the
     // probe-only path must be well under that even on a cold JIT.
     assert(warmSec < 2.0, s"probe-only invocation took $warmSec s — index rebuilt?")
+    // By jobs: the second invocation runs the probe query's jobs (the
+    // query-vector collect and the pruned top-k) and nothing labelled
+    // as the build, whose jobs include the write.
+    assert(!second.exists(_.startsWith("graft ivf build")), second)
+    assert(second.size === 2, second)
   }
 
   test("driver-side r6 matches the engine's round(x, 6) bit-for-bit") {
@@ -123,5 +132,109 @@ class IvfKnnPruningSpec extends SparkTestBase {
     assert(indexed === source)
     assert(IvfIndex.lookup("graft_ivf_ivf_reused").get.source ===
       graft.Tables.tableId(s"$b/embeddings.parquet"))
+  }
+
+  // ---- The index build against the formula it replaced. The reference
+  // is that formula, kept here: cell assignment by a cross join with the
+  // codebook and a grouped `min_by`, PQ codes by a per-subspace `min_by`,
+  // joined on vec_id. The build must write the same rows, register the
+  // same centroids, lay out one file per cell, and label its jobs.
+
+  private val Cells = 16
+
+  private def cents(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < Cells)
+      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+
+  private def referenceIndex(e: DataFrame): DataFrame = {
+    val asg = e.crossJoin(broadcast(cents(e)))
+      .withColumn("cdist",
+        round(GraftFunctions.cosine_distance(col("embedding"), col("cv")), 6))
+      .groupBy("vec_id")
+      .agg(expr("min_by(struct(label, embedding, cid), struct(cdist, cid))").as("m"))
+      .select(col("vec_id"), col("m.label").as("label"),
+        col("m.embedding").as("embedding"), col("m.cid").as("ivf_cell"))
+    val codebook = cents(e)
+      .select(col("cid").as("code"), explode(expr("sequence(0, 7)")).as("m"),
+        col("cv").cast("array<double>").as("cvd"))
+      .select(col("code"), col("m"), expr("slice(cvd, m*8+1, 8)").as("cs"))
+    val pq = e.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .crossJoin(broadcast(codebook))
+      .select(col("vec_id"), col("m"), col("code"),
+        round(GraftFunctions.l2_distance(expr("slice(v, m*8+1, 8)"), col("cs")), 6)
+          .as("dist"))
+      .groupBy("vec_id", "m")
+      .agg(expr("min_by(code, struct(dist, code))").as("code"))
+      .groupBy("vec_id")
+      .agg(expr("transform(array_sort(collect_list(struct(m, code))), x -> x.code)")
+        .as("pq"))
+    asg.join(pq, "vec_id").select("vec_id", "label", "embedding", "pq", "ivf_cell")
+  }
+
+  private def tableOf(dir: String): String =
+    "graft_ivf_" + new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** Builds the index of `dir` (if it is not built yet) and checks it
+    * against the reference. */
+  private def checkIndex(dir: String): Unit = {
+    SparkEntry.queries("q_knn_ivf_rule")(spark, dir).collect()
+    val tbl = tableOf(dir)
+    val e = Tables.embeddings(spark, dir)
+    val got = spark.table(tbl).select("vec_id", "label", "embedding", "pq", "ivf_cell")
+    val ref = referenceIndex(e)
+    assert(got.count() === e.count())
+    assert(got.exceptAll(ref).count() === 0, s"$tbl has rows the reference lacks")
+    assert(ref.exceptAll(got).count() === 0, s"$tbl lacks reference rows")
+
+    // The registered codebook is the reference's, and the driver-side
+    // probe ranking equals the kernel on the query vector.
+    val entry = IvfIndex.lookup(tbl).get
+    val refCents = cents(e).select(col("cid"), col("cv").cast("array<double>"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    assert(entry.centroids.map { case (c, v) => c -> v.toSeq }.toMap === refCents)
+    val q = e.filter(col("vec_id") === 0)
+    val qv = q.select(col("embedding").cast("array<double>")).head.getSeq[Double](0).toArray
+    for (m <- Seq(CellMetric.Cosine, CellMetric.L2)) {
+      val kernel = q.select(GraftFunctions.nearest_cells(col("embedding"),
+        entry.codebook, entry.probes, m)).head.getSeq[Long](0)
+      assert(IvfIndex.probeCells(entry, qv, m) === kernel, s"$m probes")
+    }
+  }
+
+  test("the sf0.001 index equals the reference build, row for row") {
+    assume(new java.io.File(s"$sf/embeddings.parquet").exists())
+    checkIndex(sf)
+  }
+
+  test("a seeded 4096 x 64 four-file index equals the reference build") {
+    val s = spark
+    import s.implicits._
+    val r = new scala.util.Random(4096)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_build_")
+      .resolve("ivf_seeded").toString
+    (0 until 4096).map(i => (i.toLong, Seq.fill(64)(r.nextGaussian().toFloat), i % 7))
+      .toDF("vec_id", "embedding", "label").repartition(4)
+      .write.parquet(s"$dir/embeddings.parquet")
+    // A fresh directory builds. The build's jobs run first and all carry
+    // its label; the probe query's jobs that follow do not.
+    val jobs = jobDescriptionsDuring(
+      SparkEntry.queries("q_knn_ivf_rule")(spark, dir).collect())
+    val label = s"graft ivf build ${tableOf(dir)}"
+    val build = jobs.takeWhile(_ == label)
+    assert(build.nonEmpty && !jobs.drop(build.size).contains(label), jobs)
+    checkIndex(dir)
+  }
+
+  test("the sf0.001 index has exactly one parquet file per non-empty cell") {
+    assume(new java.io.File(s"$sf/embeddings.parquet").exists())
+    SparkEntry.queries("q_knn_ivf_rule")(spark, sf).collect()
+    val tbl = tableOf(sf)
+    val loc = new java.io.File(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tbl)).location)
+    val cells = loc.listFiles().filter(_.getName.startsWith("ivf_cell=")).toSeq
+    val files = cells.map(c => c.getName -> c.listFiles().count(_.getName.endsWith(".parquet")))
+    val nonEmpty = spark.table(tbl).select("ivf_cell").distinct().count()
+    assert(cells.size === nonEmpty)
+    assert(files.forall(_._2 == 1), files)
   }
 }
