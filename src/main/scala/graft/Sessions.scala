@@ -83,8 +83,7 @@ object Sessions {
         (2 * 1024 * 1024).toString)
       // Catalog tables (bucketed-join demos) land in a per-process
       // temp warehouse: no repo pollution, no stale cross-run reads.
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse_").toString)
+      .config("spark.sql.warehouse.dir", Tables.tempDir("warehouse"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -28,6 +28,14 @@ import java.util.concurrent.ConcurrentHashMap
   * again for a schema it reads identically. On a real cluster these
   * paths would be catalog tables whose schema lives in the metastore;
   * the loader seam keeps that swap local.
+  *
+  * Everything derived from a fixture table (the IVF index, bucketed
+  * layouts, staged source formats, stream inputs, staged lake tables)
+  * is built once under one rule, [[ensureDerived]] / [[staged]]: it is
+  * reused while its source's [[TableId]] is unchanged and rebuilt when
+  * it is not. The rule owns every temp directory it makes
+  * ([[tempDir]]): a rebuild deletes the directory it supersedes, and
+  * the rest are deleted at JVM exit.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -63,26 +71,73 @@ object Tables {
     if (root.exists()) Some(TableId(path, walk(root, ""))) else None
   }
 
-  /** The source identities each derived catalog table was last built
-    * from in this JVM, by lower-cased table name. */
-  private val derivedFrom = new ConcurrentHashMap[String, Option[TableId]]()
+  /** What each derived artefact was last built from in this JVM: the
+    * source identity, and the directory the rule made for it (None for
+    * a catalog table). Keyed by ("table", lower-cased table name) or by
+    * (kind, source path) for a staged directory. */
+  private final case class Built(source: Option[TableId], dir: Option[String])
+  private val derivedFrom = new ConcurrentHashMap[(String, String), Built]()
 
-  /** Build-once rule for a catalog table derived from a fixture table
-    * (the IVF index, the bucketed join layouts): `build` (which writes
-    * `table`) runs unless `table` exists in the session catalog and its
-    * last build read `source` as it is now. A fresh session (new
-    * warehouse), a rewritten source, or another directory with the same
-    * basename (the usual table-name tag) therefore rebuilds. Builds
-    * are serialized JVM-wide. */
-  def ensureDerived(s: SparkSession, table: String, source: String)(
-      build: => Unit): Unit = synchronized {
+  /** The build-once rule (see the object's doc), shared by both
+    * artefact forms: `build` runs unless the artefact still exists and
+    * was built from `source` as it is now. Builds are serialized
+    * JVM-wide. */
+  private def derive(key: (String, String), source: String, exists: Built => Boolean)(
+      build: => Option[String]): Built = synchronized {
     val id = tableId(source)
-    val key = table.toLowerCase
-    if (!s.catalog.tableExists(table) || derivedFrom.get(key) != id) {
-      derivedFrom.remove(key)
-      build
-      derivedFrom.put(key, id)
+    Option(derivedFrom.get(key)).filter(b => b.source == id && exists(b)).getOrElse {
+      Option(derivedFrom.remove(key)).flatMap(_.dir).foreach(dropDir)
+      val b = Built(id, build)
+      derivedFrom.put(key, b)
+      b
     }
+  }
+
+  /** The rule for a catalog table (the IVF index, the bucketed join
+    * layouts): `build` writes `table`. A fresh session (new warehouse)
+    * or another directory with the same basename (the usual table-name
+    * tag) also rebuilds. */
+  def ensureDerived(s: SparkSession, table: String, source: String)(
+      build: => Unit): Unit =
+    derive(("table", table.toLowerCase), source, _ => s.catalog.tableExists(table)) {
+      build; None
+    }
+
+  /** The rule for a staged directory (a source re-exported in another
+    * format, a lake table staged from a fixture): `build` fills a fresh
+    * `graft_<kind>_` temp directory, which is returned. */
+  def staged(kind: String, source: String)(build: String => Unit): String =
+    derive((kind, source), source, _.dir.exists(new java.io.File(_).isDirectory)) {
+      val dir = tempDir(kind)
+      try build(dir) catch { case e: Throwable => dropDir(dir); throw e }
+      Some(dir)
+    }.dir.get
+
+  /** The source identity the catalog table `table` was last built from. */
+  private[graft] def builtFrom(table: String): Option[TableId] =
+    Option(derivedFrom.get(("table", table.toLowerCase))).flatMap(_.source)
+
+  /** The directory [[staged]] last built for (`kind`, `source`). */
+  private[graft] def stagedDir(kind: String, source: String): Option[String] =
+    Option(derivedFrom.get((kind, source))).flatMap(_.dir)
+
+  /** Every temp directory the rule owns and has not deleted yet. One
+    * JVM-exit hook deletes whatever is still live. */
+  private val liveDirs = ConcurrentHashMap.newKeySet[String]()
+  Runtime.getRuntime.addShutdownHook(new Thread(() => liveDirs.forEach(d => dropDir(d))))
+
+  /** A fresh `graft_<kind>_` temp directory, deleted by [[dropDir]] or
+    * at JVM exit. */
+  def tempDir(kind: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft_${kind}_").toString
+    liveDirs.add(d)
+    d
+  }
+
+  /** Deletes `dir` and everything under it. */
+  def dropDir(dir: String): Unit = {
+    graft.lake.ManifestTable.deleteRecursively(java.nio.file.Paths.get(dir))
+    liveDirs.remove(dir)
   }
 
   /** Session settings that change what parquet schema inference returns. */
@@ -183,15 +238,11 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  private val dirBytesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Total on-disk bytes of a fixture directory (memoized — the
-    * fixtures are immutable per run). Drives the loop-frame storage
-    * route; on a real cluster this is the catalog's table-level
+  /** Total on-disk bytes of a fixture directory (a driver-side
+    * listing, as every [[table]] read makes). Drives the loop-frame
+    * storage route; on a real cluster this is the catalog's table-level
     * sizeInBytes statistic. */
-  def fixtureBytes(d: String): Long =
-    dirBytesMemo.computeIfAbsent(d, diskBytes(_))
+  def fixtureBytes(d: String): Long = diskBytes(d)
 
   /** Loop-frame storage route (round 18): how a data-sized frame
     * that a query re-scans many times (graph-loop edge frames, the

@@ -15,18 +15,15 @@ import scala.math.BigDecimal.RoundingMode
   * for the single-JVM harness.
   */
 object IvfIndex {
-  /** `source` is the identity of the table the index was built from. */
-  final case class Entry(probes: Int, codebook: graft.functions.Codebook,
-      source: Option[graft.Tables.TableId]) {
+  final case class Entry(probes: Int, codebook: graft.functions.Codebook) {
     def centroids: Seq[(Long, Array[Double])] =
       codebook.cids.toSeq.zip(codebook.vecs)
   }
 
   private val reg = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
-  def register(table: String, probes: Int, codebook: graft.functions.Codebook,
-      source: Option[graft.Tables.TableId]): Unit =
-    reg.put(table.toLowerCase, Entry(probes, codebook, source))
+  def register(table: String, probes: Int, codebook: graft.functions.Codebook): Unit =
+    reg.put(table.toLowerCase, Entry(probes, codebook))
 
   def lookup(table: String): Option[Entry] = Option(reg.get(table.toLowerCase))
 

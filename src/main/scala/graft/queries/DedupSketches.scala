@@ -388,28 +388,17 @@ object DedupStages {
     * pairs (no top-k restriction — CC needs a SPANNING subgraph, not
     * a neighborhood sample; within a replica clique every member
     * pairs with the bucket's smallest ids, a star that connects the
-    * clique exactly — the round-15 connectivity argument). Distinct
-    * undirected pairs, post-screen volume ≤ n·16·cap. */
-  def nearDupEdgesBanded(docs: DataFrame, tau: Double, cap: Int)
-      : DataFrame =
-    bandedScoredPairs(docs, cap)
-      .withColumn("jac",
-        round(col("ix") / (col("na") + col("nb") - col("ix")), 6))
-      .filter(col("jac") >= tau)
-      .select(least(col("id1"), col("id2")).as("id1"),
-        greatest(col("id1"), col("id2")).as("id2"))
-      .distinct()
-
-  /** [[nearDupEdgesBanded]] WITHOUT the canonicalize+distinct pass —
-    * the CC consumer's form (round 19, verdict #1): min-label
+    * clique exactly — the round-15 connectivity argument),
+    * post-screen volume ≤ n·16·cap. The stream is neither
+    * canonicalized nor made distinct (round 19, verdict #1): min-label
     * propagation is invariant under edge MULTIPLICITY and
     * ORIENTATION (minLabelPropagate unions both orientations of
     * every row itself, and each round reduces neighbors by min(),
     * which ignores duplicates), so the global distinct() bought the
     * fixpoint nothing while re-shuffling the full clique-mass pair
     * stream — measured +54 s warm on the 100× fixture (89.3 s with
-    * distinct vs 35.4 s for this stream, ProbeStages dup_edges /
-    * dup_pairs_tau). The directed stream holds each unordered pair
+    * distinct vs 35.4 s for this stream, in a round-19 stage
+    * probe). The directed stream holds each unordered pair
     * at most twice (once per side that sees the other in its capped
     * bucket), in its minimal shared band only (the first_eq_index
     * screen), so the pinned edge list minLabelPropagate materializes
@@ -494,8 +483,6 @@ object DedupStages {
   */
 object DedupSketches {
 
-  private val P = 2147483647L // 2^31 - 1; (29-bit a)·(28-bit h) + b < 2^58
-
   val qs: Seq[Q] = Seq(
 
     Q("q_dedup_minhash",
@@ -507,7 +494,7 @@ object DedupSketches {
          |         ${h28Duck("'a#' || i")} * 2 + 1 AS a,
          |         ${h28Duck("'b#' || i")} AS b
          |       FROM range(32) t(i)),
-         |mh AS (SELECT doc_id, seed, min((a * h0 + b) % $P) AS mh
+         |mh AS (SELECT doc_id, seed, min((a * h0 + b) % ${DedupStages.P}) AS mh
          |       FROM ex CROSS JOIN sd GROUP BY doc_id, seed),
          |bd AS (SELECT doc_id, seed // 4 AS band,
          |         md5(string_agg(mh::VARCHAR, ',' ORDER BY seed)) AS bk

@@ -28,35 +28,18 @@ import graft.lake.ManifestTable
   */
 object Lakehouse {
 
-  /** q_table_commit's table is staged ONCE per (JVM, sf dir) — the
-    * Sources-staging pattern: an index/layout build is amortized
-    * across every query that reads it, so bench reps and repeated
-    * correctness runs reuse one root instead of leaking a fresh
-    * 3-snapshot table into /tmp per invocation. The staged root is
-    * removed on JVM exit. */
-  private val stagedCommitRoot =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // The lake tables below are staged once per fixture table
+  // (Tables.staged: restaged when their source changes), so a layout
+  // build is amortized across every query that reads it and bench
+  // reps reuse one root instead of writing a fresh table per call.
 
-  /** q_compaction_exec's staged table root (same amortization as
-    * [[stagedCommitRoot]]); exposed to the spec so it can count the
-    * physical files each version's fileset holds. */
-  private val stagedCompactRoot =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def compactRootFor(d: String): Option[String] =
-    Option(stagedCompactRoot.get(d))
-
-  /** Stage (once per JVM, sf) the 3-snapshot commit-log table shared
-    * by q_table_commit and q_snapshot_diff: v1 = full documents,
-    * v2 = latest-wins recrawl upsert of every 5th doc, v3 = delete
-    * of the French slice. Returns the table root. */
+  /** The 3-snapshot commit-log table shared by q_table_commit and
+    * q_snapshot_diff: v1 = full documents, v2 = latest-wins recrawl
+    * upsert of every 5th doc, v3 = delete of the French slice.
+    * Returns the table root. */
   private def ensureCommitTable(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    stagedCommitRoot.computeIfAbsent(d, { _ =>
-      val r = java.nio.file.Files
-        .createTempDirectory("graft_mtable_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        graft.lake.ManifestTable
-          .deleteRecursively(java.nio.file.Paths.get(r))))
+    Tables.staged("mtable", s"$d/documents.parquet") { r =>
       val docs = Tables.documents(s, d)
         .select("doc_id", "lang", "source", "n_chars")
       val t = ManifestTable.create(s, root = r, init = docs) // v1
@@ -68,60 +51,37 @@ object Lakehouse {
           .unionByName(batch)
       }
       t.commit(_.filter(col("lang") =!= "fr")) // v3: delete by pred
-      r
-    })
+    }
 
-  /** q_manifest_prune's staged table (same per-(JVM, sf)
-    * amortization as [[stagedCommitRoot]]): events
-    * range-partitioned on `value` into 8 files, committed with
-    * per-file min/max stats on `value` — the layout a time/range
-    * partitioned ingest produces, where manifest stats actually
-    * prune. */
-  private val stagedStatsRoot =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def statsRootFor(d: String): Option[String] =
-    Option(stagedStatsRoot.get(d))
+  /** q_manifest_prune's staged table: events range-partitioned on
+    * `value` into 8 files, committed with per-file min/max stats on
+    * `value` — the layout a time/range partitioned ingest produces,
+    * where manifest stats actually prune. */
   private def ensureStatsTable(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    stagedStatsRoot.computeIfAbsent(d, { _ =>
-      val r = java.nio.file.Files
-        .createTempDirectory("graft_mstats_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        graft.lake.ManifestTable
-          .deleteRecursively(java.nio.file.Paths.get(r))))
+    Tables.staged("mstats", s"$d/events.parquet") { r =>
       val ev = Tables.events(s, d)
         .select("event_id", "event_type", "value")
         .repartitionByRange(8, col("value"))
       ManifestTable.create(s, root = r, init = ev,
         statsCols = Seq("value"))
-      r
-    })
+    }
 
-  /** q_stats_prune_str / q_stats_point_lookup's staged table (same
-    * per-(JVM, sf) amortization): documents range-partitioned on
-    * (lang, doc_id) into 8 files, committed with per-file min/max
-    * stats on BOTH the string `lang` and the numeric `doc_id` —
-    * the clustered-ingest layout where string bounds (Iceberg's
-    * lower_bounds/upper_bounds) and id bounds both actually prune. */
-  private val stagedTypedStatsRoot =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def typedStatsRootFor(d: String): Option[String] =
-    Option(stagedTypedStatsRoot.get(d))
+  /** q_stats_prune_str / q_stats_point_lookup's staged table:
+    * documents range-partitioned on (lang, doc_id) into 8 files,
+    * committed with per-file min/max stats on BOTH the string `lang`
+    * and the numeric `doc_id` — the clustered-ingest layout where
+    * string bounds (Iceberg's lower_bounds/upper_bounds) and id bounds
+    * both actually prune. */
   private def ensureTypedStatsTable(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    stagedTypedStatsRoot.computeIfAbsent(d, { _ =>
-      val r = java.nio.file.Files
-        .createTempDirectory("graft_mtstats_").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        graft.lake.ManifestTable
-          .deleteRecursively(java.nio.file.Paths.get(r))))
+    Tables.staged("mtstats", s"$d/documents.parquet") { r =>
       val docs = Tables.documents(s, d)
         .select("doc_id", "lang", "source", "n_chars")
         .repartitionByRange(8, col("lang"), col("doc_id"))
       ManifestTable.create(s, root = r, init = docs,
         statsCols = Seq("lang", "doc_id"))
-      r
-    })
+    }
 
   val qs: Seq[Q] = Seq(
 
@@ -223,7 +183,7 @@ object Lakehouse {
     // resolves version 3 through the manifest chain and must equal
     // the oracle's direct computation of upsert∘delete over the base
     // table). `version` in the output is the read snapshot's id.
-    // The 3-commit build is staged once per (JVM, sf) — a buildStep,
+    // The 3-commit build is staged once (Tables.staged) — a buildStep,
     // like the IVF index — so the timed query is the manifest-chain
     // READ, and reps don't multiply tables in /tmp.
     // MANIFEST COLUMN-STATS PRUNING — the round-11 verdict's named
@@ -418,22 +378,16 @@ object Lakehouse {
     // compaction cost tracks the small-file backlog, not table size;
     // the whole-table rewrite here is one bin's worth. Timed query =
     // reading the compacted snapshot (the payoff: 8× fewer open
-    // files/footers per scan task). Staged once per (JVM, sf).
+    // files/footers per scan task). Staged once (Tables.staged).
     Q("q_compaction_exec",
       """SELECT doc_id, lang, source, n_chars, CAST(2 AS INT) AS version
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val root = stagedCompactRoot.computeIfAbsent(d, { _ =>
-        val r = java.nio.file.Files
-          .createTempDirectory("graft_compact_").toString
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          graft.lake.ManifestTable
-            .deleteRecursively(java.nio.file.Paths.get(r))))
+      val root = Tables.staged("compact", s"$d/documents.parquet") { r =>
         val docs = Tables.documents(s, d)
           .select("doc_id", "lang", "source", "n_chars")
         val t = ManifestTable.create(s, r, init = docs.repartition(16))
         t.commit(snap => snap.repartition(2)) // the compaction rewrite
-        r
-      })
+      }
       val t = ManifestTable.open(s, root)
       t.read()
         .withColumn("version", lit(t.currentVersion()).cast("int"))

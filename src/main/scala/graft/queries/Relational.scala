@@ -19,8 +19,7 @@ import graft.Tables
 object Relational {
 
   /** Per-JVM unique scratch dir for write-then-read-back queries. */
-  private lazy val sinkRoot: String =
-    java.nio.file.Files.createTempDirectory("graft_sink_").toString
+  private lazy val sinkRoot: String = Tables.tempDir("sink")
 
   val qs: Seq[Q] = Seq(
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -13,8 +12,8 @@ import graft.Tables
   * schema inference is a full extra pass over the data, so both
   * readers here take the canonical schema and never infer.
   *
-  * Each query stages the events table into the text format ONCE per
-  * JVM (a memoized export, like the streaming source staging), then
+  * Each query stages the events table into the text format once
+  * ([[Tables.staged]]: rebuilt when the events table changes), then
   * the declared operator is the read + aggregation. Timestamps
   * round-trip through an explicit micros-precision format — the
   * default CSV/JSON timestamp pattern only carries millis, which
@@ -29,16 +28,20 @@ object Sources {
 
   private val TsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** A staged copy of `d`'s `table`: `build` writes it to the path it
+    * is given, `<staged dir>/<name>`, which is returned. */
+  private def staged(kind: String, d: String, table: String = "events",
+      name: String = "events")(build: String => Unit): String =
+    Tables.staged(s"src_$kind", s"$d/$table.parquet")(dir => build(s"$dir/$name")) +
+      s"/$name"
+
   private def stage(fmt: String, s: SparkSession, d: String): String =
-    staged.computeIfAbsent(s"$fmt:$d", { _ =>
-      val dir = Files.createTempDirectory(s"graft_src_$fmt").toString + "/events"
+    staged(fmt, d) { dir =>
       Tables.events(s, d)
         .write.mode("overwrite")
         .option("header", "true").option("timestampFormat", TsFmt)
         .format(fmt).save(dir)
-      dir
-    })
+    }
 
   private def agg(df: DataFrame): DataFrame =
     df.groupBy("event_type")
@@ -97,8 +100,7 @@ object Sources {
          |  ${dsumSql("value")} AS total_value
          |FROM u GROUP BY source_tag
          |ORDER BY source_tag NULLS FIRST""".stripMargin) { (s, d) =>
-      val dir = staged.computeIfAbsent(s"evo:$d", { _ =>
-        val out = Files.createTempDirectory("graft_src_evo").toString + "/events"
+      val dir = staged("evo", d) { out =>
         val e = Tables.events(s, d)
         // generation 1: no source_tag column yet
         e.filter(col("event_id") % 2 === 0)
@@ -109,8 +111,7 @@ object Sources {
           .select(col("event_id"), col("user_id"), col("value"),
             concat(lit("s"), (col("user_id") % 3).cast("string")).as("source_tag"))
           .write.mode("append").parquet(out)
-        out
-      })
+      }
       s.read.option("mergeSchema", "true").parquet(dir)
         .groupBy("source_tag")
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
@@ -133,12 +134,10 @@ object Sources {
         |  round(CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE), 6) AS total_value
         |FROM events WHERE event_type = 'click'
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val dir = staged.computeIfAbsent(s"hive:$d", { _ =>
-        val out = Files.createTempDirectory("graft_src_hive").toString + "/events"
+      val dir = staged("hive", d) { out =>
         Tables.events(s, d).write.mode("overwrite")
           .partitionBy("event_type").parquet(out)
-        out
-      })
+      }
       s.read.parquet(dir)
         .filter(col("event_type") === "click")
         .groupBy(date_trunc("hour", col("ts")).as("h"))
@@ -182,9 +181,7 @@ object Sources {
     // corrupt the line silently (split yields extra fields, casts
     // turn them into plausible NULLs).
     Q("q_source_text", aggSql) { (s, d) =>
-      val dir = staged.computeIfAbsent(s"text:$d", { _ =>
-        val out = Files.createTempDirectory("graft_src_text").toString +
-          "/events"
+      val dir = staged("text", d) { out =>
         def tsv(c: Column, name: String): Column = coalesce(
           when(c.rlike("[\\t\\n\\r]"), raise_error(concat(
             lit(s"q_source_text: literal tab/newline in `$name` " +
@@ -200,8 +197,7 @@ object Sources {
             coalesce(col("value").cast("string"), lit("")),
             tsv(col("props"), "props")).as("value"))
           .write.mode("overwrite").text(out)
-        out
-      })
+      }
       s.read.text(dir)
         .select(split(col("value"), "\t", -1).as("f"))
         .select(
@@ -222,8 +218,7 @@ object Sources {
       """SELECT doc_id, octet_length(encode(text)) AS n_bytes,
         |  md5(text) AS digest
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val dir = staged.computeIfAbsent(s"bin:$d", { _ =>
-        val out = Files.createTempDirectory("graft_src_bin").toString + "/docs"
+      val dir = staged("bin", d, "documents", "docs") { out =>
         // Executor-side writes go through the Hadoop FileSystem API
         // (not java.nio): on a cluster `out` is a shared-FS URI and
         // each task writes THERE, where the driver's binaryFile read
@@ -250,8 +245,7 @@ object Sources {
               finally os.close()
             }
           }
-        out
-      })
+      }
       s.read.format("binaryFile").load(dir)
         .select(
           regexp_extract(col("path"), "doc_(\\d+)\\.txt$", 1).cast("long")

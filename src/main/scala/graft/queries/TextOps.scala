@@ -198,11 +198,11 @@ object TextOps {
       // edge; within a replica clique every member pairs with the
       // bucket's smallest ids (a connecting star), so cluster
       // assignment is exact in the regime that creates oversized
-      // buckets (DedupStages.nearDupEdgesBanded scaladoc). Round 19:
-      // the UNDEDUPED ≥τ candidate stream — min-label propagation is
-      // multiplicity/orientation-invariant, so the old distinct()
-      // pass re-shuffled the clique-mass pair stream for nothing
-      // (+54 s at 100×; nearDupEdgeCandidatesBanded scaladoc).
+      // buckets. Round 19: the UNDEDUPED ≥τ candidate stream —
+      // min-label propagation is multiplicity/orientation-invariant,
+      // so the old distinct() pass re-shuffled the clique-mass pair
+      // stream for nothing (+54 s at 100×; both arguments are in the
+      // DedupStages.nearDupEdgeCandidatesBanded scaladoc).
       val pairs = DedupStages.pairRoute(s, d) match {
         case "banded" => DedupStages.nearDupEdgeCandidatesBanded(
           docs, tau = 0.6, DedupStages.pairBucketCap(s))

@@ -70,8 +70,7 @@ object VectorSearch {
   private def ensureIvfIndex(s: SparkSession, d: String): String = {
     val tbl = "graft_ivf_" +
       new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val source = s"$d/embeddings.parquet"
-    Tables.ensureDerived(s, tbl, source) {
+    Tables.ensureDerived(s, tbl, s"$d/embeddings.parquet") {
       val sc = s.sparkContext
       val caller = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(s"graft ivf build $tbl")
@@ -83,19 +82,20 @@ object VectorSearch {
             ivfCell(v, cb).as("ivf_cell"))
           .hint("rebalance", col("ivf_cell"))
           .write.mode("overwrite").partitionBy("ivf_cell").saveAsTable(tbl)
-        graft.plans.IvfIndex.register(tbl, probes = IvfProbes, cb,
-          source = Tables.tableId(source))
+        graft.plans.IvfIndex.register(tbl, probes = IvfProbes, cb)
       } finally sc.setLocalProperty("spark.job.description", caller)
     }
     tbl
   }
 
   /** The query vector `id` as a driver-local double array (the
-    * reference embeds the query before searching, cli.py:109-121). */
+    * reference embeds the query before searching, cli.py:109-121).
+    * One `collect` job over every file: `head` would scan one
+    * partition first and, on a miss, run a second job for the rest. */
   private def queryArray(s: SparkSession, d: String, id: Long): Array[Double] =
     Tables.embeddings(s, d).filter(col("vec_id") === id)
       .select(col("embedding").cast("array<double>"))
-      .head.getSeq[Double](0).toArray
+      .collect().head.getSeq[Double](0).toArray
 
   /** 1-row DataFrame holding the query vector (stand-in for the
     * driver-local query-image/text embedding, photo_vector_search.py:160). */

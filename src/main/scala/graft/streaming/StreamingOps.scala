@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.Sessions
+import graft.{Sessions, Tables}
 import graft.lake.ManifestTable
 
 /** Structured Streaming harness for the q_stream_* queries.
@@ -32,16 +32,16 @@ object StreamingOps {
 
   /** The streaming file source requires a DIRECTORY to watch (it is
     * a feed, not a file); the testdata ships one parquet file per
-    * table, so stage it into a per-sf temp dir once per JVM.
+    * table, so stage a copy into a temp dir once
+    * ([[graft.Tables.staged]]: re-staged when `events` changes).
     * `events.parquet` itself comes in two vintages: the driver's
     * single pyarrow FILE, and a Spark-written DIRECTORY of part
     * files (ScaleData's large-SF fixtures) — stage whichever exists
     * (a shallow `Files.copy` of a directory copies an EMPTY dir, so
     * the directory vintage enumerates and copies its part files). */
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def eventsDir(d: String): String =
-    staged.computeIfAbsent(d, { _ =>
-      val tmp = Files.createTempDirectory("graft_events_src_")
+    Tables.staged("events_src", s"$d/events.parquet") { dir =>
+      val tmp = java.nio.file.Paths.get(dir)
       val src = java.nio.file.Paths.get(s"$d/events.parquet")
       if (Files.isDirectory(src)) {
         val st = Files.list(src)
@@ -59,8 +59,7 @@ object StreamingOps {
         } finally st.close()
         require(i > 0, s"no parquet part files under $src")
       } else Files.copy(src, tmp.resolve("events.parquet"))
-      tmp.toString
-    })
+    }
 
   /** readStream over the events table with the same ts
     * normalization as the batch loader ([[graft.Tables.normalizeTs]]
@@ -94,9 +93,11 @@ object StreamingOps {
     * the genuinely incremental path is q_stream_upsert's foreachBatch
     * (latest-wins merge, safe at any batch count). A zero-batch drain
     * returns an empty frame with the stream's schema instead of
-    * throwing on a missing sink dir. */
+    * throwing on a missing sink dir. The checkpoint is deleted once
+    * the query ends (every call starts a fresh query); the sink, which
+    * backs the returned frame, is deleted at JVM exit. */
   def drain(s: SparkSession, streamed: DataFrame, mode: String): DataFrame = {
-    val out = Files.createTempDirectory("graft_stream_").toString
+    val out = Tables.tempDir("stream")
     val sink = s"$out/data"
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     // The query runs on the child session the stream was built on;
@@ -121,7 +122,7 @@ object StreamingOps {
       }
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    try q.awaitTermination() finally Tables.dropDir(s"$out/ckpt")
     val n = batches.get()
     if (n > 1 && mode == "update")
       throw new IllegalStateException(
@@ -152,11 +153,13 @@ object StreamingOps {
     * O(files) manifest write). `vacuumKeep` bounds the commit chain:
     * after each commit, manifests older than the newest `vacuumKeep`
     * versions and their unreferenced filesets are collected, so an
-    * unbounded stream holds bounded storage. */
+    * unbounded stream holds bounded storage. The checkpoint is deleted
+    * once the query ends; a default table root (no `tableRootOpt`)
+    * backs the returned frame and is deleted at JVM exit. */
   def drainUpsert(s: SparkSession, streamed: DataFrame,
       keys: Seq[String], ord: Seq[String],
       vacuumKeep: Int = 2, tableRootOpt: Option[String] = None): DataFrame = {
-    val root = Files.createTempDirectory("graft_upsert_")
+    val root = java.nio.file.Paths.get(Tables.tempDir("upsert"))
     val tableRoot = tableRootOpt.getOrElse(root.resolve("table").toString)
     val committed = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = streamed.writeStream
@@ -183,7 +186,9 @@ object StreamingOps {
       }
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    try q.awaitTermination()
+    finally Tables.dropDir(if (tableRootOpt.isDefined) root.toString
+      else root.resolve("ckpt").toString)
     if (committed.get() == 0)
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         streamed.schema)

@@ -165,7 +165,7 @@ class LakeStatsPruneSpec extends SparkTestBase {
     assert(out.toSeq === expect.toSeq)
     // The staged table's layout must actually prune for the query's
     // range — this is the "plan provably skips files" pin.
-    val root = graft.queries.Lakehouse.statsRootFor(sf).get
+    val root = graft.Tables.stagedDir("mstats", s"$sf/events.parquet").get
     val t = ManifestTable.open(spark, root)
     val (kept, all) = t.pruneFiles("value", 80, 160)
     assert(all.length >= 4 && kept.length < all.length,
@@ -263,7 +263,7 @@ class LakeStatsPruneSpec extends SparkTestBase {
     val pt = SparkEntry.queries("q_stats_point_lookup")(spark, sf)
       .collect()
     assert(pt.length === 1 && pt.head.getLong(0) === 7L)
-    val root = graft.queries.Lakehouse.typedStatsRootFor(sf).get
+    val root = graft.Tables.stagedDir("mtstats", s"$sf/documents.parquet").get
     val t = ManifestTable.open(spark, root)
     val (keptS, allS) = t.pruneFilesString("lang", "de", "en")
     assert(allS.length >= 4 && keptS.length < allS.length,

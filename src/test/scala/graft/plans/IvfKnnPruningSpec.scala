@@ -130,7 +130,7 @@ class IvfKnnPruningSpec extends SparkTestBase {
     val source = graft.Tables.embeddings(spark, b).select("vec_id", "embedding")
       .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
     assert(indexed === source)
-    assert(IvfIndex.lookup("graft_ivf_ivf_reused").get.source ===
+    assert(graft.Tables.builtFrom("graft_ivf_ivf_reused") ===
       graft.Tables.tableId(s"$b/embeddings.parquet"))
   }
 
@@ -206,7 +206,8 @@ class IvfKnnPruningSpec extends SparkTestBase {
     checkIndex(sf)
   }
 
-  test("a seeded 4096 x 64 four-file index equals the reference build") {
+  /** A fresh seeded 4 096 x 64 store in four files. */
+  private def seededStore(): String = {
     val s = spark
     import s.implicits._
     val r = new scala.util.Random(4096)
@@ -215,6 +216,11 @@ class IvfKnnPruningSpec extends SparkTestBase {
     (0 until 4096).map(i => (i.toLong, Seq.fill(64)(r.nextGaussian().toFloat), i % 7))
       .toDF("vec_id", "embedding", "label").repartition(4)
       .write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  test("a seeded 4096 x 64 four-file index equals the reference build") {
+    val dir = seededStore()
     // A fresh directory builds. The build's jobs run first and all carry
     // its label; the probe query's jobs that follow do not.
     val jobs = jobDescriptionsDuring(
@@ -223,6 +229,14 @@ class IvfKnnPruningSpec extends SparkTestBase {
     val build = jobs.takeWhile(_ == label)
     assert(build.nonEmpty && !jobs.drop(build.size).contains(label), jobs)
     checkIndex(dir)
+  }
+
+  test("a warm q_knn_ivf_rule on the seeded four-file store runs two jobs") {
+    val dir = seededStore()
+    val q = SparkEntry.queries("q_knn_ivf_rule")
+    q(spark, dir).collect() // builds the index
+    // One job collects the query vector, one runs the probed top-k.
+    assert(jobsDuring(q(spark, dir).collect()) === 2)
   }
 
   test("the sf0.001 index has exactly one parquet file per non-empty cell") {

@@ -115,7 +115,7 @@ class Round7OpsSpec extends SparkTestBase {
     val n = Tables.documents(spark, sf).count()
     assert(out.length.toLong === n, "compaction must not change row count")
     assert(out.forall(_.getAs[Int]("version") === 2))
-    val root = Lakehouse.compactRootFor(sf)
+    val root = Tables.stagedDir("compact", s"$sf/documents.parquet")
       .getOrElse(fail("staged compaction root missing"))
     def files(v: Int): Int =
       Option(new java.io.File(root, "data").listFiles()).getOrElse(Array.empty)

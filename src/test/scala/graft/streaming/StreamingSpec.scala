@@ -166,6 +166,25 @@ class StreamingSpec extends SparkTestBase {
       s"vacuum left expired filesets: ${filesets.mkString(",")}")
   }
 
+  test("repeated drainUpsert calls into a given table root leave no temp directory") {
+    val s = spark
+    import s.implicits._
+    val watched = java.nio.file.Files.createTempDirectory("graft_upsert_flat_")
+    Seq((1L, "a", 10L, 1.0), (2L, "b", 11L, 2.0)).toDF("k", "g", "ver", "v")
+      .coalesce(1).write.mode("append").parquet(watched.toString)
+    val schema = s.read.parquet(watched.toString).schema
+    val tables = java.nio.file.Files.createTempDirectory("graft_upsert_flat_tables_")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def live: Int = tmp.listFiles().count(_.getName.matches("graft_upsert_[0-9]+"))
+    val before = live
+    (1 to 3).foreach { i =>
+      StreamingOps.drainUpsert(s, s.readStream.schema(schema).parquet(watched.toString),
+        keys = Seq("k", "g"), ord = Seq("ver"),
+        tableRootOpt = Some(tables.resolve(s"table-$i").toString))
+      assert(live === before, s"after call $i")
+    }
+  }
+
   test("drain fails loudly on multi-batch update mode instead of duplicating") {
     val s = spark
     import s.implicits._
