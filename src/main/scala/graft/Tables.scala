@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import java.util.concurrent.ConcurrentHashMap
+import scala.reflect.ClassTag
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md /
   * FIXTURES.md). One parquet file per table under the scale-factor
@@ -30,12 +32,14 @@ import java.util.concurrent.ConcurrentHashMap
   * the loader seam keeps that swap local.
   *
   * Everything derived from a fixture table (the IVF index, bucketed
-  * layouts, staged source formats, stream inputs, staged lake tables)
-  * is built once under one rule, [[ensureDerived]] / [[staged]]: it is
-  * reused while its source's [[TableId]] is unchanged and rebuilt when
-  * it is not. The rule owns every temp directory it makes
-  * ([[tempDir]]): a rebuild deletes the directory it supersedes, and
-  * the rest are deleted at JVM exit.
+  * layouts, staged source formats, stream inputs, staged lake tables,
+  * the banded dedup pairs) is built once under one rule,
+  * [[ensureDerived]] / [[staged]] / [[pinned]]: it is reused while its
+  * source's [[TableId]] is unchanged and rebuilt when it is not. The
+  * rule owns every temp directory it makes ([[tempDir]]) and every
+  * frame it pins: a rebuild deletes the directory or unpins the frame
+  * it supersedes, and the remaining directories are deleted at JVM
+  * exit.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -72,25 +76,38 @@ object Tables {
   }
 
   /** What each derived artefact was last built from in this JVM: the
-    * source identity, and the directory the rule made for it (None for
-    * a catalog table). Keyed by ("table", lower-cased table name) or by
-    * (kind, source path) for a staged directory. */
-  private final case class Built(source: Option[TableId], dir: Option[String])
+    * source identity, and the artefact the rule made for it. Keyed by
+    * ("table", lower-cased table name) or by (kind, source path). */
+  private final case class Built(source: Option[TableId], artefact: Artefact)
+  private sealed trait Artefact
+  private case object CatalogTable extends Artefact
+  private final case class StagedDir(dir: String) extends Artefact
+  private final case class PinnedFrame(frame: DataFrame, variant: String) extends Artefact
   private val derivedFrom = new ConcurrentHashMap[(String, String), Built]()
 
-  /** The build-once rule (see the object's doc), shared by both
-    * artefact forms: `build` runs unless the artefact still exists and
-    * was built from `source` as it is now. Builds are serialized
-    * JVM-wide. */
-  private def derive(key: (String, String), source: String, exists: Built => Boolean)(
-      build: => Option[String]): Built = synchronized {
+  /** The build-once rule (see the object's doc), shared by every
+    * artefact form: `build` runs unless the artefact is still `live`
+    * and was built from `source` as it is now. A source with no
+    * identity (not a local path) is rebuilt on every call: nothing
+    * shows it unchanged. A rebuild first releases the artefact it
+    * replaces. Builds are serialized JVM-wide. */
+  private def derive[A <: Artefact: ClassTag](key: (String, String), source: String,
+      live: A => Boolean)(build: => A): A = synchronized {
     val id = tableId(source)
-    Option(derivedFrom.get(key)).filter(b => b.source == id && exists(b)).getOrElse {
-      Option(derivedFrom.remove(key)).flatMap(_.dir).foreach(dropDir)
-      val b = Built(id, build)
-      derivedFrom.put(key, b)
-      b
+    derivedFrom.get(key) match {
+      case Built(`id`, a: A) if id.isDefined && live(a) => a
+      case _ =>
+        Option(derivedFrom.remove(key)).foreach(b => release(b.artefact))
+        val a = build
+        derivedFrom.put(key, Built(id, a))
+        a
     }
+  }
+
+  private def release(a: Artefact): Unit = a match {
+    case StagedDir(d) => dropDir(d)
+    case PinnedFrame(f, _) => if (!f.sparkSession.sparkContext.isStopped) unpin(f)
+    case CatalogTable => ()
   }
 
   /** The rule for a catalog table (the IVF index, the bucketed join
@@ -99,19 +116,45 @@ object Tables {
     * tag) also rebuilds. */
   def ensureDerived(s: SparkSession, table: String, source: String)(
       build: => Unit): Unit =
-    derive(("table", table.toLowerCase), source, _ => s.catalog.tableExists(table)) {
-      build; None
+    derive(("table", table.toLowerCase), source,
+        (_: CatalogTable.type) => s.catalog.tableExists(table)) {
+      build; CatalogTable
     }
 
   /** The rule for a staged directory (a source re-exported in another
     * format, a lake table staged from a fixture): `build` fills a fresh
     * `graft_<kind>_` temp directory, which is returned. */
   def staged(kind: String, source: String)(build: String => Unit): String =
-    derive((kind, source), source, _.dir.exists(new java.io.File(_).isDirectory)) {
+    derive((kind, source), source, (a: StagedDir) => new java.io.File(a.dir).isDirectory) {
       val dir = tempDir(kind)
       try build(dir) catch { case e: Throwable => dropDir(dir); throw e }
-      Some(dir)
-    }.dir.get
+      StagedDir(dir)
+    }.dir
+
+  /** The rule for a pinned frame (the banded dedup pairs): `build`
+    * returns the frame pinned ([[loopPin]]) and materialized, and its
+    * jobs run under the description `graft <kind> <source>`. The frame
+    * is reused while `source`'s identity and `variant` (the build's
+    * other parameters) are unchanged, its pin is still held, and its
+    * SparkContext is `s`'s and running; a stopped and rebuilt session
+    * builds afresh. A rebuild unpins the frame it replaces, so each
+    * (kind, source) holds at most one. */
+  def pinned(s: SparkSession, kind: String, source: String, variant: String)(
+      build: => DataFrame): DataFrame =
+    derive((kind, source), source, (p: PinnedFrame) => p.variant == variant &&
+        (p.frame.sparkSession.sparkContext eq s.sparkContext) && isPinned(p.frame)) {
+      PinnedFrame(describingJobs(s, s"graft $kind $source")(build), variant)
+    }.frame
+
+  /** Runs `body` with `s`'s Spark jobs described as `desc` (what a
+    * listener attributes them to), then restores the caller's
+    * description. */
+  def describingJobs[T](s: SparkSession, desc: String)(body: => T): T = {
+    val sc = s.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setLocalProperty("spark.job.description", caller)
+  }
 
   /** The source identity the catalog table `table` was last built from. */
   private[graft] def builtFrom(table: String): Option[TableId] =
@@ -119,7 +162,7 @@ object Tables {
 
   /** The directory [[staged]] last built for (`kind`, `source`). */
   private[graft] def stagedDir(kind: String, source: String): Option[String] =
-    Option(derivedFrom.get((kind, source))).flatMap(_.dir)
+    Option(derivedFrom.get((kind, source))).map(_.artefact).collect { case StagedDir(d) => d }
 
   /** Every temp directory the rule owns and has not deleted yet. One
     * JVM-exit hook deletes whatever is still live. */
@@ -275,6 +318,23 @@ object Tables {
     s.conf.set("spark.graft.loop.lastStorage",
       if (columnar) "columnar" else "checkpoint")
     if (columnar) df.persist() else df.localCheckpoint(eager = false)
+  }
+
+  /** Releases a frame pinned by [[loopPin]] or [[loopStep]]: the
+    * checkpoint's blocks, or the columnar cache entry. */
+  def unpin(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => df.unpersist(blocking = false)
+  }
+
+  /** Whether `df`'s pin (see [[unpin]]) is still held in a running
+    * SparkContext — a cache clear or a stopped session drops it. */
+  private def isPinned(df: DataFrame): Boolean = {
+    val sc = df.sparkSession.sparkContext
+    !sc.isStopped && (df.queryExecution.logical match {
+      case r: LogicalRDD => sc.getPersistentRDDs.contains(r.rdd.id)
+      case _ => df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    })
   }
 
   /** The loop-storage scale gate shared by [[loopPin]] and

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import TextKit._
 
@@ -30,9 +31,12 @@ object DedupStages {
     * fresh JVM and 5–6 s mid-sweep (the sq_l2_distance pathology).
     * The kernel's output is string-identical (spec-pinned against
     * the HOF form), so every downstream md5 hash and the oracle
-    * compare are unchanged. One barrier keeps scan parallelism. */
+    * compare are unchanged. The kernel runs after [[fanout]], so a
+    * one-file scan does not shingle the corpus in one task (a no-op
+    * when the scan is already wide); one barrier after it keeps the
+    * shingle arrays from being inlined into later lambdas. */
   def shingleSets(docs: DataFrame): DataFrame =
-    barrier(docs.select(col("doc_id"),
+    barrier(fanout(docs).select(col("doc_id"),
       expr("word_shingles(lower(text), 3, true)").as("s")))
 
   /** (doc_id, band, bk): 8 bands × 4 rows of 32 minhash permutations,
@@ -127,10 +131,14 @@ object DedupStages {
     * STOPS at the fixpoint (round-10 verdict #2: q_dbscan's core
     * graph converges in 5 rounds at sf0.1 while the old 16-round
     * budget spent ~⅔ of its cost idle, 211 s at 10×). Detection is
-    * O(labels) per round: labels only DECREASE (every assignment is
-    * a min), so Σlab — summed in DECIMAL(38,0), no wraparound —
-    * strictly decreases until the fixpoint; an unchanged sum IS
-    * convergence. The fixpoint equals the full RECURSIVE oracle by
+    * O(labels) per round and costs no job of its own: labels only
+    * DECREASE (every assignment is a min), so Σlab — summed in
+    * DECIMAL(38,0), no wraparound — strictly decreases until the
+    * fixpoint; an unchanged sum IS convergence. Each round's sum is
+    * observed (`Dataset.observe`) inside the eager checkpoint job of
+    * its jump step, and the initial sum inside round 1's propagate
+    * checkpoint, so a round runs exactly its two checkpoints. The
+    * fixpoint equals the full RECURSIVE oracle by
     * construction, so the budget-outgrown failure mode of the fixed
     * unroll is gone; `maxRounds` (default 64 ⇒ diameter ≥ 2^64)
     * only guards a cyclic-update impossibility. Each round's
@@ -145,15 +153,15 @@ object DedupStages {
     * Beyond").
     */
   def minLabelPropagate(nodes: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 64): DataFrame =
-    minLabelPropagateCounted(nodes, pairs, maxRounds)._1
+      maxRounds: Int = 64, pairsPinned: Boolean = false): DataFrame =
+    minLabelPropagateCounted(nodes, pairs, maxRounds, pairsPinned)._1
 
   /** [[minLabelPropagate]] plus the number of rounds executed —
     * which is the fixpoint round count + 1 (the final round proves
     * convergence by reproducing the previous sum). Exposed so specs
     * can pin the measured convergence instead of trusting a budget. */
   def minLabelPropagateCounted(nodes: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 64): (DataFrame, Int) = {
+      maxRounds: Int = 64, pairsPinned: Boolean = false): (DataFrame, Int) = {
     // Pin the pair list ONCE (round 19, verdict #1): the undirected
     // edge view references `pairs` TWICE (one per orientation), and
     // the old eager union checkpoint re-ran the whole upstream pair
@@ -169,8 +177,10 @@ object DedupStages {
     // uncomputed RDD from two leaf stages at once and their tasks
     // serialize on the per-partition cache locks — 282 s warm vs
     // ~125 s eager at the 100× fixture; Tables.loopStep scaladoc.)
+    // A pair frame the caller already pinned and materialized
+    // (`pairsPinned`, the banded dedup pairs) is read as it is.
     val p0 = pairs.select(col("id1").as("a"), col("id2").as("b"))
-      .transform(graft.Tables.loopStep)
+      .transform(p => if (pairsPinned) p else graft.Tables.loopStep(p))
     // Self-loops fold "min over self AND neighbors" into ONE
     // edge join + groupBy per round (no union with the label frame —
     // a union whose second child joins through the first trips
@@ -181,13 +191,17 @@ object DedupStages {
     val edges = p0
       .unionByName(p0.select(col("b").as("a"), col("a").as("b")))
       .unionByName(nodes.select(col("node").as("a"), col("node").as("b")))
-    def labSum(l: DataFrame): Option[java.math.BigDecimal] =
-      Option(l.agg(sum(col("lab")
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .head.getDecimal(0))
-    val init = nodes.select(col("node"), col("node").as("lab"))
+    // Σlab rides along in checkpoint jobs that run anyway: `observe`
+    // computes `m` over the rows such a job reads, read after it.
+    def observed(l: DataFrame, m: Column): (DataFrame, Observation) = {
+      val o = Observation()
+      (l.observe(o, m.as("m")), o)
+    }
+    val labSum = sum(col("lab").cast(DecimalType(38, 0)))
+    def sumOf(o: Observation) = Option(o.get("m").asInstanceOf[java.math.BigDecimal])
+    val (init, initObs) = observed(nodes.select(col("node"), col("node").as("lab")), labSum)
     var l = init
-    var prevSum = labSum(init)
+    var prevSum: Option[java.math.BigDecimal] = None
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
@@ -196,17 +210,25 @@ object DedupStages {
       // stage (measured ~2× the per-round cost). Eager via
       // Tables.loopStep — serialized node-sized blocks above the
       // scale gate, the r17 deserialized path below it.
-      val prop = edges.join(l, col("a") === col("node"))
+      val propagated = edges.join(l, col("a") === col("node"))
         .groupBy("b").agg(min("lab").as("lab"))
         .select(col("b").as("node"), col("lab"))
-        .transform(graft.Tables.loopStep)
-      l = prop.as("x")
+      // Round 1 also counts its rows, above the join. No rows means no
+      // nodes (each node has its self-loop): the optimizer or AQE then
+      // replaces the join by an empty relation, the initial sum's
+      // observation leaves the plan and reports nothing, and the sum
+      // of no labels is None.
+      val rows = if (round == 0) Some(observed(propagated, count(lit(1)))) else None
+      val prop = rows.fold(propagated)(_._1).transform(graft.Tables.loopStep)
+      rows.foreach { case (_, o) =>
+        prevSum = if (o.get("m") == 0L) None else sumOf(initObs) }
+      val (jumped, jumpObs) = observed(prop.as("x")
         .join(prop.select(col("node").as("ln"), col("lab").as("lab2")).as("y"),
           col("x.lab") === col("y.ln"))
-        .select(col("x.node").as("node"), col("y.lab2").as("lab"))
-        .transform(graft.Tables.loopStep)
+        .select(col("x.node").as("node"), col("y.lab2").as("lab")), labSum)
+      l = jumped.transform(graft.Tables.loopStep)
       round += 1
-      val s = labSum(l)
+      val s = sumOf(jumpObs)
       converged = (s, prevSum) match {
         case (Some(a), Some(b)) => a.compareTo(b) == 0
         case (None, None) => true
@@ -219,6 +241,50 @@ object DedupStages {
         s"moving after maxRounds=$maxRounds — result may be a partial " +
         "fixpoint (the oracle hash-compare will fail loudly if so)")
     (l, round)
+  }
+
+  /** The pinned (doc_id, hs, mhs, band, mh) banded frame feeding
+    * [[bandedScoredPairs]]'s self-join.
+    *
+    * ONE bucket-key exchange, MATERIALIZED: the capped build side
+    * and the probe side both consume this frame — without the
+    * pin each re-derives the whole scan→shingle→md5→minhash
+    * pipeline through its OWN exchange (round-16 plan audit: two
+    * identical 9-node subtrees; ReuseExchange can't fire because
+    * the sides' null filters differ), doubling the corpus hash work
+    * and the shuffle. The pin preserves the (band, mh)
+    * partitioning, so the window and the join add no exchange —
+    * the tfidf cluster route's checkpointed-posting discipline.
+    *
+    * Each shingle is hashed once: the h28 array is computed below
+    * the barrier and the 16 permutations read it above, so Catalyst
+    * cannot inline the hashing back into the per-permutation lambda
+    * (16 md5s per shingle). */
+  def bandedFrame(docs: DataFrame): DataFrame = {
+    val sh = shingleSets(docs)
+    val aArr = "array(" + (0 until 16).map(aCoef).mkString(",") + ")"
+    val bArr = "array(" + (0 until 16).map(bCoef).mkString(",") + ")"
+    val hashed = barrier(sh.filter(size(col("s")) >= 1).select(col("doc_id"),
+      expr(s"array_sort(transform(s, x -> ${TextKit.h60("x")}))").as("hs"),
+      expr(s"transform(s, x -> ${h28("x")})").as("h28s")))
+    val hs = hashed.select(col("doc_id"), col("hs"), expr(
+      s"""transform(sequence(0, 15), i ->
+         |  array_min(transform(h28s, h ->
+         |    (element_at($aArr, i + 1) * h + element_at($bArr, i + 1)) % $P)))""".stripMargin)
+      .as("mhs"))
+    val banded = hs.select(col("doc_id"), col("hs"), col("mhs"),
+      posexplode(col("mhs")).as(Seq("band", "mh")))
+    // Loop-frame storage route (Tables.loopPin, round 18) — above
+    // the fixture gate this is a columnar persist: the frame is
+    // ~8 M rows each dragging a full h60 array — deserialized
+    // checkpoint blocks held one UnsafeRow + byte[] PER ROW in
+    // old-gen (the sweep-variance GC mechanism, BENCH.md round 18);
+    // the columnar cache stores compressed batches at a fraction of
+    // the bytes and both consumers (cap window + probe side) scan it
+    // vectorized. InMemoryTableScan preserves the (band, mh)
+    // partitioning exactly as LogicalRDD did.
+    banded.repartition(col("band"), col("mh"))
+      .transform(graft.Tables.loopPin)
   }
 
   /** BOUNDED banded scored candidates — the pair-output dedup
@@ -254,53 +320,16 @@ object DedupStages {
     *     exchange un-reduced.
     *
     * Returns DIRECTED scored candidates (id1, id2, ix, na, nb),
-    * ix ≥ 1, id1 ≠ id2; duplicates across bands NOT deduped (heap
-    * folds dedup by id2; CC edge consumers distinct() after their
-    * τ screen, at post-screen volume). */
-  /** The checkpointed (doc_id, hs, mhs, band, mh) banded frame
-    * feeding [[bandedScoredPairs]]'s self-join — factored out so the
-    * round-18 stage profile can time the band build separately from
-    * the bucket join (verdict #3).
-    *
-    * ONE bucket-key exchange, MATERIALIZED: the capped build side
-    * and the probe side both consume this frame — without the
-    * checkpoint each re-derives the whole scan→shingle→md5→minhash
-    * pipeline through its OWN exchange (round-16 plan audit: two
-    * identical 9-node subtrees; ReuseExchange can't fire because
-    * the sides' null filters differ), doubling the corpus hash work
-    * and the shuffle. LogicalRDD preserves the (band, mh)
-    * partitioning, so the window and the join add no exchange —
-    * the tfidf cluster route's checkpointed-posting discipline. */
-  def bandedFrame(docs: DataFrame): DataFrame = {
-    val sh = shingleSets(docs)
-    val aArr = "array(" + (0 until 16).map(aCoef).mkString(",") + ")"
-    val bArr = "array(" + (0 until 16).map(bCoef).mkString(",") + ")"
-    val hs = barrier(sh.filter(size(col("s")) >= 1).select(col("doc_id"),
-      expr(s"array_sort(transform(s, x -> ${TextKit.h60("x")}))").as("hs"),
-      expr(
-        s"""transform(sequence(0, 15), i ->
-           |  array_min(transform(transform(s, x -> ${h28("x")}), h ->
-           |    (element_at($aArr, i + 1) * h + element_at($bArr, i + 1)) % $P)))""".stripMargin)
-        .as("mhs")))
-    val banded = hs.select(col("doc_id"), col("hs"), col("mhs"),
-      posexplode(col("mhs")).as(Seq("band", "mh")))
-    // Loop-frame storage route (Tables.loopPin, round 18) — above
-    // the fixture gate this is a columnar persist: the frame is
-    // ~8 M rows each dragging a full h60 array — deserialized
-    // checkpoint blocks held one UnsafeRow + byte[] PER ROW in
-    // old-gen (the sweep-variance GC mechanism, BENCH.md round 18);
-    // the columnar cache stores compressed batches at a fraction of
-    // the bytes and both consumers (cap window + probe side) scan it
-    // vectorized. InMemoryTableScan preserves the (band, mh)
-    // partitioning exactly as LogicalRDD did.
-    banded.repartition(col("band"), col("mh"))
-      .transform(graft.Tables.loopPin)
-  }
+    * ix ≥ 1, id1 ≠ id2, each pair scored in its minimal shared band
+    * only, so a pair appears at most twice, once per direction (heap
+    * folds dedup by id2; min-label propagation ignores multiplicity). */
+  def bandedScoredPairs(docs: DataFrame, cap: Int): DataFrame =
+    scoredPairs(bandedFrame(docs), cap)
 
-  def bandedScoredPairs(docs: DataFrame, cap: Int): DataFrame = {
+  /** [[bandedScoredPairs]] over an already-built [[bandedFrame]]. */
+  private def scoredPairs(f: DataFrame, cap: Int): DataFrame = {
     require(cap >= 6 && cap <= 100000,
       s"dedup bucket cap must be in [6,100000], got $cap")
-    val f = bandedFrame(docs)
     val win = Window.partitionBy("band", "mh").orderBy("doc_id")
     val capped = f.withColumn("rn", row_number().over(win))
       .filter(col("rn") <= cap)
@@ -334,7 +363,7 @@ object DedupStages {
     * [20 000] docs — every oracled sf — banded at/past it), the
     * taken route surfaced on stderr AND the conf-readable
     * `spark.graft.dedup.pair.lastRoute`. */
-  def pairRoute(s: org.apache.spark.sql.SparkSession, d: String)
+  def pairRoute(s: SparkSession, d: String)
       : String = {
     val gate = s.conf.get("spark.graft.dedup.pairGateDocs", "20000").toLong
     require(gate >= 1,
@@ -360,59 +389,67 @@ object DedupStages {
   /** The shared bucket cap conf (default aligned with the tf-idf
     * route's 64 — proven to preserve tie-clique top-k / clique
     * connectivity at any clique size). */
-  def pairBucketCap(s: org.apache.spark.sql.SparkSession): Int = {
+  def pairBucketCap(s: SparkSession): Int = {
     val c = s.conf.get("spark.graft.dedup.pair.bucketCap", "64").toInt
     require(c >= 6 && c <= 100000,
       s"spark.graft.dedup.pair.bucketCap must be in [6,100000], got $c")
     c
   }
 
-  /** q_dedup_near's BANDED form: the ≥τ pair contract RESTRICTED to
-    * each document's top-5 neighborhood under (jac DESC, id ASC) —
+  /** The τ-screened directed scored pairs (id1, id2, ix, jac) of a
+    * [[bandedScoredPairs]] stream: jac = round(ix / (na + nb − ix), 6)
+    * ≥ τ, bit-identical to the exact pipeline's value. */
+  private def jaccardScreen(scored: DataFrame, tau: Double): DataFrame =
+    scored
+      .withColumn("jac",
+        round(col("ix") / (col("na") + col("nb") - col("ix")), 6))
+      .filter(col("jac") >= tau)
+      .select("id1", "id2", "ix", "jac")
+
+  /** The τ-screened banded pairs (id1, id2, ix, jac) of the documents
+    * table under `d`, built ONCE per corpus for both pair-output
+    * operators, so the saving needs both on one unchanged corpus (a
+    * dedup pass): q_dedup_near folds them ([[nearDupTop5]]) and
+    * q_dup_clusters takes them as its edge list. The build runs the
+    * band frame, the capped bucket join and the screen, pins the
+    * result ([[Tables.loopPin]]), materializes it and then releases
+    * the band frame it read. Reuse follows [[Tables.pinned]]: keyed on
+    * the documents' [[Tables.TableId]], `cap` and `tau`, live while the
+    * session's SparkContext is the one that built it; the pin is held
+    * until a rebuild or a cache clear replaces it.
+    *
+    * As q_dup_clusters' edge set the stream is ALL verified ≥τ
+    * capped-bucket pairs (no top-k restriction — CC needs a SPANNING
+    * subgraph; within a replica clique every member pairs with the
+    * bucket's smallest ids, a star that connects the clique exactly —
+    * the round-15 connectivity argument), post-screen volume
+    * ≤ n·16·cap. It is neither canonicalized nor made distinct
+    * (round 19, verdict #1): min-label propagation is invariant under
+    * edge MULTIPLICITY and ORIENTATION, so a distinct() would
+    * re-shuffle the clique-mass stream for nothing (measured +54 s
+    * warm at 100×). Each unordered pair appears at most twice, in its
+    * minimal shared band only. */
+  def bandedJaccardPairs(s: SparkSession, d: String, tau: Double, cap: Int)
+      : DataFrame =
+    Tables.pinned(s, "dedup banded", s"$d/documents.parquet", s"cap=$cap tau=$tau") {
+      val f = bandedFrame(Tables.documents(s, d))
+      val pairs = jaccardScreen(scoredPairs(f, cap), tau).transform(Tables.loopPin)
+      pairs.count()
+      Tables.unpin(f)
+      pairs
+    }
+
+  /** q_dedup_near's BANDED form over τ-screened (id1, id2, ix, jac)
+    * pairs ([[bandedJaccardPairs]]): the ≥τ pair contract RESTRICTED
+    * to each document's top-5 neighborhood under (jac DESC, id ASC) —
     * the q_tfidf_pairs routed-form precedent: ≤ n·k rows at any
     * clique structure, DECLARED columns (id1 < id2, jac) kept, jac
     * values bit-identical to the exact pipeline's. */
-  def nearDupPairsBanded(docs: DataFrame, tau: Double, cap: Int)
-      : DataFrame = {
-    val scored = bandedScoredPairs(docs, cap)
-      .withColumn("jac",
-        round(col("ix") / (col("na") + col("nb") - col("ix")), 6))
-      .filter(col("jac") >= tau)
-    topNeighborsFold(scored, "jac")
+  def nearDupTop5(pairs: DataFrame): DataFrame =
+    topNeighborsFold(pairs, "jac")
       .select(least(col("id1"), col("id2")).as("id1"),
         greatest(col("id1"), col("id2")).as("id2"), col("jac"))
       .distinct()
-  }
-
-  /** q_dup_clusters' BANDED edge set: ALL verified ≥τ capped-bucket
-    * pairs (no top-k restriction — CC needs a SPANNING subgraph, not
-    * a neighborhood sample; within a replica clique every member
-    * pairs with the bucket's smallest ids, a star that connects the
-    * clique exactly — the round-15 connectivity argument),
-    * post-screen volume ≤ n·16·cap. The stream is neither
-    * canonicalized nor made distinct (round 19, verdict #1): min-label
-    * propagation is invariant under edge MULTIPLICITY and
-    * ORIENTATION (minLabelPropagate unions both orientations of
-    * every row itself, and each round reduces neighbors by min(),
-    * which ignores duplicates), so the global distinct() bought the
-    * fixpoint nothing while re-shuffling the full clique-mass pair
-    * stream — measured +54 s warm on the 100× fixture (89.3 s with
-    * distinct vs 35.4 s for this stream, in a round-19 stage
-    * probe). The directed stream holds each unordered pair
-    * at most twice (once per side that sees the other in its capped
-    * bucket), in its minimal shared band only (the first_eq_index
-    * screen), so the pinned edge list minLabelPropagate materializes
-    * is at most 2x the distinct form's rows of 16-byte pairs —
-    * cheaper than the distinct's exchange at any scale. SAME
-    * components by construction; the oracle's recursive walk and the
-    * subset specs pin the cluster assignment. */
-  def nearDupEdgeCandidatesBanded(docs: DataFrame, tau: Double, cap: Int)
-      : DataFrame =
-    bandedScoredPairs(docs, cap)
-      .withColumn("jac",
-        round(col("ix") / (col("na") + col("nb") - col("ix")), 6))
-      .filter(col("jac") >= tau)
-      .select("id1", "id2")
 
   /** q_jaccard_containment's BANDED form: directed containment
     * (cont = |A∩B| / |A| ≥ τ) restricted to each id1's top-5 under

@@ -149,12 +149,14 @@ object TextOps {
       // stage exhausted spill disk at the 100× fixture's 100-member
       // cliques) auto routes to the banded bucket-capped form — the
       // ≥τ contract restricted to each doc's top-5 neighborhood,
-      // declared schema kept (DedupStages.nearDupPairsBanded).
-      val docs = Tables.documents(s, d)
+      // declared schema kept (DedupStages.nearDupTop5). Its
+      // τ-screened pairs are built once per corpus and shared with
+      // q_dup_clusters (DedupStages.bandedJaccardPairs, under the
+      // Tables.pinned rule).
       (DedupStages.pairRoute(s, d) match {
-        case "banded" => DedupStages.nearDupPairsBanded(
-          docs, tau = 0.6, DedupStages.pairBucketCap(s))
-        case _ => DedupStages.nearDupPairs(docs, tau = 0.6)
+        case "banded" => DedupStages.nearDupTop5(DedupStages.bandedJaccardPairs(
+          s, d, tau = 0.6, DedupStages.pairBucketCap(s)))
+        case _ => DedupStages.nearDupPairs(Tables.documents(s, d), tau = 0.6)
       }).orderBy("id1", "id2")
     },
 
@@ -169,8 +171,9 @@ object TextOps {
     // canonicalizes to 3). canonical = the component's minimum
     // doc_id; keep = the doc IS its component minimum, so exactly
     // one doc survives per duplicate cluster even when members are
-    // connected only transitively. The pair list is cached once;
-    // each round shuffles only n_docs-row label frames. Oracle =
+    // connected only transitively. The pair list is pinned once;
+    // each round shuffles only n_docs-row label frames and runs two
+    // checkpoint jobs, the label sum observed inside them. Oracle =
     // full-fixpoint WITH RECURSIVE min-label walk (UNION-deduped
     // reachability) — the same fixpoint the convergence-stopped
     // engine loop computes, so the hash compare is exact at any
@@ -202,15 +205,18 @@ object TextOps {
       // min-label propagation is multiplicity/orientation-invariant,
       // so the old distinct() pass re-shuffled the clique-mass pair
       // stream for nothing (+54 s at 100×; both arguments are in the
-      // DedupStages.nearDupEdgeCandidatesBanded scaladoc).
-      val pairs = DedupStages.pairRoute(s, d) match {
-        case "banded" => DedupStages.nearDupEdgeCandidatesBanded(
-          docs, tau = 0.6, DedupStages.pairBucketCap(s))
-        case _ => DedupStages.nearDupPairs(docs, tau = 0.6)
-          .select("id1", "id2")
+      // DedupStages.bandedJaccardPairs scaladoc). The stream is the
+      // one q_dedup_near folds, built and pinned once per corpus
+      // (under the Tables.pinned rule), so after q_dedup_near this
+      // operator runs only its label loop, which reads the pinned
+      // stream without copying it.
+      val (pairs, pinned) = DedupStages.pairRoute(s, d) match {
+        case "banded" => (DedupStages.bandedJaccardPairs(
+          s, d, tau = 0.6, DedupStages.pairBucketCap(s)), true)
+        case _ => (DedupStages.nearDupPairs(docs, tau = 0.6), false)
       }
       val lab = DedupStages.minLabelPropagate(
-        docs.select(col("doc_id").as("node")), pairs)
+        docs.select(col("doc_id").as("node")), pairs, pairsPinned = pinned)
       lab.select(col("node").as("doc_id"), col("lab").as("canonical"),
           (col("lab") === col("node")).as("keep"))
         .orderBy("doc_id")

@@ -59,8 +59,14 @@ object VectorSearch {
     * [[graft.plans.IvfIndex]]. The build is one row-local pass: the
     * codebook is collected once (the same collect registers it), the
     * cell and the 8 codes are one projection of `nearest_cells` calls,
-    * and a rebalance by cell before the partitioned write keeps one
-    * file per cell. Its jobs carry the description
+    * and an exchange by cell groups each cell's rows for the
+    * partitioned write. While the embeddings are smaller than n
+    * advisory partitions, n = min(cells, parallelism), it is a hash
+    * repartition into n, which AQE does not coalesce (a rebalance put
+    * the ~1 MB index in one writing task) and which writes one file
+    * per cell; above that it is a rebalance, which AQE sizes from the
+    * data and whose skewed cells it splits into several files. The
+    * build's jobs carry the description
     * `graft ivf build <table>`. An index build is amortized across
     * every query that probes it (the reference's collection-creation
     * step, photo_vector_search.py:17-20) — it must never run inside
@@ -71,19 +77,20 @@ object VectorSearch {
     val tbl = "graft_ivf_" +
       new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
     Tables.ensureDerived(s, tbl, s"$d/embeddings.parquet") {
-      val sc = s.sparkContext
-      val caller = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"graft ivf build $tbl")
-      try {
+      Tables.describingJobs(s, s"graft ivf build $tbl") {
         val cb = ivfCodebook(s, d)
         val v = col("embedding")
-        Tables.embeddings(s, d)
+        val rows = Tables.embeddings(s, d)
           .select(col("vec_id"), col("label"), v, pqCodes(v, cb).as("pq"),
             ivfCell(v, cb).as("ivf_cell"))
-          .hint("rebalance", col("ivf_cell"))
+        val n = math.max(1, math.min(cb.size, s.sparkContext.defaultParallelism))
+        val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+          s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+        (if (Tables.tableBytes(d, "embeddings") < n * advisory) rows.repartition(n, col("ivf_cell"))
+         else rows.hint("rebalance", col("ivf_cell")))
           .write.mode("overwrite").partitionBy("ivf_cell").saveAsTable(tbl)
         graft.plans.IvfIndex.register(tbl, probes = IvfProbes, cb)
-      } finally sc.setLocalProperty("spark.job.description", caller)
+      }
     }
     tbl
   }

@@ -2,16 +2,22 @@ package graft
 
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** One shared local session for the whole test JVM (Test/fork := true
-  * gives the suite its own JVM; the session dies with it). */
+  * gives the suite its own JVM; the session dies with it). A spec that
+  * stops it gets a fresh one, built the same way, on the next call. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = Sessions.build("4")
-    functions.GraftFunctions.register(s)
-    s
+  private var session: SparkSession = _
+
+  def spark: SparkSession = synchronized {
+    if (session == null || session.sparkContext.isStopped) {
+      session = Sessions.build("4")
+      functions.GraftFunctions.register(session)
+    }
+    session
   }
 }
 
@@ -39,5 +45,33 @@ trait SparkTestBase extends AnyFunSuite {
       body; TestBus.drain(sc)
       scala.jdk.CollectionConverters.IteratorHasAsScala(jobs.iterator).asScala.toSeq
     } finally sc.removeSparkListener(l)
+  }
+
+  def tmpDir(): String = Files.createTempDirectory("graft_spec_").toString
+
+  /** A copy of the fixture directory `d`, one file per table. */
+  def copyOf(d: String): String = {
+    val out = tmpDir()
+    new java.io.File(d).listFiles().foreach(f =>
+      Files.copy(f.toPath, Paths.get(out, f.getName)))
+    out
+  }
+
+  /** Writes `df` as `d`'s `table`: one parquet file at
+    * `d/table.parquet`, replacing what is there. */
+  def writeOneFile(df: DataFrame, d: String, table: String): Unit = {
+    val staging = s"${tmpDir()}/t"
+    df.coalesce(1).write.parquet(staging)
+    val part = new java.io.File(staging).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(part.length === 1)
+    Files.copy(part.head.toPath, Paths.get(s"$d/$table.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Rewrites `d`'s `table` at the same path, as one file holding the
+    * rows with an even `id`. */
+  def rewriteHalf(d: String, table: String, id: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    writeOneFile(spark.read.parquet(s"$d/$table.parquet").filter(col(id) % 2 === 0), d, table)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** [[Tables]]' JVM-wide schema and row-count memos: a repeated read
@@ -10,8 +9,6 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   * from a fixture table are rebuilt when the table is rewritten. */
 class TablesMemoSpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
-
-  private def tmpDir(): String = Files.createTempDirectory("graft_tables_memo_").toString
 
   test("after a warm-up, building q_knn_image runs no Spark job") {
     assume(new java.io.File(s"$sf/embeddings.parquet").exists())
@@ -39,6 +36,29 @@ class TablesMemoSpec extends SparkTestBase {
     assert(a.queryExecution.analyzed.output.map(_.exprId).intersect(
       b.queryExecution.analyzed.output.map(_.exprId)).isEmpty)
     assert(a.join(b, a("vec_id") === b("vec_id")).count() === a.count())
+  }
+
+  test("a pinned frame whose source has no local identity is rebuilt on every call") {
+    var builds = 0
+    def get(src: String) = Tables.pinned(spark, "spec", src, "v") {
+      builds += 1
+      spark.range(builds).toDF().persist()
+    }
+    // Control: a local source, unchanged, is built once.
+    val local = s"${tmpDir()}/t.parquet"
+    java.nio.file.Files.write(java.nio.file.Paths.get(local), Array[Byte](1))
+    val kept = get(local)
+    assert((get(local) eq kept) && builds === 1)
+    Tables.unpin(kept)
+    // A remote path has no identity here, so nothing shows it unchanged.
+    builds = 0
+    val remote = "hdfs://nowhere/documents.parquet"
+    val first = get(remote)
+    val second = get(remote)
+    assert(builds === 2 && second.count() === 2)
+    assert(first.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+      "the rebuild unpins the frame it replaces")
+    Tables.unpin(second)
   }
 
   test("a table rewritten at the same path with a different schema is re-inferred") {
@@ -72,27 +92,6 @@ class TablesMemoSpec extends SparkTestBase {
     }
     assert(tsTypes(inferNtz = true) === ((TimestampNTZType, TimestampType)))
     assert(tsTypes(inferNtz = false) === ((TimestampType, TimestampType)))
-  }
-
-  /** A copy of the fixture directory `d`, one file per table. */
-  private def copyOf(d: String): String = {
-    val out = tmpDir()
-    new java.io.File(d).listFiles().foreach(f =>
-      Files.copy(f.toPath, java.nio.file.Paths.get(out, f.getName)))
-    out
-  }
-
-  /** Rewrites `d`'s `table` at the same path, as one file holding the
-    * rows with an even `id`. */
-  private def rewriteHalf(d: String, table: String, id: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    val staging = s"${tmpDir()}/t"
-    spark.read.parquet(s"$d/$table.parquet").filter(col(id) % 2 === 0)
-      .coalesce(1).write.parquet(staging)
-    val part = new java.io.File(staging).listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(part.length === 1)
-    Files.copy(part.head.toPath, java.nio.file.Paths.get(s"$d/$table.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** `key` on a copy of sf0.001, rerun after `table` is rewritten at

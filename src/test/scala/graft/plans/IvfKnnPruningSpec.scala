@@ -231,6 +231,44 @@ class IvfKnnPruningSpec extends SparkTestBase {
     checkIndex(dir)
   }
 
+  /** How many tasks wrote rows (the index's partitioned write) while
+    * `dir`'s index was built fresh. */
+  private def writingTasks(dir: String): Int = {
+    val writers = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
+          writers.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      SparkEntry.queries("q_knn_ivf_rule")(spark, dir).collect()
+      org.apache.spark.TestBus.drain(sc)
+    } finally sc.removeSparkListener(l)
+    writers.get
+  }
+
+  test("a fresh build on the seeded four-file store writes its cells from more than one task") {
+    val dir = seededStore()
+    val n = writingTasks(dir)
+    assert(n > 1, s"$n writing task(s)")
+    checkIndex(dir)
+  }
+
+  test("an index larger than its write tasks' advisory sizes is not capped at one task per cell") {
+    val dir = seededStore()
+    // The ~1 MB index against 16 KiB advisory partitions: AQE sizes the
+    // write from the data, as at scale, past min(cells, parallelism).
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "16k")
+    val n = try writingTasks(dir) finally spark.conf.unset(key)
+    val cells = IvfIndex.lookup(tableOf(dir)).get.centroids.size
+    assert(n > math.min(cells, spark.sparkContext.defaultParallelism), s"$n writing task(s)")
+    checkIndex(dir)
+  }
+
   test("a warm q_knn_ivf_rule on the seeded four-file store runs two jobs") {
     val dir = seededStore()
     val q = SparkEntry.queries("q_knn_ivf_rule")

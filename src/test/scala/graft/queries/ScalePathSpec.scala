@@ -727,6 +727,115 @@ class ScalePathSpec extends SparkTestBase {
     assert(r0 === 1, s"edgeless graph must converge in one proof round, ran $r0")
   }
 
+  test("min-label propagation over no nodes and no pairs returns no labels after one round") {
+    val s = spark
+    import s.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val noPairs = s.emptyDataset[(Long, Long)].toDF("id1", "id2")
+    // Empty as a literal (the optimizer prunes the propagate join) and
+    // empty only at run time (AQE prunes it, as for q_dbscan with no
+    // core point). Either way the initial sum's observation, below
+    // that join, leaves the plan; the loop must not wait for it.
+    for (nodes <- Seq(s.emptyDataset[Long].toDF("node"),
+        s.range(10).filter(col("id") > 100).select(col("id").as("node")))) {
+      val run = Future(DedupStages.minLabelPropagateCounted(nodes, noPairs))(
+        ExecutionContext.global)
+      val (lab, rounds) = Await.result(run, 2.minutes)
+      assert(lab.count() === 0)
+      assert(rounds === 1)
+    }
+  }
+
+  test("min-label propagation runs only its checkpoints: the pair pin and two per round") {
+    val s = spark
+    import s.implicits._
+    // The fixpoint spec's 12-hop path. Each round's label sum is
+    // observed inside its jump checkpoint (the initial sum inside
+    // round 1's propagate checkpoint), so no aggregate query runs
+    // between checkpoints.
+    val pairs = (100L until 112L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val nodes = (100L to 112L).toDF("node")
+    // The queries each run executes, and its labels, rounds and jobs.
+    def run(pairs: org.apache.spark.sql.DataFrame, pinned: Boolean) = {
+      val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          ran.add(f)
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+          ran.add(s"$f failed")
+      }
+      org.apache.spark.TestBus.drain(s.sparkContext)
+      s.listenerManager.register(l)
+      var out: (org.apache.spark.sql.DataFrame, Int) = null
+      val jobs = try jobsDuring {
+        out = DedupStages.minLabelPropagateCounted(nodes, pairs, pairsPinned = pinned)
+        org.apache.spark.TestBus.drain(s.sparkContext)
+      } finally s.listenerManager.unregister(l)
+      val labels = out._1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (scala.jdk.CollectionConverters.IteratorHasAsScala(ran.iterator).asScala.toSeq,
+        labels, out._2, jobs)
+    }
+    val (ran, lab, rounds, jobs) = run(pairs, pinned = false)
+    assert(ran === Seq.fill(1 + 2 * rounds)("localCheckpoint"))
+    // Same labels and round count as the separate-sum loop, which ran
+    // 37 jobs here.
+    assert(lab === (100L to 112L).map(_ -> 100L).toMap)
+    assert(rounds === 4)
+    assert(jobs < 37, s"$jobs jobs")
+    // A pair frame pinned and materialized by the caller is not copied.
+    val pinned = pairs.localCheckpoint()
+    try assert(run(pinned, pinned = true) === ((Seq.fill(2 * rounds)("localCheckpoint"),
+      lab, rounds, jobs - 1)))
+    finally graft.Tables.unpin(pinned)
+  }
+
+  test("bandedFrame hashes each shingle once and keeps the per-permutation formula's rows") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(23)
+    val bases = (0 until 40).map(_ => Seq.fill(30)("w" + rnd.nextInt(400)))
+    val docs = (0 until 160).map { i =>
+      val w = bases(i % 40).toArray
+      (0 until i % 4).foreach(_ => w(rnd.nextInt(w.length)) = "v" + rnd.nextInt(400))
+      (i.toLong, w.mkString(" "))
+    }.toDF("doc_id", "text")
+    // The formula the hoist replaced: h28 of every shingle recomputed
+    // inside each of the 16 permutations.
+    val a = "array(" + (0 until 16).map(DedupStages.aCoef).mkString(",") + ")"
+    val b = "array(" + (0 until 16).map(DedupStages.bCoef).mkString(",") + ")"
+    val want = DedupStages.shingleSets(docs).filter(size(col("s")) >= 1).select(col("doc_id"),
+      expr(s"array_sort(transform(s, x -> ${TextKit.h60("x")}))").as("hs"),
+      expr(s"""transform(sequence(0, 15), i ->
+              |  array_min(transform(transform(s, x -> ${TextKit.h28("x")}), h ->
+              |    (element_at($a, i + 1) * h + element_at($b, i + 1)) % ${DedupStages.P})))""".stripMargin)
+        .as("mhs"))
+    // The columnar pin keeps the frame's physical plan inspectable.
+    s.conf.set("spark.graft.loop.columnar", "on")
+    val f = try DedupStages.bandedFrame(docs) finally s.conf.unset("spark.graft.loop.columnar")
+    try {
+      val cached = f.queryExecution.withCachedData.collectFirst {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder.cachedPlan
+      }.get match {
+          case p: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => p.executedPlan
+          case p => p
+        }
+      import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction, Md5}
+      // How many lambdas deep each md5 call sits: 1 when a shingle is
+      // hashed once, 2 when the hash runs inside a per-permutation lambda.
+      def md5Depth(e: Expression, d: Int): Int = e match {
+        case _: Md5 => d
+        case _: LambdaFunction => e.children.map(md5Depth(_, d + 1)).maxOption.getOrElse(-1)
+        case _ => e.children.map(md5Depth(_, d)).maxOption.getOrElse(-1)
+      }
+      assert(cached.collect { case p => p.expressions }.flatten.map(md5Depth(_, 0)).max === 1,
+        cached.toString)
+      val got = f.filter(col("band") === 0).select("doc_id", "hs", "mhs")
+      assert(got.count() === 160)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    } finally f.unpersist()
+  }
+
   test("lsh plane auto-sizing: declared 16 at test sfs, log2(n) band " +
     "bits above the gate, explicit pin wins") {
     // The declared/oracled q_lsh_embed form is 16 planes = 4 bands ×
