@@ -13,7 +13,7 @@ canonicalization as check.py (columns sorted by name, floats at 6 dp,
        scripts/run.sh graft.Verify /tmp/sf1.0 /tmp/xc_auto q_lof,q_dbscan
   B: the PINNED EXACT arm (the declared semantics the small-sf DuckDB
      oracles hash-checked), e.g.
-       JAVA_TOOL_OPTIONS='-Dspark.graft.knn.mode=exact' \
+       JAVA_TOOL_OPTIONS='-Dspark.graft.ann.autoThresholdBytes=9223372036854775807' \
          scripts/run.sh graft.Verify /tmp/sf1.0 /tmp/xc_exact q_lof,q_dbscan
 
 A match proves the scale posture returns the oracle-anchored answer at

@@ -12,9 +12,9 @@ cross_check.py's frame-equality compare is the wrong shape for a
 subset contract, so this script proves the two claims directly from
 two graft.Verify output dirs:
 
-  JAVA_TOOL_OPTIONS='-Dspark.graft.dedup.pair.mode=exact' \
+  JAVA_TOOL_OPTIONS='-Dspark.graft.dedup.pairGateDocs=9223372036854775807' \
     scripts/run.sh graft.Verify /tmp/sf1.0 /tmp/xc_exact q_dedup_near,...
-  JAVA_TOOL_OPTIONS='-Dspark.graft.dedup.pair.mode=banded' \
+  JAVA_TOOL_OPTIONS='-Dspark.graft.dedup.pairGateDocs=1' \
     scripts/run.sh graft.Verify /tmp/sf1.0 /tmp/xc_banded q_dedup_near,...
   python3 scripts/subset_check.py /tmp/xc_exact /tmp/xc_banded
 

@@ -356,44 +356,24 @@ object DedupStages {
       .filter(col("ix") >= 1)
   }
 
-  /** Mode dispatch for the pair-output dedup family (q_dedup_near /
-    * q_dup_clusters / q_jaccard_containment) — the tfidfRoute
-    * protocol: `spark.graft.dedup.pair.mode` ∈ exact|banded|auto
-    * (default auto: exact below `spark.graft.dedup.pairGateDocs`
-    * [20 000] docs — every oracled sf — banded at/past it), the
-    * taken route surfaced on stderr AND the conf-readable
-    * `spark.graft.dedup.pair.lastRoute`. */
-  def pairRoute(s: SparkSession, d: String)
-      : String = {
-    val gate = s.conf.get("spark.graft.dedup.pairGateDocs", "20000").toLong
-    require(gate >= 1,
-      s"spark.graft.dedup.pairGateDocs must be >= 1, got $gate")
-    val mode = s.conf.get("spark.graft.dedup.pair.mode", "auto") match {
-      case "auto" =>
-        if (Tables.docCount(s, d) >= gate) "banded" else "exact"
-      case m @ ("exact" | "banded") => m
-      case other => throw new IllegalArgumentException(
-        "spark.graft.dedup.pair.mode must be exact|banded|auto, " +
-          s"got '$other'")
-    }
-    if (mode == "banded")
-      System.err.println(
-        "[graft] pair dedup: routing to the banded bucket-capped " +
-          "route (recall contract 1-(1-J)^16, capped buckets exact " +
-          "on replica cliques; set spark.graft.dedup.pair.mode=exact " +
-          "to force the complete prefix-filtered form)")
-    s.conf.set("spark.graft.dedup.pair.lastRoute", mode)
-    mode
+  /** The route of the pair-output dedup family (q_dedup_near /
+    * q_dup_clusters / q_jaccard_containment): `banded` at or past
+    * `spark.graft.dedup.pairGateDocs` (20 000) documents, else the
+    * declared `exact` form (every oracled sf). The taken route is
+    * conf-readable from `spark.graft.dedup.pair.lastRoute`. */
+  def pairRoute(s: SparkSession, d: String): String = {
+    val route = if (atScale(s, "pair dedup", "spark.graft.dedup.pairGateDocs",
+        20000)(Some(Tables.docCount(s, d)))) "banded" else "exact"
+    s.conf.set("spark.graft.dedup.pair.lastRoute", route)
+    route
   }
 
   /** The shared bucket cap conf (default aligned with the tf-idf
     * route's 64 — proven to preserve tie-clique top-k / clique
     * connectivity at any clique size). */
   def pairBucketCap(s: SparkSession): Int = {
-    val c = s.conf.get("spark.graft.dedup.pair.bucketCap", "64").toInt
-    require(c >= 6 && c <= 100000,
-      s"spark.graft.dedup.pair.bucketCap must be in [6,100000], got $c")
-    c
+    val key = "spark.graft.dedup.pair.bucketCap"
+    boundedLong(key, s.conf.get(key, "64"), 6, 100000).toInt
   }
 
   /** The τ-screened directed scored pairs (id1, id2, ix, jac) of a
@@ -456,10 +436,17 @@ object DedupStages {
     * (cont DESC, id2 ASC). The asymmetric small-in-big pair sits at
     * J = C·|A| / (|A|+|B|−C·|A|) — the r=1 band's 1-(1-J)^16 holds
     * usable recall down to ~10× size skew (0.81 at J=0.1), the
-    * declared contract of the route. */
-  def containmentBanded(docs: DataFrame, tau: Double, cap: Int)
+    * declared contract of the route. The band frame of the documents
+    * under `d` is built once under [[Tables.pinned]] (kind `dedup
+    * band`), so repeated calls on one corpus hold one pin. */
+  def containmentBanded(s: SparkSession, d: String, tau: Double, cap: Int)
       : DataFrame = {
-    val scored = bandedScoredPairs(docs, cap)
+    val bands = Tables.pinned(s, "dedup band", s"$d/documents.parquet", "") {
+      val f = bandedFrame(Tables.documents(s, d))
+      f.count()
+      f
+    }
+    val scored = scoredPairs(bands, cap)
       .withColumn("cont", round(col("ix") / col("na"), 6))
       .filter(col("cont") >= tau)
     topNeighborsFold(scored, "cont")
@@ -825,10 +812,8 @@ object DedupSketches {
       // corpus runs — CORRECTNESS unchanged.
       val docsAll = Tables.documents(s, d)
       val docs = {
-        val gate =
-          s.conf.get("spark.graft.dedup.pairGateDocs", "20000").toLong
-        require(gate >= 1,
-          s"spark.graft.dedup.pairGateDocs must be >= 1, got $gate")
+        val gate = boundedLong("spark.graft.dedup.pairGateDocs",
+          s.conf.get("spark.graft.dedup.pairGateDocs", "20000"), 1)
         val nDocs = Tables.docCount(s, d)
         if (auditOn(s) && nDocs >= gate) {
           val stride = (nDocs + gate - 1) / gate

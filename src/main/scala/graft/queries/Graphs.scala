@@ -1553,30 +1553,21 @@ object GraphStages {
     * charged to every timed cell identically. */
   def bloomPrune(w: DataFrame, o: DataFrame, c1: String, c2: String)
       : DataFrame = {
-    // `spark.graft.wedge.bloom=off` skips the prune (A/B seam; also
-    // the escape hatch for clique-heavy graphs where closure rate ≈ 1
-    // and the probe pass buys nothing).
-    if (w.sparkSession.conf.get("spark.graft.wedge.bloom", "on") == "off")
-      return w
-    def build(): Option[Array[Byte]] = {
-      val m = o.count() // exact item count; also forces the checkpoint
-      // Below ~1 M edges the closing exchange is a few MB and the two
-      // bloom-build jobs cost more than they save (measured +0.6 s at
-      // sf0.1); the prune is a big-graph device.
-      val minEdges = w.sparkSession.conf
-        .get("spark.graft.wedge.bloom.minEdges", "1000000").toLong
-      if (m < minEdges) None
-      else {
-        val bf = o.select(xxhash64(col("s"), col("t")).as("h"))
-          .stat.bloomFilter("h", m, 0.01)
-        val bo = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bo)
-        Some(bo.toByteArray)
-      }
-    }
-    build().fold(w) { b =>
-      graft.functions.GraftFunctions.register(w.sparkSession)
-      w.filter(call_function("bloom_might_contain", lit(b),
+    val s = w.sparkSession
+    val m = o.count() // exact item count; also forces the checkpoint
+    // Below `spark.graft.wedge.bloom.minEdges` (1 M) edges the closing
+    // exchange is a few MB and the two bloom-build jobs cost more than
+    // they save (measured +0.6 s at sf0.1); the prune is a big-graph
+    // device. Clique-heavy graphs, whose closure rate is ≈ 1, skip it
+    // with a threshold past their edge count.
+    if (!atScale(s, "wedge bloom", "spark.graft.wedge.bloom.minEdges", 1000000)(
+        Some(m))) w
+    else {
+      val bo = new java.io.ByteArrayOutputStream()
+      o.select(xxhash64(col("s"), col("t")).as("h"))
+        .stat.bloomFilter("h", m, 0.01).writeTo(bo)
+      graft.functions.GraftFunctions.register(s)
+      w.filter(call_function("bloom_might_contain", lit(bo.toByteArray),
         xxhash64(col(c1), col(c2))))
     }
   }

@@ -389,8 +389,8 @@ object Joins {
     // sim 0.40001), so no sublinear candidate scheme can be exact —
     // hyperplane-LSH recall at a 66° threshold needs band counts that
     // admit every pair. The declared operator is therefore the exact
-    // quadratic join; `spark.graft.knn.mode=ann` switches the
-    // pair stage to IVF multi-probe candidates + exact verify (the
+    // quadratic join; past `spark.graft.ann.autoThresholdBytes` the
+    // pair stage routes to IVF multi-probe candidates + exact verify (the
     // 100 TB route, sub-quadratic with cells ≈ √n; set-equal to the
     // exact form at the test sfs — ScalePathSpec), and q_knn_ivf /
     // q_dedup_minhash remain the dedicated search/dedup regimes.
@@ -568,10 +568,9 @@ object Joins {
   * carries ~24-byte rows (the round-12 100× smoke shipped ~200 GB of
   * re-attached vector pairs through an exchange).
   *
-  * `spark.graft.knn.mode` picks the route; its default `auto`
-  * ([[resolveMode]]) goes by the input's size estimate, so the oracled
-  * test sfs run the declared exact plan and large inputs route to ann
-  * with no conf change.
+  * [[route]] picks the route by the input's size estimate, so the
+  * oracled test sfs run the declared exact plan and large inputs route
+  * to ann with no conf change.
   *
   *  - `exact` (the declared, oracled semantics): a BLOCK-CHUNKED theta
   *    join. The build side is split into B blocks (pmod on its id) and
@@ -609,16 +608,6 @@ object Joins {
   */
 object SimilarityStages {
 
-  private def parsePositive(raw: String, key: String, floor: Int): Int = {
-    val v = try raw.toInt catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"$key must be an integer >= $floor or 'auto', got '$raw'")
-    }
-    if (v < floor) throw new IllegalArgumentException(
-      s"$key must be >= $floor (or 'auto'), got '$raw'")
-    v
-  }
-
   /** Catalyst's size estimate for a frame, or None when the plan
     * reports the UNKNOWN sentinel (`spark.sql.defaultSizeInBytes`,
     * Long.MaxValue by default — RDD-backed frames without
@@ -650,9 +639,8 @@ object SimilarityStages {
     val conf = e.sparkSession.conf
     conf.get("spark.graft.simjoin.blocks", "auto") match {
       case "auto" =>
-        val target = BigInt(parsePositive(conf.get(
-          "spark.graft.simjoin.blockBytes", (256L << 20).toString),
-          "spark.graft.simjoin.blockBytes", floor = 1))
+        val target = BigInt(boundedLong("spark.graft.simjoin.blockBytes",
+          conf.get("spark.graft.simjoin.blockBytes", (256L << 20).toString), 1))
         planBytes(e) match {
           case Some(bytes) =>
             (((bytes + target - 1) / target) max 1 min 4096).toInt
@@ -664,35 +652,21 @@ object SimilarityStages {
             4
         }
       case explicit =>
-        parsePositive(explicit, "spark.graft.simjoin.blocks", floor = 1)
+        boundedLong("spark.graft.simjoin.blocks", explicit, 1, Int.MaxValue).toInt
     }
   }
 
-  /** The pair-stage route. `spark.graft.knn.mode` = `exact` | `ann`
-    * pins it; the default `auto` picks by the input's size estimate
-    * against `spark.graft.ann.autoThresholdBytes` (default 4 MiB — the
+  /** The pair-stage route: `ann` when the input's size estimate is at
+    * least `spark.graft.ann.autoThresholdBytes` (default 4 MiB — the
     * measured crossover: at sf0.1 (~0.8 MB embeddings) the exact route
     * wins, at 10× (~8 MB) IVF multi-probe with C ≈ √n and few probes
-    * beats it 1.3–2× and the gap widens with n — BENCH.md round 10).
-    * Every oracled test sf sits below the threshold. An unknown
-    * estimate resolves to exact (declared semantics). */
-  def resolveMode(e: DataFrame): String = {
-    val key = "spark.graft.knn.mode"
-    e.sparkSession.conf.get(key, "auto") match {
-      case "auto" =>
-        val thr = BigInt(parsePositive(
-          e.sparkSession.conf.get(
-            "spark.graft.ann.autoThresholdBytes", (4L << 20).toString),
-          "spark.graft.ann.autoThresholdBytes", floor = 1))
-        planBytes(e) match {
-          case Some(b) if b >= thr => "ann"
-          case _ => "exact"
-        }
-      case m @ ("exact" | "ann") => m
-      case other => throw new IllegalArgumentException(
-        s"$key must be exact|ann|auto, got '$other'")
-    }
-  }
+    * beats it 1.3–2× and the gap widens with n — BENCH.md round 10),
+    * else `exact`. Every oracled test sf sits below the threshold. An
+    * unknown estimate resolves to exact (declared semantics). */
+  def route(e: DataFrame): String =
+    if (atScale(e.sparkSession, "vector pair stage",
+        "spark.graft.ann.autoThresholdBytes", 4L << 20)(planBytes(e))) "ann"
+    else "exact"
 
   /** IVF cell count for the ann route, `spark.graft.knn.ann.cells`.
     * An explicit integer pins it; the default `auto` derives C ≈ √n
@@ -720,7 +694,7 @@ object SimilarityStages {
           case Some(n) => (math.sqrt(n.toDouble).ceil.toInt max 16) min 65536
           case None => 16
         }
-      case explicit => parsePositive(explicit, key, floor = 1)
+      case explicit => boundedLong(key, explicit, 1, Int.MaxValue).toInt
     }
   }
 
@@ -738,7 +712,7 @@ object SimilarityStages {
     val key = "spark.graft.knn.ann.probes"
     e.sparkSession.conf.get(key, "auto") match {
       case "auto" => math.max(2, math.ceil(16.0 * pinned / cells).toInt)
-      case explicit => parsePositive(explicit, key, floor = 1)
+      case explicit => boundedLong(key, explicit, 1, Int.MaxValue).toInt
     }
   }
 
@@ -811,7 +785,7 @@ object SimilarityStages {
   private def pairStage(gate: DataFrame, vecs: DataFrame,
       side: Option[String], pair: Column, pinned: Int, metric: String,
       cols: PairCols)(score: Column => Column): DataFrame =
-    resolveMode(gate) match {
+    route(gate) match {
       case "exact" =>
         exactRoute(vecs, side, pair, blockCount(gate), metric, cols, score)
       case "ann" =>

@@ -108,8 +108,8 @@ object Multimodal {
     // Embedding-cosine near-dup DEDUP (not just the pair list): drop
     // every vector that has a more-canonical (lower-id) neighbor at
     // sim ≥ 0.4. Pairs from the shared SimilarityStages stage (exact
-    // by default; `spark.graft.knn.mode=ann` routes candidates
-    // through IVF multi-probe cells + exact verify — the sub-quadratic
+    // below the size gate; past `spark.graft.ann.autoThresholdBytes`
+    // candidates route through IVF multi-probe cells + exact verify — the sub-quadratic
     // 100 TB path, set-equal at the test sfs per ScalePathSpec); the
     // survivors via anti-join — the A13/A14 delete pattern fused with
     // the similarity predicate.

@@ -258,33 +258,14 @@ object Semantic {
       // is output-quadratic in near-dup clique size (sf1.0
       // self-check: the true answer is 115 M rows from 5000-member
       // replica cliques). The plan has no all-pairs stage, but no
-      // plan can beat its own output size, so
-      // `spark.graft.tfidf.mode` dispatches (the simjoin/knn `auto`
-      // precedent): `exact` = the declared τ-pair form; `topk` =
-      // the bounded q_tfidf_topk plan (n·k rows at ANY clique
-      // structure); `auto` (default) = exact below
+      // plan can beat its own output size, so the doc-count gate
+      // ([[tfidfPairsAtScale]]) routes: exact τ-pair form below
       // `spark.graft.tfidf.pairsWarnDocs` docs (every oracled sf —
       // the gate count is an exact parquet-footer count,
-      // deterministic), topk past it, with a stderr note naming the
-      // switch. ScalePathSpec pins auto ≡ exact below the gate and
-      // auto ≡ q_tfidf_topk past it.
-      val nDocs = Tables.documents(s, d).count()
-      val warnDocs = s.conf
-        .get("spark.graft.tfidf.pairsWarnDocs", "20000").toLong
-      require(warnDocs >= 1,
-        s"spark.graft.tfidf.pairsWarnDocs must be >= 1, got $warnDocs")
-      val mode = s.conf.get("spark.graft.tfidf.mode", "auto") match {
-        case "auto" => if (nDocs >= warnDocs) "topk" else "exact"
-        case m @ ("exact" | "topk") => m
-        case other => throw new IllegalArgumentException(
-          s"spark.graft.tfidf.mode must be exact|topk|auto, got '$other'")
-      }
-      if (mode == "topk") {
-        System.err.println(
-          s"[graft] q_tfidf_pairs: routing to the bounded top-k plan " +
-            s"($nDocs documents; the cosine>=tau pair contract is " +
-            "output-quadratic in near-dup clique size — set " +
-            "spark.graft.tfidf.mode=exact to force the pair form)")
+      // deterministic), the bounded q_tfidf_topk plan (n·k rows at
+      // ANY clique structure) at or past it. ScalePathSpec pins the
+      // gate ≡ exact below it and ≡ q_tfidf_topk past it.
+      if (tfidfPairsAtScale(s, d)) {
         // Routed form keeps the DECLARED schema (d1, d2, n_shared,
         // cos) — round-14 advice: a data-dependent schema switch
         // breaks consumers keyed on the contract. Row semantics of
@@ -512,9 +493,10 @@ object Semantic {
     // q_anomaly_mad's univariate screen: a point can sit near the
     // global centroid yet be locally anomalous. Scale: the kNN
     // pair stage is SimilarityStages.knnCandidates — block-chunked
-    // exact by default (no broadcast hint), `spark.graft.knn.mode=
-    // ann` = IVF multi-probe L2 candidates + exact verify, set-equal
-    // at the test sfs (ScalePathSpec); everything after
+    // exact below the size gate (no broadcast hint), IVF multi-probe
+    // L2 candidates + exact verify past
+    // `spark.graft.ann.autoThresholdBytes`, set-equal at the test sfs
+    // (ScalePathSpec); everything after
     // the kNN edge frame is n·k-sized: the kdist fold, the
     // reachability join (co-partitioned on the neighbor key), the
     // lrd fold, and the ratio fold are all partial-aggregated or
@@ -608,8 +590,8 @@ object Semantic {
     // shape a curation pipeline wants for "keep the modes, flag the
     // stragglers". Scale: the eps-neighbor stage is the one pairwise
     // pass, routed through SimilarityStages.knnCandidates
-    // (block-chunked exact default, no broadcast hint;
-    // `spark.graft.knn.mode=ann` = IVF-probed L2 candidates,
+    // (block-chunked exact below the size gate, no broadcast hint;
+    // IVF-probed L2 candidates past `spark.graft.ann.autoThresholdBytes`,
     // set-equal at the test sfs — ScalePathSpec. Past total-recall
     // scale the ann arm's error is ONE-SIDED on core structure:
     // every candidate edge is exact-verified ≤ eps, so ann core ⊆
@@ -1017,55 +999,39 @@ object Semantic {
     (w, nrm)
   }
 
-  /** Route dispatch for the bounded top-k plans
-    * (`spark.graft.tfidf.topk.mode`):
-    *  - `exact`: score via the inverted-index posting self-join
-    *    (tfidfScoredExact) — complete (every pair sharing ≥1
-    *    surviving term), but the candidate stage is quadratic in
-    *    near-dup clique size. The 100× fixture's real cliques are the
-    *    REPLICA-INDEX groups: every replica-i document carries the
-    *    suffix token "r·i", and after the df screen most documents
-    *    hold only 1-2 surviving terms — so "r·i" alone forms
-    *    nDocs/factor-member cliques (5 000 docs at every factor;
-    *    ~1.2·10⁹ true pairs at 100× — the ~55 min spill CUT of
-    *    round 14, and exactly the 115 M-row sf1.0 τ-pair answer of
-    *    round 11).
-    *  - `cluster`: the candidate- AND shuffle-bounded route
-    *    (tfidfTopkClustered).
-    *  - `auto` (default): exact below
-    *    `spark.graft.tfidf.topkGateDocs` (20 k, aligned with the
-    *    pairsWarnDocs gate — the sf0.01/sf0.1 oracle sfs run exact;
-    *    the parquet-footer doc count is deterministic), cluster past
-    *    it, with a stderr note naming the switch. Gate calibration
-    *    (round 15, /tmp/sf1.0 = 50 k docs): exact 688 s vs cluster
-    *    13.3 s — the replica-token cliques already dominate at 10×,
-    *    so the bounded route must be the default there; the sf1.0
-    *    ORACLE arm pins topk.mode=exact (the simjoin/knn pin
-    *    precedent). At sf0.1 (5 k docs) exact wins (1.8 s vs 3.5 s)
-    *    and stays the default. */
-  private def tfidfRoute(s: SparkSession, d: String): (String, Long) = {
-    val gate = s.conf.get("spark.graft.tfidf.topkGateDocs", "20000").toLong
-    require(gate >= 1,
-      s"spark.graft.tfidf.topkGateDocs must be >= 1, got $gate")
-    // Memoized per (JVM, dir) — round-15 verdict #5 (Tables.docCount).
-    val nDocs: Long = Tables.docCount(s, d)
-    val mode = s.conf.get("spark.graft.tfidf.topk.mode", "auto") match {
-      case "auto" => if (nDocs >= gate) "cluster" else "exact"
-      case m @ ("exact" | "cluster") => m
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.tfidf.topk.mode must be exact|cluster|auto, got '$other'")
-    }
-    if (mode == "cluster")
-      System.err.println(
-        "[graft] tfidf top-k: routing to the MinHash-banded cluster " +
-          "route (bucket-capped candidates, in-stage top-k heap; " +
-          "recall contract — set spark.graft.tfidf.topk.mode=exact " +
-          "to force the complete inverted-index form)")
-    // Surface the taken route machine-readably (round-15 advice): a
-    // harness that needs to know whether the recall contract applied
-    // reads this conf after the call instead of scraping stderr.
-    s.conf.set("spark.graft.tfidf.topk.lastRoute", mode)
-    (mode, nDocs)
+  /** q_tfidf_pairs' gate: the bounded top-k plan at or past
+    * `spark.graft.tfidf.pairsWarnDocs` (20 000) documents. */
+  private[queries] def tfidfPairsAtScale(s: SparkSession, d: String): Boolean =
+    atScale(s, "q_tfidf_pairs", "spark.graft.tfidf.pairsWarnDocs", 20000)(
+      Some(Tables.docCount(s, d)))
+
+  /** The route of the bounded top-k plans, with the doc count it
+    * read:
+    *  - `exact` below `spark.graft.tfidf.topkGateDocs` (20 k, aligned
+    *    with the pairsWarnDocs gate — the sf0.01/sf0.1 oracle sfs run
+    *    exact; the parquet-footer doc count is deterministic): score
+    *    via the inverted-index posting self-join (tfidfScoredExact) —
+    *    complete (every pair sharing ≥1 surviving term), but the
+    *    candidate stage is quadratic in near-dup clique size. The 100×
+    *    fixture's real cliques are the REPLICA-INDEX groups: every
+    *    replica-i document carries the suffix token "r·i", and after
+    *    the df screen most documents hold only 1-2 surviving terms —
+    *    so "r·i" alone forms nDocs/factor-member cliques (5 000 docs
+    *    at every factor; ~1.2·10⁹ true pairs at 100× — the ~55 min
+    *    spill CUT of round 14, and exactly the 115 M-row sf1.0 τ-pair
+    *    answer of round 11).
+    *  - `cluster` at or past it: the candidate- AND shuffle-bounded
+    *    route (tfidfTopkClustered).
+    * Gate calibration (round 15, /tmp/sf1.0 = 50 k docs): exact 688 s
+    * vs cluster 13.3 s — the replica-token cliques already dominate
+    * at 10×, so the bounded route must be the default there; the
+    * sf1.0 ORACLE arm pins the gate past its doc count (the
+    * simjoin/knn pin precedent). At sf0.1 (5 k docs) exact wins
+    * (1.8 s vs 3.5 s) and stays the default. */
+  private[queries] def tfidfRoute(s: SparkSession, d: String): (String, Long) = {
+    val nDocs = Tables.docCount(s, d)
+    (if (atScale(s, "tfidf top-k", "spark.graft.tfidf.topkGateDocs", 20000)(
+        Some(nDocs))) "cluster" else "exact", nDocs)
   }
 
   /** Directed scored candidate pairs (d1, d2, nsh, cos) of the EXACT
@@ -1095,19 +1061,16 @@ object Semantic {
     * climbing when it was killed). r = max(3, ⌈log₂ n / 5⌉): 3
     * through ~32 k docs (the oracled sfs — the sf0.01 recall pins
     * stay meaningful), 4 at the 100× fixture's 500 k, 6 at 50 M.
-    * `spark.graft.tfidf.bandRows` / `.bands` override. */
+    * `spark.graft.tfidf.bandRows` overrides. */
   private[queries] def tfidfBandRows(s: SparkSession, nDocs: Long): Int =
-    s.conf.getOption("spark.graft.tfidf.bandRows").map { v =>
-      val r = v.toInt
-      require(r >= 1 && r <= 16,
-        s"spark.graft.tfidf.bandRows must be in [1,16], got $v")
-      r
-    }.getOrElse(math.max(3, math.ceil(
+    s.conf.getOption("spark.graft.tfidf.bandRows").map(
+      boundedLong("spark.graft.tfidf.bandRows", _, 1, 16).toInt
+    ).getOrElse(math.max(3, math.ceil(
       math.log(math.max(2L, nDocs).toDouble) / math.log(2.0) / 5.0).toInt))
 
   /** Per-document packed sparse vectors: sorted term-hash keys `ks`,
     * aligned weights `ws`, squared norm `n2` (the SAME decimal fold
-    * as tfidfFrames' nrm), and `bands` MinHash band keys of
+    * as tfidfFrames' nrm), and 16 MinHash band keys `bands` of
     * size-derived row count (tfidfBandRows). One aggregation over the
     * posting frame builds everything — the per-term hashes fold as
     * codegen'd `min` columns, never an exploded (doc, term, plane)
@@ -1118,12 +1081,7 @@ object Semantic {
     * mid-overlap neighborhood too. */
   private def tfidfDocVectors(s: SparkSession, d: String,
       nDocs: Long): DataFrame = {
-    val bands = {
-      val b = s.conf.get("spark.graft.tfidf.bands", "16").toInt
-      require(b >= 1 && b <= 64,
-        s"spark.graft.tfidf.bands must be in [1,64], got $b")
-      b
-    }
+    val bands = 16
     val rows = tfidfBandRows(s, nDocs)
     val (w, _) = tfidfFrames(s, d)
     val minCols = (0 until bands * rows).map(m =>
@@ -1175,12 +1133,8 @@ object Semantic {
     * the heap dedups by d2, so they are harmless. */
   private[queries] def tfidfTopkClustered(s: SparkSession, d: String,
       nDocs: Long): DataFrame = {
-    val cap = {
-      val c = s.conf.get("spark.graft.tfidf.bucketCap", "64").toInt
-      require(c >= 6 && c <= 100000,
-        s"spark.graft.tfidf.bucketCap must be in [6,100000], got $c")
-      c
-    }
+    val cap = boundedLong("spark.graft.tfidf.bucketCap",
+      s.conf.get("spark.graft.tfidf.bucketCap", "64"), 6, 100000).toInt
     val dv = tfidfDocVectors(s, d, nDocs)
     val f = dv.select(explode(col("bands")).as("bd"), col("doc_id"),
         col("ks"), col("ws"), col("n2"))
@@ -1230,8 +1184,8 @@ object Semantic {
   }
 
   /** The bounded top-k frame (d1, d2, nsh, cos, rk ≤ 5), shared by
-    * q_tfidf_topk and q_tfidf_pairs' routed form, mode-dispatched
-    * (tfidfRoute). Both branches end in the same heap fold. */
+    * q_tfidf_topk and q_tfidf_pairs' routed form, routed by
+    * tfidfRoute. Both branches end in the same heap fold. */
   private def tfidfTopkFrame(s: SparkSession, d: String): DataFrame =
     tfidfRoute(s, d) match {
       case ("cluster", n) => tfidfTopkClustered(s, d, n)

@@ -1018,8 +1018,7 @@ object TextOps {
       // contract). Below it (every oracled sf): the declared
       // asymmetric-prefix exact plan.
       if (DedupStages.pairRoute(s, d) == "banded") {
-        DedupStages.containmentBanded(
-          Tables.documents(s, d), tau, DedupStages.pairBucketCap(s))
+        DedupStages.containmentBanded(s, d, tau, DedupStages.pairBucketCap(s))
           .orderBy("id1", "id2")
       } else {
       val sh = DedupStages.shingleSets(Tables.documents(s, d))

@@ -791,9 +791,9 @@ object VectorSearch {
     // q_semdedup clusters then prunes, q_dedup_embed thresholds a
     // distance — reciprocity needs neither constant). Scale: the
     // pairwise stage is SimilarityStages.knnCandidates — the
-    // block-chunked exact join by default (NO broadcast hint),
-    // `spark.graft.knn.mode=ann` = IVF multi-probe
-    // candidates + exact verify, set-equal at the test sfs
+    // block-chunked exact join below the size gate (NO broadcast
+    // hint), IVF multi-probe candidates + exact verify past
+    // `spark.graft.ann.autoThresholdBytes`, set-equal at the test sfs
     // (ScalePathSpec); top-3 is a vec-id-PARTITIONED window; the
     // reciprocity check is a plain self-equi-join of the n·3 edge
     // frame on the REVERSED pair key — both sides shuffle by the
@@ -1203,8 +1203,8 @@ object VectorSearch {
     // way; q_retrieval_eval grades the ranking — this grades the
     // label-propagation operator itself). Scale: the pairwise stage
     // is SimilarityStages.knnCandidatesBipartite (block-chunked exact
-    // by default, `spark.graft.knn.mode=ann` = the IVF cell-join
-    // route, set-equal at the test sfs per ScalePathSpec) with the
+    // below the size gate, the IVF cell-join route past
+    // `spark.graft.ann.autoThresholdBytes`, set-equal at the test sfs per ScalePathSpec) with the
     // held-out × labeled restriction inside the candidate stage,
     // top-5 is an anchor-partitioned window, and
     // the vote + accuracy folds are ≤|classes|-sized per anchor.

@@ -129,6 +129,29 @@ package object queries {
   def auditOn(s: SparkSession): Boolean =
     s.conf.get("spark.graft.audit", "true").toBoolean
 
+  /** `raw`, the value of the setting `key`, as an integer in
+    * [`lo`, `hi`]; anything else throws naming the key. */
+  def boundedLong(key: String, raw: String, lo: Long, hi: Long = Long.MaxValue): Long =
+    raw.toLongOption.filter(v => v >= lo && v <= hi).getOrElse(
+      throw new IllegalArgumentException(s"$key must be an integer in [$lo, $hi], got '$raw'"))
+
+  /** The size gate of every auto-routed operator: true (take the
+    * scale route) when `size` is known and at least the threshold
+    * `key` (default `default`, at least 1). An unknown size stays on
+    * the declared exact route. The threshold alone forces a route: 1
+    * forces the scale route, `Long.MaxValue` the exact one. A scale
+    * route is noted on stderr with the gate's input and threshold. */
+  def atScale(s: SparkSession, gate: String, key: String, default: Long)(
+      size: => Option[BigInt]): Boolean = {
+    val threshold = s.conf.getOption(key).fold(default)(boundedLong(key, _, 1))
+    size.filter(_ >= threshold) match {
+      case Some(n) =>
+        System.err.println(s"[graft] $gate: scale route, size $n >= $key=$threshold")
+        true
+      case None => false
+    }
+  }
+
   /** One declared operator from SURVEY.md §2: a Spark builder and an
     * optional DuckDB oracle (ANSI SQL over the same parquet tables).
     * `oracle = None` → driver records a weaker rows-only check

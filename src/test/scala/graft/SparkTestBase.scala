@@ -47,6 +47,26 @@ trait SparkTestBase extends AnyFunSuite {
     } finally sc.removeSparkListener(l)
   }
 
+  /** Runs `body` with the session setting `key` = `value`, then unsets it. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    spark.conf.set(key, value)
+    try body finally spark.conf.unset(key)
+  }
+
+  /** `body`'s result and what it printed to `System.err`. */
+  def capturingErr[T](body: => T): (T, String) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val orig = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    val r = try body finally System.setErr(orig)
+    (r, buf.toString("UTF-8"))
+  }
+
+  /** Whether `df` pairs vectors on the ann route: its plan carries the
+    * route's candidate filter. */
+  def annRouted(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.toString.contains("min_common_long")
+
   def tmpDir(): String = Files.createTempDirectory("graft_spec_").toString
 
   /** A copy of the fixture directory `d`, one file per table. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
-/** Round-18 verdict #6: ScalePathSpec pins `knn.mode=ann` ≡ exact at
+/** Round-18 verdict #6: ScalePathSpec pins the ann route ≡ exact at
   * the TEST sfs; this panel evidences the minimal-shared-cell
   * candidate stage's completeness at the 100× replica-clique fixture
   * shape — the scale it actually runs at — without paying the full
@@ -37,21 +37,23 @@ class AnnFixtureRecallSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).toSeq
     assert(anchorIds.nonEmpty, "hash sample came back empty")
 
-    def top10(mode: String) = {
-      s.conf.set("spark.graft.knn.mode", mode)
-      try {
+    // The route is forced by the size threshold: past every input for
+    // exact, 1 byte for ann.
+    def top10(route: String, threshold: Long) =
+      withConf("spark.graft.ann.autoThresholdBytes", threshold.toString) {
+        assert(SimilarityStages.route(e) === route)
         val cand = SimilarityStages.knnCandidates(e, "cosine")
           .filter(col("a").isin(anchorIds: _*))
+        assert(annRouted(cand) === (route == "ann"))
         val w = Window.partitionBy("a").orderBy(col("dist"), col("b"))
         cand.withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 10)
           .select("a", "b")
           .localCheckpoint() // pin: consumed by two counting jobs
-      } finally s.conf.unset("spark.graft.knn.mode")
-    }
+      }
 
-    val exact = top10("exact")
-    val ann = top10("ann")
+    val exact = top10("exact", Long.MaxValue)
+    val ann = top10("ann", 1L)
     val truth = exact.count()
     val hit = exact.join(ann, Seq("a", "b")).count()
     val recall = hit.toDouble / truth

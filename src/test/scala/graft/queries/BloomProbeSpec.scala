@@ -32,19 +32,23 @@ class BloomProbeSpec extends SparkTestBase {
       val deg = GraphStages.degrees(e)
       val o = GraphStages.orientedEdges(e, deg)
       val w = GraphStages.orientedWedges(o).localCheckpoint(eager = false)
+      def bloomed(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.optimizedPlan.toString.contains("bloom_might_contain")
       val pre = w.count()
-      val post = GraphStages.bloomPrune(w, o, "t1", "t2").count()
+      val pruned = GraphStages.bloomPrune(w, o, "t1", "t2")
+      assert(bloomed(pruned), "a 1-edge gate must take the prune")
+      val post = pruned.count()
       val triOn = GraphStages.closeWedges(w, o).count()
-      spark.conf.set("spark.graft.wedge.bloom", "off")
+      // A gate past every edge count skips the prune.
+      spark.conf.set("spark.graft.wedge.bloom.minEdges", Long.MaxValue.toString)
+      assert(!bloomed(GraphStages.bloomPrune(w, o, "t1", "t2")),
+        "a gate past the edge count must skip the prune")
       val triOff = GraphStages.closeWedges(w, o).count()
       assert(triOn === triOff,
         s"bloom prune changed the closing join output: $triOn vs $triOff")
       assert(post >= triOn, "bloom dropped a closing wedge (false negative)")
       assert(post < pre / 2,
         s"bloom pruned nothing at organic closure: $post of $pre")
-    } finally {
-      spark.conf.unset("spark.graft.wedge.bloom")
-      spark.conf.unset("spark.graft.wedge.bloom.minEdges")
-    }
+    } finally spark.conf.unset("spark.graft.wedge.bloom.minEdges")
   }
 }

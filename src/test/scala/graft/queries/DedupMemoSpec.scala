@@ -6,7 +6,8 @@ import graft.{SparkEntry, SparkTestBase}
   * table (DedupStages.bandedJaccardPairs under Tables.pinned): the
   * second pair-output operator on a corpus reuses them, and a rewritten
   * table or a rebuilt session builds them afresh, so both operators
-  * always read the documents as they are. */
+  * always read the documents as they are. q_jaccard_containment's band
+  * frame follows the same rule. */
 class DedupMemoSpec extends SparkTestBase {
   private val ops = Seq("q_dedup_near", "q_dup_clusters")
 
@@ -28,16 +29,18 @@ class DedupMemoSpec extends SparkTestBase {
     d
   }
 
-  private def rows(key: String, d: String): Seq[Seq[Any]] = {
-    val s = spark
-    s.conf.set("spark.graft.dedup.pair.mode", "banded")
-    try SparkEntry.queries(key)(s, d).collect().map(_.toSeq).toSeq
-    finally s.conf.unset("spark.graft.dedup.pair.mode")
-  }
+  /** `key`'s rows on `d`, on the banded route forced by a doc gate of 1. */
+  private def rows(key: String, d: String): Seq[Seq[Any]] =
+    withConf("spark.graft.dedup.pairGateDocs", "1") {
+      assert(DedupStages.pairRoute(spark, d) === "banded")
+      SparkEntry.queries(key)(spark, d).collect().map(_.toSeq).toSeq
+    }
 
-  /** The Spark jobs of `body` that build the banded pairs of `d`. */
-  private def buildJobs(d: String)(body: => Any): Int =
-    jobDescriptionsDuring(body).count(_ == s"graft dedup banded $d/documents.parquet")
+  /** The Spark jobs of `body` that build the `kind` artefact of `d`. */
+  private def buildJobs(d: String, kind: String = "dedup banded")(body: => Any): Int =
+    jobDescriptionsDuring(body).count(_ == s"graft $kind $d/documents.parquet")
+
+  private def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("q_dup_clusters right after q_dedup_near runs no banded build job") {
     val d = corpus()
@@ -56,6 +59,27 @@ class DedupMemoSpec extends SparkTestBase {
       "the rewrite must change both results")
     val fresh = copyOf(d)
     assert(again === ops.map(rows(_, fresh)))
+  }
+
+  test("banded q_jaccard_containment builds its band frame once per corpus and releases it on a rewrite") {
+    val d = corpus()
+    val containment = "q_jaccard_containment"
+    val before = persistentRdds
+    var first = Seq.empty[Seq[Any]]
+    assert(buildJobs(d, "dedup band") { first = rows(containment, d) } > 0,
+      "the first call builds")
+    val afterFirst = persistentRdds
+    val pinned = afterFirst -- before
+    assert(pinned.nonEmpty, "the band frame is pinned")
+    var second = Seq.empty[Seq[Any]]
+    assert(buildJobs(d, "dedup band") { second = rows(containment, d) } === 0)
+    assert(persistentRdds.size === afterFirst.size, "a second call adds no pin")
+    assert(second === first)
+    rewriteHalf(d, "documents", "doc_id")
+    val again = rows(containment, d)
+    assert(again != first, "the rewrite must change the result")
+    assert(again === rows(containment, copyOf(d)))
+    assert((persistentRdds intersect pinned).isEmpty, "the rewrite releases the old pin")
   }
 
   test("after the session is stopped and rebuilt both operators rebuild and agree") {

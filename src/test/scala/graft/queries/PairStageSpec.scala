@@ -25,11 +25,6 @@ class PairStageSpec extends SparkTestBase {
     df.select("a", "b", "dist").collect().map(r => (r.getLong(0), r.getLong(1),
       java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSet
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    spark.conf.set(key, value)
-    try body finally spark.conf.unset(key)
-  }
-
   test("knnCandidatesBipartite = knnCandidates restricted to false-side a, true-side b, on both routes") {
     val e = vectors
     val labs = e.select("vec_id", "lab").collect()
@@ -42,11 +37,11 @@ class PairStageSpec extends SparkTestBase {
       assert(got === want, s"$route/$metric: +${(got -- want).size} -${(want -- got).size}")
     }
     Seq("cosine", "l2").foreach { metric =>
-      assert(SimilarityStages.resolveMode(e.select("vec_id", "v")) === "exact")
+      assert(SimilarityStages.route(e.select("vec_id", "v")) === "exact")
       check("exact", metric)
       // A 1-byte threshold routes every frame to ann.
       withConf("spark.graft.ann.autoThresholdBytes", "1") {
-        assert(SimilarityStages.resolveMode(e.select("vec_id", "v")) === "ann")
+        assert(SimilarityStages.route(e.select("vec_id", "v")) === "ann")
         check("ann", metric)
       }
     }

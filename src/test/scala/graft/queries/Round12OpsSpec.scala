@@ -112,14 +112,6 @@ class Round12OpsSpec extends SparkTestBase {
 
   // ------------------------------------------------ tfidf_pairs route
 
-  private def capturingErr[T](body: => T): (T, String) = {
-    val buf = new java.io.ByteArrayOutputStream()
-    val orig = System.err
-    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
-    val r = try body finally System.setErr(orig)
-    (r, buf.toString("UTF-8"))
-  }
-
   test("tfidf_pairs: doc-count gate ROUTES to the bounded top-k plan " +
     "at scale (round 14); silent and unchanged below the gate") {
     val sf = "/root/testdata/sf0.001"
@@ -132,14 +124,16 @@ class Round12OpsSpec extends SparkTestBase {
     assert(!quiet.contains("q_tfidf_pairs:"),
       s"no routing message expected below the gate, got: $quiet")
     assert(below.columns.toSeq === Seq("d1", "d2", "n_shared", "cos"))
-    // Gate forced to 1: auto ROUTES to the bounded top-k plan and
+    // Gate forced to 1: the gate ROUTES to the bounded top-k plan and
     // says so on stderr (round-13 verdict #4 — a warning alone left
     // the quadratic contract as the default at scale).
     spark.conf.set("spark.graft.tfidf.pairsWarnDocs", "1")
     val (df, loud) = try capturingErr {
+      assert(Semantic.tfidfPairsAtScale(spark, sf))
       SparkEntry.queries("q_tfidf_pairs")(spark, sf)
     } finally spark.conf.unset("spark.graft.tfidf.pairsWarnDocs")
-    assert(loud.contains("routing to the bounded top-k plan"),
+    assert(loud.contains("q_tfidf_pairs: scale route, size 500 >= " +
+      "spark.graft.tfidf.pairsWarnDocs=1"),
       s"routing message expected past the gate, got: $loud")
     // Round-15 (round-14 advice #2): the routed plan keeps the
     // DECLARED pair schema — the top-k neighborhood projected into
@@ -147,25 +141,34 @@ class Round12OpsSpec extends SparkTestBase {
     // τ-pair contract, never a data-dependent column switch.
     assert(df.columns.toSeq === Seq("d1", "d2", "n_shared", "cos"),
       "past the gate the routed frame keeps the declared pair schema")
-    // mode=exact past the gate: the τ-pair contract, no routing.
-    spark.conf.set("spark.graft.tfidf.mode", "exact")
-    spark.conf.set("spark.graft.tfidf.pairsWarnDocs", "1")
-    val (forced, _) = try capturingErr {
+    // A gate past every corpus forces the τ-pair contract, no routing.
+    spark.conf.set("spark.graft.tfidf.pairsWarnDocs", Long.MaxValue.toString)
+    val (forced, silent) = try capturingErr {
+      assert(!Semantic.tfidfPairsAtScale(spark, sf))
       SparkEntry.queries("q_tfidf_pairs")(spark, sf)
-    } finally {
-      spark.conf.unset("spark.graft.tfidf.mode")
-      spark.conf.unset("spark.graft.tfidf.pairsWarnDocs")
-    }
+    } finally spark.conf.unset("spark.graft.tfidf.pairsWarnDocs")
+    assert(!silent.contains("q_tfidf_pairs:"))
     assert(forced.columns.toSeq === Seq("d1", "d2", "n_shared", "cos"))
     // Conf validation.
     spark.conf.set("spark.graft.tfidf.pairsWarnDocs", "0")
     try intercept[IllegalArgumentException] {
       SparkEntry.queries("q_tfidf_pairs")(spark, sf)
     } finally spark.conf.unset("spark.graft.tfidf.pairsWarnDocs")
-    spark.conf.set("spark.graft.tfidf.mode", "bogus")
-    try intercept[IllegalArgumentException] {
-      SparkEntry.queries("q_tfidf_pairs")(spark, sf)
-    } finally spark.conf.unset("spark.graft.tfidf.mode")
+    spark.conf.set("spark.graft.tfidf.pairsWarnDocs", "bogus")
+    try {
+      val ex = intercept[IllegalArgumentException] {
+        SparkEntry.queries("q_tfidf_pairs")(spark, sf)
+      }
+      assert(ex.getMessage.contains("spark.graft.tfidf.pairsWarnDocs"))
+    } finally spark.conf.unset("spark.graft.tfidf.pairsWarnDocs")
+    // After the builds above, a rebuild runs no job beyond the tf-idf
+    // frames it pins at build time, as q_tfidf_topk's does: the gate
+    // reads the memoized doc count.
+    val (pairs, topk) = (SparkEntry.queries("q_tfidf_pairs"), SparkEntry.queries("q_tfidf_topk"))
+    topk(spark, sf).queryExecution.analyzed
+    assert(jobsDuring(Semantic.tfidfPairsAtScale(spark, sf)) === 0)
+    assert(jobsDuring(pairs(spark, sf).queryExecution.analyzed) ===
+      jobsDuring(topk(spark, sf).queryExecution.analyzed))
   }
 
   // -------------------------------------------------- dbscan ann arm
@@ -182,11 +185,18 @@ class Round12OpsSpec extends SparkTestBase {
     val exact = run()
     // Deliberately degrade recall: force ann with MANY cells and the
     // minimum probes, so the candidate stage misses eps-edges.
-    spark.conf.set("spark.graft.knn.mode", "ann")
+    spark.conf.set("spark.graft.ann.autoThresholdBytes", "1")
     spark.conf.set("spark.graft.knn.ann.cells", "64")
     spark.conf.set("spark.graft.knn.ann.probes", "2")
-    val ann = try run() finally {
-      spark.conf.unset("spark.graft.knn.mode")
+    // q_dbscan pins its neighbor frame, so the route shows in the
+    // gate's stderr notice rather than in the final plan.
+    val ann = try {
+      val (rows, err) = capturingErr(run())
+      assert(err.contains("vector pair stage: scale route"),
+        s"the 1-byte threshold must route q_dbscan to ann, got: $err")
+      rows
+    } finally {
+      spark.conf.unset("spark.graft.ann.autoThresholdBytes")
       spark.conf.unset("spark.graft.knn.ann.cells")
       spark.conf.unset("spark.graft.knn.ann.probes")
     }

@@ -10,6 +10,27 @@ import org.apache.spark.sql.functions._
   * randomized checks beyond the fixed-corpus oracle. */
 class ScalePathSpec extends SparkTestBase {
 
+  /** A doc-count gate's threshold that forces `scale` (true) or the
+    * declared exact route: 1, or past every corpus. */
+  private def forcing(scale: Boolean): String =
+    if (scale) "1" else Long.MaxValue.toString
+
+  /** q_tfidf_topk's rows on `d` with `route` (exact | cluster) forced
+    * by the doc gate, after asserting the gate takes it. */
+  private def topkAt(d: String, route: String): Array[org.apache.spark.sql.Row] =
+    withConf("spark.graft.tfidf.topkGateDocs", forcing(route == "cluster")) {
+      assert(Semantic.tfidfRoute(spark, d)._1 === route)
+      graft.SparkEntry.queries("q_tfidf_topk")(spark, d).collect()
+    }
+
+  /** Pair-dedup operator `name`'s rows on `d` with `route` (exact |
+    * banded) forced by the doc gate, after asserting the gate takes it. */
+  private def dedupAt(name: String, d: String, route: String): Array[org.apache.spark.sql.Row] =
+    withConf("spark.graft.dedup.pairGateDocs", forcing(route == "banded")) {
+      assert(DedupStages.pairRoute(spark, d) === route)
+      graft.SparkEntry.queries(name)(spark, d).collect()
+    }
+
   test("unit-bucket theta-range candidates cover every qualifying pair (seeded)") {
     // q_join_theta_range's claim: value ∈ [c-0.5, c+0.5) ⟹
     // floor(value) ∈ {⌊c-0.5⌋, ⌊c-0.5⌋+1}.
@@ -228,12 +249,14 @@ class ScalePathSpec extends SparkTestBase {
     val exactPairs = pairs()
     val exactSurvivors = graft.SparkEntry.queries("q_dedup_embed")(spark, sf)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    spark.conf.set("spark.graft.knn.mode", "ann")
+    // A 1-byte threshold forces the ann route.
     val (annPairs, annSurvivors) =
-      try (pairs(),
-        graft.SparkEntry.queries("q_dedup_embed")(spark, sf)
+      withConf("spark.graft.ann.autoThresholdBytes", "1") {
+        Seq("q_similarity_join", "q_dedup_embed").foreach(q =>
+          assert(annRouted(graft.SparkEntry.queries(q)(spark, sf)), s"$q must route to ann"))
+        (pairs(), graft.SparkEntry.queries("q_dedup_embed")(spark, sf)
           .select("vec_id").collect().map(_.getLong(0)).toSet)
-      finally spark.conf.unset("spark.graft.knn.mode")
+      }
     assert(annPairs === exactPairs,
       s"ann pair delta: +${(annPairs -- exactPairs).size} " +
         s"-${(exactPairs -- annPairs).size} of ${exactPairs.size}")
@@ -492,7 +515,7 @@ class ScalePathSpec extends SparkTestBase {
   }
 
   test("knn ann mode: mutual_knn/lof/dbscan set-equal to exact at total-recall sfs") {
-    // The `spark.graft.knn.mode=ann` route's claim, per operator:
+    // The ann route's claim, per operator:
     // IVF multi-probe candidates in the operator's own metric + the
     // exact verify reproduce the exact result wherever recall is
     // total (measured at the test sfs with the default 8 probes of
@@ -502,17 +525,21 @@ class ScalePathSpec extends SparkTestBase {
     // cluster label, so set equality is the ONLY acceptable bar.
     val sf = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$sf/embeddings.parquet").exists())
-    def outs(): Map[String, Set[String]] =
-      Seq("q_mutual_knn", "q_lof", "q_dbscan", "q_knn_classifier")
-        .map { q =>
-        q -> graft.SparkEntry.queries(q)(spark, sf)
-          .collect().map(_.mkString("|")).toSet
-      }.toMap
-    val exact = outs()
+    val ops = Seq("q_mutual_knn", "q_lof", "q_dbscan", "q_knn_classifier")
+    def out(q: String): Set[String] =
+      graft.SparkEntry.queries(q)(spark, sf).collect().map(_.mkString("|")).toSet
+    val exact = ops.map(q => q -> out(q)).toMap
     assert(exact.values.forall(_.nonEmpty), "fixture must produce rows")
-    spark.conf.set("spark.graft.knn.mode", "ann")
-    val ann = try outs()
-      finally spark.conf.unset("spark.graft.knn.mode")
+    // A 1-byte threshold forces the ann route. These operators pin
+    // their candidate frames, so the route shows in the gate's stderr
+    // notice rather than in the final plan.
+    val ann = withConf("spark.graft.ann.autoThresholdBytes", "1") {
+      ops.map { q =>
+        val (rows, err) = capturingErr(out(q))
+        assert(err.contains("vector pair stage: scale route"), s"$q must route to ann")
+        q -> rows
+      }.toMap
+    }
     exact.foreach { case (q, ex) =>
       val an = ann(q)
       assert(an === ex,
@@ -523,9 +550,10 @@ class ScalePathSpec extends SparkTestBase {
     val e = graft.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val n = e.count()
-    spark.conf.set("spark.graft.knn.mode", "ann")
-    val cand = try SimilarityStages.knnCandidates(e, "l2").count()
-      finally spark.conf.unset("spark.graft.knn.mode")
+    val cand = withConf("spark.graft.ann.autoThresholdBytes", "1") {
+      assert(SimilarityStages.route(e) === "ann")
+      SimilarityStages.knnCandidates(e, "l2").count()
+    }
     assert(cand < n * (n - 1),
       s"ann directed candidates $cand not below all-pairs ${n * (n - 1)}")
   }
@@ -614,41 +642,39 @@ class ScalePathSpec extends SparkTestBase {
 
   test("mode auto: size-gated — exact below the threshold, ann at it, explicit wins") {
     // Round-10 verdict #1: the measured scale posture is the DEFAULT.
-    // `spark.graft.knn.mode` default `auto` resolves by the
-    // input's size estimate against spark.graft.ann.autoThresholdBytes:
-    // the oracled test sfs stay on the declared exact plan, scaled-up
-    // frames route to IVF multi-probe without any conf change.
+    // The route goes by the input's size estimate against
+    // spark.graft.ann.autoThresholdBytes: the oracled test sfs stay on
+    // the declared exact plan, scaled-up frames route to IVF
+    // multi-probe without any conf change, and the threshold alone
+    // forces either route.
     val s = spark
     import s.implicits._
     val emb = Seq.tabulate(64)(i =>
       (i.toLong, Array.fill(8)(i / 64.0 - 0.5))).toDF("vec_id", "v")
     // tiny frame, default threshold (4 MiB) → exact
-    assert(SimilarityStages.resolveMode(emb) === "exact")
+    assert(SimilarityStages.route(emb) === "exact")
     // threshold forced to 1 byte → every frame is "large" → ann
-    s.conf.set("spark.graft.ann.autoThresholdBytes", "1")
-    try {
-      assert(SimilarityStages.resolveMode(emb) === "ann")
+    withConf("spark.graft.ann.autoThresholdBytes", "1") {
+      assert(SimilarityStages.route(emb) === "ann")
       // the ann-routed candidate stage must genuinely prune: no
       // CartesianProduct in the plan (IVF equi-join on cell keys)
       val plan = SimilarityStages.knnCandidates(emb, "l2")
         .queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"),
         s"auto-ann plan still carries an all-pairs stage:\n$plan")
-      // explicit mode beats the size gate in both directions
-      s.conf.set("spark.graft.knn.mode", "exact")
-      try assert(SimilarityStages.resolveMode(emb) === "exact")
-      finally s.conf.unset("spark.graft.knn.mode")
-    } finally s.conf.unset("spark.graft.ann.autoThresholdBytes")
-    s.conf.set("spark.graft.knn.mode", "ann")
-    try assert(SimilarityStages.resolveMode(emb) === "ann")
-    finally s.conf.unset("spark.graft.knn.mode")
-    // malformed mode names the key
-    s.conf.set("spark.graft.knn.mode", "fuzzy")
-    try {
+    }
+    // a threshold past every input forces exact; one past the Int
+    // range is accepted (the threshold is a Long)
+    withConf("spark.graft.ann.autoThresholdBytes", Long.MaxValue.toString)(
+      assert(SimilarityStages.route(emb) === "exact"))
+    withConf("spark.graft.ann.autoThresholdBytes", (8L << 30).toString)(
+      assert(SimilarityStages.route(emb) === "exact"))
+    // malformed threshold names the key
+    withConf("spark.graft.ann.autoThresholdBytes", "fuzzy") {
       val ex = intercept[IllegalArgumentException](
-        SimilarityStages.resolveMode(emb))
-      assert(ex.getMessage.contains("spark.graft.knn.mode"))
-    } finally s.conf.unset("spark.graft.knn.mode")
+        SimilarityStages.route(emb))
+      assert(ex.getMessage.contains("spark.graft.ann.autoThresholdBytes"))
+    }
   }
 
   test("sizing treats an unknown estimate as unknown: RDD-backed frame → 4 blocks, exact mode, 16 cells") {
@@ -672,7 +698,7 @@ class ScalePathSpec extends SparkTestBase {
       "RDD-backed frame must report an unknown size estimate")
     assert(SimilarityStages.blockCount(rddFrame) === 4,
       "unknown estimate must fall back to 4 blocks, not the 4096 cap")
-    assert(SimilarityStages.resolveMode(rddFrame)
+    assert(SimilarityStages.route(rddFrame)
       === "exact", "unknown estimate must resolve to the declared exact mode")
     assert(SimilarityStages.annCells(rddFrame)
       === 16, "unknown estimate must resolve to the 16-cell floor")
@@ -699,11 +725,21 @@ class ScalePathSpec extends SparkTestBase {
     failsNaming("spark.graft.simjoin.blocks", "many")(
       SimilarityStages.blockCount(emb))
     failsNaming("spark.graft.ann.autoThresholdBytes", "-1")(
-      SimilarityStages.resolveMode(emb))
+      SimilarityStages.route(emb))
     failsNaming("spark.graft.knn.ann.cells", "0")(
       SimilarityStages.annCells(emb))
     failsNaming("spark.graft.knn.ann.probes", "zero")(
       SimilarityStages.annProbes(emb, 16, 8))
+    val edges = Seq((1L, 2L)).toDF("s", "t")
+    val wedges = Seq((1L, 2L)).toDF("t1", "t2")
+    failsNaming("spark.graft.wedge.bloom.minEdges", "-5")(
+      GraphStages.bloomPrune(wedges, edges, "t1", "t2"))
+    failsNaming("spark.graft.wedge.bloom.minEdges", "many")(
+      GraphStages.bloomPrune(wedges, edges, "t1", "t2"))
+    failsNaming("spark.graft.dedup.pair.bucketCap", "lots")(
+      DedupStages.pairBucketCap(s))
+    failsNaming("spark.graft.tfidf.bandRows", "three")(
+      Semantic.tfidfBandRows(s, 500))
   }
 
   test("min-label propagation stops at the fixpoint: round count = diameter-bound + proof round") {
@@ -893,20 +929,21 @@ class ScalePathSpec extends SparkTestBase {
     val sf001 = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$sf001/documents.parquet").exists())
     val s = spark
-    def pairsAt(mode: Option[String], warnDocs: Option[String]) = {
-      mode.foreach(s.conf.set("spark.graft.tfidf.mode", _))
+    // Rows at the gate `warnDocs` (default when None), asserting the
+    // route the gate takes.
+    def pairsAt(warnDocs: Option[String], scale: Boolean) = {
       warnDocs.foreach(s.conf.set("spark.graft.tfidf.pairsWarnDocs", _))
-      try graft.SparkEntry.queries("q_tfidf_pairs")(s, sf001)
-        .collect().map(_.toSeq).toSet
-      finally {
-        s.conf.unset("spark.graft.tfidf.mode")
-        s.conf.unset("spark.graft.tfidf.pairsWarnDocs")
-      }
+      try {
+        assert(Semantic.tfidfPairsAtScale(s, sf001) === scale)
+        graft.SparkEntry.queries("q_tfidf_pairs")(s, sf001)
+          .collect().map(_.toSeq).toSet
+      } finally s.conf.unset("spark.graft.tfidf.pairsWarnDocs")
     }
-    // Below the gate (default 20000 docs ≫ sf0.001) auto must
-    // reproduce the declared exact τ-pair form row-for-row.
-    val auto = pairsAt(None, None)
-    val exact = pairsAt(Some("exact"), None)
+    // Below the gate (default 20000 docs ≫ sf0.001) the default must
+    // reproduce the declared exact τ-pair form, which a gate past
+    // every corpus forces, row-for-row.
+    val auto = pairsAt(None, scale = false)
+    val exact = pairsAt(Some(Long.MaxValue.toString), scale = false)
     assert(auto === exact, "auto below the gate must equal exact")
     // Past the gate auto must BE the bounded top-k route, projected
     // into the DECLARED pair schema (round-14 advice: no
@@ -919,7 +956,7 @@ class ScalePathSpec extends SparkTestBase {
     }
     assert(routedDf.columns.toSeq === Seq("d1", "d2", "n_shared", "cos"),
       "routed plan must keep the declared schema")
-    val routed = pairsAt(None, Some("1"))
+    val routed = pairsAt(Some("1"), scale = true)
     val topkPairs = Semantic.tfidfTopkPairs(s, sf001)
       .collect().map(_.toSeq).toSet
     assert(routed === topkPairs,
@@ -956,12 +993,8 @@ class ScalePathSpec extends SparkTestBase {
     // near-dup neighborhoods whose clique volume kills the exact
     // plan — so the high-cos slice is pinned tight and the overall
     // figure pinned at its contract level.
-    def topkRows(mode: String): Set[(Long, Long, Double)] = {
-      s.conf.set("spark.graft.tfidf.topk.mode", mode)
-      try graft.SparkEntry.queries("q_tfidf_topk")(s, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      finally s.conf.unset("spark.graft.tfidf.topk.mode")
-    }
+    def topkRows(route: String): Set[(Long, Long, Double)] =
+      topkAt(sf, route).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val exactTop = topkRows("exact")
     val clusterTop = topkRows("cluster")
     val overall = clusterTop.intersect(exactTop).size.toDouble / exactTop.size
@@ -974,12 +1007,13 @@ class ScalePathSpec extends SparkTestBase {
     assert(hiRecall >= 0.95,
       s"high-cos (>=0.5) top-k recall $hiRecall < 0.95")
     assert(overall >= 0.5, s"overall top-k recall $overall < 0.5")
-    // auto: exact below the gate, cluster at/past it.
-    assert(topkRows("auto") === exactTop, "auto below the 20k-doc gate = exact")
-    s.conf.set("spark.graft.tfidf.topkGateDocs", "1")
-    val autoRouted = try topkRows("auto")
-    finally s.conf.unset("spark.graft.tfidf.topkGateDocs")
-    assert(autoRouted === clusterTop, "auto past the gate = cluster")
+    // The default gate: exact below it; past it, the clustered frame.
+    assert(Semantic.tfidfRoute(s, sf)._1 === "exact")
+    val autoTop = graft.SparkEntry.queries("q_tfidf_topk")(s, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(autoTop === exactTop, "auto below the 20k-doc gate = exact")
+    assert(clusterTop === clusterRows.map(r => (r._1, r._2, r._4)).toSet,
+      "past the gate = cluster")
     // Band-rows derivation (the r=3 100× spill lesson): r grows
     // log₂(n)/5, floor 3; explicit conf wins; junk is rejected with
     // the key named.
@@ -1020,16 +1054,12 @@ class ScalePathSpec extends SparkTestBase {
     }).toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("tie_clique").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def run(cap: Option[Int], mode: String): Seq[(Long, Long, Double, Long)] = {
+    def run(cap: Option[Int], route: String): Seq[(Long, Long, Double, Long)] = {
       cap.foreach(c => s.conf.set("spark.graft.tfidf.bucketCap", c.toString))
-      s.conf.set("spark.graft.tfidf.topk.mode", mode)
-      try graft.SparkEntry.queries("q_tfidf_topk")(s, dir).collect()
+      try topkAt(dir, route)
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
         .toSeq
-      finally {
-        s.conf.unset("spark.graft.tfidf.topk.mode")
-        cap.foreach(_ => s.conf.unset("spark.graft.tfidf.bucketCap"))
-      }
+      finally cap.foreach(_ => s.conf.unset("spark.graft.tfidf.bucketCap"))
     }
     val exact = run(None, "exact")
     val capped = run(Some(6), "cluster")
@@ -1060,12 +1090,8 @@ class ScalePathSpec extends SparkTestBase {
     }.toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("midj").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def rows(mode: String): Set[(Long, Long)] = {
-      s.conf.set("spark.graft.tfidf.topk.mode", mode)
-      try graft.SparkEntry.queries("q_tfidf_topk")(s, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      finally s.conf.unset("spark.graft.tfidf.topk.mode")
-    }
+    def rows(route: String): Set[(Long, Long)] =
+      topkAt(dir, route).map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = rows("exact")
     assert(exact.size === 400, s"exact must be the directed pairs, got ${exact.size}")
     val cluster = rows("cluster")
@@ -1188,11 +1214,10 @@ class ScalePathSpec extends SparkTestBase {
     val sf = "/root/testdata/sf0.01"
     assume(new java.io.File(s"$sf/documents.parquet").exists())
     val s = spark
-    def rowsOf(name: String, mode: Option[String]): Set[Seq[Any]] = {
-      mode.foreach(m => s.conf.set("spark.graft.dedup.pair.mode", m))
-      try graft.SparkEntry.queries(name)(s, sf).collect().map(_.toSeq).toSet
-      finally s.conf.unset("spark.graft.dedup.pair.mode")
-    }
+    // Rows at the default gate (None) or with `route` forced.
+    def rowsOf(name: String, route: Option[String]): Set[Seq[Any]] =
+      route.fold(graft.SparkEntry.queries(name)(s, sf).collect())(
+        dedupAt(name, sf, _)).map(_.toSeq).toSet
     // q_dedup_near: the banded form is the ≥τ contract restricted to
     // top-5 neighborhoods — a SUBSET with identical jac per pair.
     val nearExact = rowsOf("q_dedup_near", None) // below gate: exact
@@ -1214,7 +1239,7 @@ class ScalePathSpec extends SparkTestBase {
     assert(rowsOf("q_dup_clusters", Some("banded")) ===
       rowsOf("q_dup_clusters", None),
       "banded CC must reproduce the exact cluster assignment here")
-    // auto dispatch: below the 20k gate = exact; past it = banded;
+    // gate dispatch: below the 20k gate = exact; past it = banded;
     // the taken route is conf-readable (round-15 advice protocol).
     rowsOf("q_dedup_near", None)
     assert(s.conf.get("spark.graft.dedup.pair.lastRoute") === "exact")
@@ -1223,12 +1248,12 @@ class ScalePathSpec extends SparkTestBase {
     finally s.conf.unset("spark.graft.dedup.pairGateDocs")
     assert(s.conf.get("spark.graft.dedup.pair.lastRoute") === "banded")
     assert(autoRouted === nearBanded, "auto past the gate = banded")
-    s.conf.set("spark.graft.dedup.pair.mode", "junk")
+    s.conf.set("spark.graft.dedup.pairGateDocs", "junk")
     val ex2 = intercept[IllegalArgumentException] {
       try DedupStages.pairRoute(s, sf)
-      finally s.conf.unset("spark.graft.dedup.pair.mode")
+      finally s.conf.unset("spark.graft.dedup.pairGateDocs")
     }
-    assert(ex2.getMessage.contains("spark.graft.dedup.pair.mode"))
+    assert(ex2.getMessage.contains("spark.graft.dedup.pairGateDocs"))
     s.conf.set("spark.graft.dedup.pair.bucketCap", "2")
     val ex3 = intercept[IllegalArgumentException] {
       try DedupStages.pairBucketCap(s)
@@ -1283,11 +1308,8 @@ class ScalePathSpec extends SparkTestBase {
     }.toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("clique16").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def q(name: String, mode: String): Seq[Seq[Any]] = {
-      s.conf.set("spark.graft.dedup.pair.mode", mode)
-      try graft.SparkEntry.queries(name)(s, dir).collect().map(_.toSeq).toSeq
-      finally s.conf.unset("spark.graft.dedup.pair.mode")
-    }
+    def q(name: String, route: String): Seq[Seq[Any]] =
+      dedupAt(name, dir, route).map(_.toSeq).toSeq
     // CC: identical cluster assignment, and every clique collapses
     // to its minimum id.
     val ccB = q("q_dup_clusters", "banded")
@@ -1350,12 +1372,9 @@ class ScalePathSpec extends SparkTestBase {
       docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
       dir
     }
-    def rows(name: String, dir: String, mode: String): Map[(Long, Long), Double] = {
-      s.conf.set("spark.graft.dedup.pair.mode", mode)
-      try graft.SparkEntry.queries(name)(s, dir).collect()
+    def rows(name: String, dir: String, route: String): Map[(Long, Long), Double] =
+      dedupAt(name, dir, route)
         .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-      finally s.conf.unset("spark.graft.dedup.pair.mode")
-    }
     // --- operating point 1: J = 8/78, q_jaccard_containment
     val lowJ = write((0 until 400).flatMap { i =>
       val ws = (0 until 80).map(j => s"w${i}x$j")
