@@ -2,7 +2,8 @@
 # Dump per-query explain("formatted") into <out_dir>/<key>_<suffix>.txt,
 # plus a normalized copy <out_dir>/norm_<suffix>/<key>.txt with the
 # per-run ids stripped (expression ids #N, exchange ids [plan_id=N], RDD
-# ids, temp-directory names, source line numbers and lambda names), so two
+# ids, temp-directory names, lake commit directory and part-file names,
+# object identity hashes, source line numbers and lambda names), so two
 # dumps compare with one command:
 #   diff -r <out_dir>/norm_before <out_dir>/norm_after
 # Usage: scripts/dump_plans.sh <repo_dir> <out_dir> <suffix> <sf_dir> <keys...>
@@ -22,6 +23,16 @@ TMP=$(mktemp)
 (cd "$REPO" && SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
   SPARK_DRIVER_MEM="$MEM" scripts/run.sh graft.Explain "$@" 2>/dev/null) > "$TMP"
 awk -v out="$OUT" -v suf="$SUF" '
+  # Object identity hashes (`...Aggregator@1a2b3c`): the hash goes, the
+  # class name stays.
+  function strip_hashes(s,   out) {
+    out = ""
+    while (match(s, /[A-Za-z0-9_$]@[0-9a-f]+/)) {
+      out = out substr(s, 1, RSTART) "@"
+      s = substr(s, RSTART + RLENGTH)
+    }
+    return out s
+  }
   /^===== / {
     if (f) { close(f); close(nf) }
     key = $2; f = out "/" key "_" suf ".txt"; nf = out "/norm_" suf "/" key ".txt"
@@ -32,7 +43,9 @@ awk -v out="$OUT" -v suf="$SUF" '
     line = $0; gsub(/#[0-9]+/, "", line); gsub(/\[plan_id=[0-9]+\]/, "", line)
     gsub(/RDD\[[0-9]+\]/, "RDD[]", line); gsub(/\/tmp\/[A-Za-z_]+[0-9]+/, "/tmp/TMP", line)
     gsub(/\.scala:[0-9]+/, ".scala", line); gsub(/\$Lambda[^ ,]*/, "$Lambda", line)
-    print line > nf
+    gsub(/commit-[0-9]+-[0-9a-f]+/, "commit-N-X", line)
+    gsub(/part-[0-9]+-[0-9a-f][0-9a-f-]*/, "part-N-X", line)
+    print strip_hashes(line) > nf
   }
 ' "$TMP"
 rm -f "$TMP"

@@ -15,6 +15,16 @@ import org.apache.spark.sql.SparkSession
   *    session conf inside a table loader (round-1 advice).
   *  - AQE on: runtime coalescing + skew-join splitting is part of the
   *    100 TB posture and costs nothing locally.
+  *  - Streaming checkpoint logs (`offsets/`, `commits/`, `sources/`)
+  *    are written through the Hadoop FileSystem API
+  *    (`FileSystemBasedCheckpointFileManager`), not Spark's default
+  *    FileContext manager: on a local disk its temp-file-and-rename
+  *    write costs a fraction of FileContext's per small file, and a
+  *    drainUpsert micro-batch writes three. Only this `local[n]`
+  *    builder sets it: every query graft starts checkpoints into its
+  *    own temp directory, so no two writers share a log, and the
+  *    sessions [[prepare]] sees (a cluster's, on HDFS or an object
+  *    store) keep FileContext's atomic rename.
   */
 object Sessions {
   def build(cpus: String): SparkSession = {
@@ -43,6 +53,9 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing." +
+          "FileSystemBasedCheckpointFileManager")
       // InferFiltersFromGenerate synthesizes `size(arr) > 0` below
       // every explode; PushDownPredicates then drags it to the scan
       // with the array-building expression INLINED into an

@@ -33,13 +33,13 @@ import scala.reflect.ClassTag
   *
   * Everything derived from a fixture table (the IVF index, bucketed
   * layouts, staged source formats, stream inputs, staged lake tables,
-  * the banded dedup pairs) is built once under one rule,
-  * [[ensureDerived]] / [[staged]] / [[pinned]]: it is reused while its
-  * source's [[TableId]] is unchanged and rebuilt when it is not. The
-  * rule owns every temp directory it makes ([[tempDir]]) and every
-  * frame it pins: a rebuild deletes the directory or unpins the frame
-  * it supersedes, and the remaining directories are deleted at JVM
-  * exit.
+  * the banded dedup pairs, the tf-idf postings) is built once under
+  * one rule, [[ensureDerived]] / [[staged]] / [[pinned]]: it is reused
+  * while its source's [[TableId]] is unchanged and rebuilt when it is
+  * not. The rule owns every temp directory it makes ([[tempDir]]) and
+  * every frame it pins: a rebuild deletes the directory or unpins the
+  * frame it supersedes, and the remaining directories are deleted at
+  * JVM exit.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -131,11 +131,12 @@ object Tables {
       StagedDir(dir)
     }.dir
 
-  /** The rule for a pinned frame (the banded dedup pairs): `build`
-    * returns the frame pinned ([[loopPin]]) and materialized, and its
-    * jobs run under the description `graft <kind> <source>`. The frame
-    * is reused while `source`'s identity and `variant` (the build's
-    * other parameters) are unchanged, its pin is still held, and its
+  /** The rule for a pinned frame (the banded dedup pairs, the tf-idf
+    * postings): `build` returns the frame pinned ([[loopPin]] or an
+    * eager checkpoint) and materialized, and its jobs run under the
+    * description `graft <kind> <source>`. The frame is reused while
+    * `source`'s identity and `variant` (the build's other parameters)
+    * are unchanged, its pin is still held, and its
     * SparkContext is `s`'s and running; a stopped and rebuilt session
     * builds afresh. A rebuild unpins the frame it replaces, so each
     * (kind, source) holds at most one. */

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Minimal TRANSACTIONAL table on plain parquet — the commit-log
   * pattern (Delta/Iceberg-style, re-derived from the published
@@ -36,6 +37,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * string-escaped, and are read back by a real string-literal
   * tokenizer — a root containing `"`/`,`/`\` round-trips intact.
   *
+  * Each manifest also carries the snapshot's SCHEMA (the `schema`
+  * field, Spark's schema JSON as one string literal — the schema
+  * Delta's `metaData` action records), written inside the same atomic
+  * link as the file list. Readers scan with it, so opening a snapshot
+  * runs no parquet-footer job. A manifest without the field (a table
+  * committed before schemas were recorded) is read by inference.
+  *
   * On a real cluster the same protocol runs against an object store
   * with a conditional-put (the link here) and the data writes are
   * distributed parquet jobs — nothing in the shape is driver-sized:
@@ -56,16 +64,26 @@ final class ManifestTable private (val root: String, spark: SparkSession) {
     if (vs.isEmpty) 0 else vs.max
   }
 
-  /** Absolute file paths of snapshot `v`. Manifest entries are
-    * root-relative (absolute entries from pre-relocatable manifests
-    * still resolve, so old tables stay readable). */
-  private def manifestFiles(v: Int): Seq[String] = {
+  /** Snapshot `v`'s manifest, with absolute file paths. Manifest
+    * entries are root-relative (absolute entries from pre-relocatable
+    * manifests still resolve, so old tables stay readable). */
+  private[lake] def manifest(v: Int): ManifestTable.Manifest = {
     val m = manifestDir.resolve(s"v$v.json")
     require(Files.exists(m),
       s"no manifest for version $v at $root (vacuumed or never committed)")
-    ManifestTable.parseStrings(new String(Files.readAllBytes(m), UTF_8))
-      .map(p => if (Paths.get(p).isAbsolute) p else s"$root/$p")
+    val parsed = ManifestTable.parseManifest(new String(Files.readAllBytes(m), UTF_8))
+    parsed.copy(files =
+      parsed.files.map(p => if (Paths.get(p).isAbsolute) p else s"$root/$p"))
   }
+
+  /** A parquet scan of `files` with the recorded `schema` (no footer
+    * job), or by inference when the manifest predates schemas.
+    * spark.read treats paths as Hadoop GLOBS (`\*?[]{}` are
+    * metacharacters — a literal '\' in a directory name silently
+    * matches nothing); escape so the manifest's exact files are read. */
+  private def scan(schema: Option[StructType], files: Seq[String]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_))
+      .parquet(files.map(ManifestTable.globEsc): _*)
 
   /** Snapshot read at the current version — a plain parquet scan of
     * the manifest's file list (partition pruning, pushdown, and
@@ -74,10 +92,8 @@ final class ManifestTable private (val root: String, spark: SparkSession) {
 
   def readAt(v: Int): DataFrame = {
     require(v >= 1, s"no committed version at $root")
-    // spark.read treats paths as Hadoop GLOBS (`\*?[]{}` are
-    // metacharacters — a literal '\' in a directory name silently
-    // matches nothing); escape so the manifest's exact files are read.
-    spark.read.parquet(manifestFiles(v).map(ManifestTable.globEsc): _*)
+    val m = manifest(v)
+    scan(m.schema, m.files)
   }
 
   /** Serializable commit: `transform` maps the current snapshot to
@@ -114,6 +130,7 @@ final class ManifestTable private (val root: String, spark: SparkSession) {
       require(attempt <= 20, s"commit contention not resolving at $root")
       val v = currentVersion()
       val next = make(v)
+      val schema = ManifestTable.readSchema(next.schema)
       val nonce = java.util.UUID.randomUUID().toString.take(8)
       val rel = s"data/commit-${v + 1}-$nonce"
       next.write.mode("overwrite").parquet(s"$root/$rel")
@@ -123,8 +140,8 @@ final class ManifestTable private (val root: String, spark: SparkSession) {
           f.getName.endsWith(".parquet"))
         .map(f => s"$rel/${f.getName}").sorted
       if (statsCols.nonEmpty)
-        writeStats(v + 1, nonce, rel, statsCols)
-      if (tryPublish(v + 1, parts.toSeq)) return v + 1
+        writeStats(v + 1, nonce, rel, statsCols, schema)
+      if (tryPublish(v + 1, parts.toSeq, schema)) return v + 1
       // else: another writer claimed v+1 first — loop re-reads and
       // re-applies; our orphaned fileset AND its stats sidecar are
       // unreachable garbage that vacuum() collects (never visible to
@@ -152,10 +169,10 @@ final class ManifestTable private (val root: String, spark: SparkSession) {
     * predicate cannot match NULL), which is the aggressive-but-sound
     * direction. */
   private def writeStats(v: Int, nonce: String, rel: String,
-      statsCols: Seq[String]): Unit = {
+      statsCols: Seq[String], schema: StructType): Unit = {
     import org.apache.spark.sql.functions.{col, input_file_name, unix_date, unix_micros, max => smax, min => smin}
     import org.apache.spark.sql.types.{DateType, StringType, TimestampType}
-    val df = spark.read.parquet(s"$root/$rel")
+    val df = spark.read.schema(schema).parquet(s"$root/$rel")
     statsCols.foreach { c =>
       require(df.columns.contains(c),
         s"stats column '$c' not in committed schema " +
@@ -219,7 +236,7 @@ final class ManifestTable private (val root: String, spark: SparkSession) {
     * manifest format (and every pre-stats table) is untouched. */
   private def statLines(v: Int, colName: String)
       : Map[String, (String, String, String)] = {
-    val nonces = manifestFiles(v)
+    val nonces = manifest(v).files
       .map(_.split('/').takeRight(2).head) // commit-<v>-<nonce>
       .collect { case n if n.startsWith("commit-") => n.split('-').last }
       .distinct
@@ -259,11 +276,12 @@ final class ManifestTable private (val root: String, spark: SparkSession) {
   def readWhere(colName: String, lo: Double, hi: Double): DataFrame = {
     import org.apache.spark.sql.functions.{col, unix_date, unix_micros}
     import org.apache.spark.sql.types.{DateType, TimestampType}
-    val (kept, _) = pruneFiles(colName, lo, hi)
+    val v = currentVersion()
+    val (kept, _) = pruneFilesAt(v, colName, lo, hi)
     val base =
       if (kept.isEmpty)
-        readAt(currentVersion()).filter(org.apache.spark.sql.functions.lit(false))
-      else spark.read.parquet(kept.map(ManifestTable.globEsc): _*)
+        readAt(v).filter(org.apache.spark.sql.functions.lit(false))
+      else scan(manifest(v).schema, kept)
     // Residual predicate in the SAME units the stats were written in:
     // dates compare as epoch days, timestamps as epoch micros.
     val resid = base.schema(colName).dataType match {
@@ -276,10 +294,13 @@ final class ManifestTable private (val root: String, spark: SparkSession) {
 
   /** The pruning decision by itself: (files kept, all files) for a
     * numeric range predicate on `colName` at the current version. */
-  def pruneFiles(colName: String, lo: Double, hi: Double): (Seq[String], Seq[String]) = {
+  def pruneFiles(colName: String, lo: Double, hi: Double): (Seq[String], Seq[String]) =
+    pruneFilesAt(currentVersion(), colName, lo, hi)
+
+  private def pruneFilesAt(v: Int, colName: String, lo: Double, hi: Double)
+      : (Seq[String], Seq[String]) = {
     require(lo <= hi, s"empty range [$lo, $hi]")
-    val v = currentVersion()
-    val all = manifestFiles(v)
+    val all = manifest(v).files
     val lines = statLines(v, colName)
     val kept = all.filter { f =>
       lines.get(f) match {
@@ -321,21 +342,25 @@ final class ManifestTable private (val root: String, spark: SparkSession) {
     * always applies. */
   def readWhereString(colName: String, lo: String, hi: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (kept, _) = pruneFilesString(colName, lo, hi)
+    val v = currentVersion()
+    val (kept, _) = pruneFilesStringAt(v, colName, lo, hi)
     val base =
       if (kept.isEmpty)
-        readAt(currentVersion()).filter(org.apache.spark.sql.functions.lit(false))
-      else spark.read.parquet(kept.map(ManifestTable.globEsc): _*)
+        readAt(v).filter(org.apache.spark.sql.functions.lit(false))
+      else scan(manifest(v).schema, kept)
     base.filter(col(colName) >= lo && col(colName) <= hi)
   }
 
   /** The string pruning decision: (files kept, all files) for a
     * string range predicate on `colName` at the current version. */
   def pruneFilesString(colName: String, lo: String, hi: String)
+      : (Seq[String], Seq[String]) =
+    pruneFilesStringAt(currentVersion(), colName, lo, hi)
+
+  private def pruneFilesStringAt(v: Int, colName: String, lo: String, hi: String)
       : (Seq[String], Seq[String]) = {
     require(ManifestTable.cpCompare(lo, hi) <= 0, s"empty range [$lo, $hi]")
-    val v = currentVersion()
-    val all = manifestFiles(v)
+    val all = manifest(v).files
     val lines = statLines(v, colName)
     val kept = all.filter { f =>
       lines.get(f) match {
@@ -364,10 +389,11 @@ final class ManifestTable private (val root: String, spark: SparkSession) {
     * complete manifest or nothing. On an object store the same slot
     * is a conditional put (If-None-Match) — the protocol is
     * unchanged. */
-  private def tryPublish(v: Int, files: Seq[String]): Boolean = {
+  private def tryPublish(v: Int, files: Seq[String], schema: StructType): Boolean = {
     Files.createDirectories(manifestDir)
-    val body = files.map(f => "\"" + ManifestTable.esc(f) + "\"").mkString(
-      s"""{"version":$v,"files":[""", ",", "]}")
+    def lit(s: String) = "\"" + ManifestTable.esc(s) + "\""
+    val body = files.map(lit).mkString(s"""{"version":$v,"files":[""", ",",
+      s"""],"schema":${lit(schema.json)}}""")
     val tmp = Files.createTempFile(manifestDir, s".v$v-", ".tmp")
     Files.write(tmp, body.getBytes(UTF_8))
     try {
@@ -400,7 +426,7 @@ final class ManifestTable private (val root: String, spark: SparkSession) {
     val keepFrom = math.max(1, cur - keepLast + 1)
     val referenced: Set[String] = (keepFrom to cur).iterator
       .filter(v => Files.exists(manifestDir.resolve(s"v$v.json")))
-      .flatMap(v => manifestFiles(v))
+      .flatMap(v => manifest(v).files)
       .map(f => Paths.get(f).getParent.toAbsolutePath.toString)
       .toSet
     val manifestsGone = (1 until keepFrom).count { v =>
@@ -515,49 +541,85 @@ object ManifestTable {
     b.toString
   }
 
-  /** Tokenize the string literals of the manifest's `files` array —
-    * a real escape-aware walk (split-on-comma corrupts any path
-    * containing ',' or '"'; this is the reader `esc` is written for). */
-  private[lake] def parseStrings(txt: String): Seq[String] = {
-    val start = txt.indexOf('[')
-    val end = txt.lastIndexOf(']')
-    require(start >= 0 && end > start, s"malformed manifest: $txt")
-    // Escape lookaheads are bounds-checked so a truncated/corrupted
-    // manifest fails with the same 'malformed manifest' contract
-    // instead of a StringIndexOutOfBoundsException.
-    def malformed(): Nothing =
+  /** A parsed manifest: its file entries as written, and the schema
+    * the commit recorded (None for a manifest written before schemas
+    * were). */
+  private[lake] final case class Manifest(files: Seq[String], schema: Option[StructType])
+
+  /** The schema a parquet read of a frame with schema `t` infers:
+    * Spark reads every field, array element and map value of a file
+    * source as nullable. */
+  private[lake] def readSchema(t: StructType): StructType =
+    nullable(t).asInstanceOf[StructType]
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case o => o
+  }
+
+  private val FilesKey = java.util.regex.Pattern.compile("\"files\"\\s*:\\s*\\[")
+  private val SchemaKey = java.util.regex.Pattern.compile("\"schema\"\\s*:\\s*\"")
+
+  /** Parse a manifest: the string literals of its `files` array, then
+    * the `schema` literal if one follows the array. A real
+    * escape-aware walk (split-on-comma corrupts any path containing
+    * ',' or '"'; this is the reader `esc` is written for). The array
+    * is found by its key and ends at its first bracket outside a
+    * literal, so the brackets of the schema JSON cannot be taken for
+    * it. A manifest that does not end in `}` is truncated and fails
+    * like any other malformed one. */
+  private[lake] def parseManifest(txt: String): Manifest = {
+    def malformed(why: String): Nothing =
       throw new IllegalArgumentException(
-        s"requirement failed: malformed manifest (truncated string literal): $txt")
-    val out = Seq.newBuilder[String]
-    var i = start + 1
-    while (i < end) {
-      if (txt(i) == '"') {
-        val b = new StringBuilder
-        i += 1
-        var closed = false
-        while (!closed) {
-          if (i >= end) malformed()
-          txt(i) match {
-            case '\\' if i + 1 < end && txt(i + 1) == 'u' =>
-              if (i + 6 > end) malformed()
-              val code =
-                try Integer.parseInt(txt.substring(i + 2, i + 6), 16)
-                catch { case _: NumberFormatException => malformed() }
-              b.append(code.toChar)
-              i += 6
-            case '\\' =>
-              if (i + 1 >= end) malformed()
-              b.append(txt(i + 1)); i += 2
-            case '"' =>
-              closed = true; i += 1
-            case c =>
-              b.append(c); i += 1
-          }
+        s"requirement failed: malformed manifest ($why): $txt")
+    // The literal whose opening quote is at `from`: its value and the
+    // index just past its closing quote. Escape lookaheads are
+    // bounds-checked so a truncated/corrupted manifest fails with the
+    // same 'malformed manifest' contract instead of a
+    // StringIndexOutOfBoundsException.
+    def literal(from: Int): (String, Int) = {
+      val b = new StringBuilder
+      var i = from + 1
+      while (i < txt.length && txt(i) != '"') {
+        txt(i) match {
+          case '\\' if i + 1 < txt.length && txt(i + 1) == 'u' =>
+            if (i + 6 > txt.length) malformed("truncated string literal")
+            val code =
+              try Integer.parseInt(txt.substring(i + 2, i + 6), 16)
+              catch { case _: NumberFormatException => malformed("bad \\u escape") }
+            b.append(code.toChar)
+            i += 6
+          case '\\' =>
+            if (i + 1 >= txt.length) malformed("truncated string literal")
+            b.append(txt(i + 1)); i += 2
+          case c =>
+            b.append(c); i += 1
         }
-        out += b.toString
-      } else i += 1
+      }
+      if (i >= txt.length) malformed("truncated string literal")
+      (b.toString, i + 1)
     }
-    out.result()
+    val files = FilesKey.matcher(txt)
+    if (!files.find()) malformed("no files array")
+    val out = Seq.newBuilder[String]
+    var i = files.end()
+    while (i < txt.length && txt(i) != ']') {
+      if (txt(i) == '"') { val (f, next) = literal(i); out += f; i = next }
+      else i += 1
+    }
+    if (i >= txt.length) malformed("unterminated files array")
+    if (!txt.trim.endsWith("}")) malformed("truncated")
+    val sk = SchemaKey.matcher(txt)
+    val schema = if (!sk.find(i)) None else {
+      val json = literal(sk.end() - 1)._1
+      Some(scala.util.Try(DataType.fromJson(json)).toOption.collect {
+        case st: StructType => st
+      }.getOrElse(malformed("unreadable schema")))
+    }
+    Manifest(out.result(), schema)
   }
 
   /** Escape Hadoop glob metacharacters so a manifest path is read as

@@ -1204,7 +1204,7 @@ object Graphs {
   private[queries] def coCounts(s: org.apache.spark.sql.SparkSession,
       li: DataFrame, minSupport: Int): (DataFrame, DataFrame) = {
     val hotH = s.conf.getOption("spark.graft.cobasket.hot")
-      .map(_.toInt).getOrElse(256)
+      .map(boundedLong("spark.graft.cobasket.hot", _, 1, Int.MaxValue).toInt).getOrElse(256)
     val deg = li.groupBy("p").agg(count(lit(1)).cast("long").as("n"))
     // BROADCAST semi-join: the screen must not cost an exchange of
     // the basket stream (a shuffle-semi on p would re-partition the

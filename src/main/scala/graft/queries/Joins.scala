@@ -523,11 +523,7 @@ object Joins {
             .head.get(0)
           val m = Option(med).map(_.asInstanceOf[Long]).getOrElse(0L)
           math.min(math.max(m, 60L * 1000000L), 7L * 24 * 3600 * 1000000L)
-        case v =>
-          val c = v.toLong
-          require(c > 0,
-            s"spark.graft.interval.cellMicros must be > 0, got $c")
-          c
+        case v => boundedLong("spark.graft.interval.cellMicros", v, 1)
       }
       val ac = a.withColumn("cell",
         explode(expr(s"sequence(a_start DIV $cell, a_end DIV $cell)")))

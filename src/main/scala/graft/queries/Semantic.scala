@@ -114,7 +114,8 @@ object Semantic {
       // oracle's `kk` CTE (the count rides the localCheckpoint
       // materialization, so it isn't an extra table scan). MaxK keeps
       // ε = 1e-6/(2k) far above the double grain (scaladoc above).
-      val k = s.conf.getOption("spark.graft.semdedup.k").map(_.toInt)
+      val k = s.conf.getOption("spark.graft.semdedup.k")
+        .map(boundedLong("spark.graft.semdedup.k", _, 1, Int.MaxValue).toInt)
         .getOrElse(math.min(MaxK, math.max(MinK,
           math.ceil(e.count() / TargetClusterSize.toDouble).toInt)))
       // MLlib-style iteration: the k centroids round-trip through the
@@ -975,24 +976,33 @@ object Semantic {
 
   /** Shared sparse tf-idf machinery for q_tfidf_pairs / q_tfidf_topk:
     * (w, nrm) — the df-screened weighted postings (doc_id, t, w) and
-    * per-doc squared norms. Both checkpointed: the posting frame
-    * feeds two self-join sides and the norm frame two attach joins. */
+    * per-doc squared norms. The posting frame feeds two self-join
+    * sides, so it is checkpointed, and built once per documents table
+    * under [[Tables.pinned]] (kind `tfidf`): a rebuild on an unchanged
+    * table runs no job, and a rewrite releases the old pin. The build
+    * checkpoints the term counts it reads and releases them once the
+    * postings are materialized. The norm frame is a plain aggregate
+    * of the postings. */
   private def tfidfFrames(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    val tok = barrier(Tables.documents(s, d)
-      .withColumn("wt", expr(TextKit.toks)))
-      .select(col("doc_id"), explode(col("wt")).as("t"))
-    val tf = tok.groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
-    val dl = tf.groupBy("doc_id").agg(sum("c").as("len"))
-    val dfr = tf.groupBy("t").agg(count(lit(1)).as("df"))
-    val nd = broadcast(Tables.documents(s, d).agg(count(lit(1)).as("nn")))
-    val w = tf.join(dl, "doc_id").join(dfr, "t").crossJoin(nd)
-      .filter(col("df") * 10 <= col("nn"))
-      .select(col("doc_id"), col("t"),
-        round((col("c").cast("double") / col("len")) *
-          log(col("nn").cast("double") / col("df")), 9).as("w"))
-      .localCheckpoint()
+    val w = Tables.pinned(s, "tfidf", s"$d/documents.parquet", "") {
+      val tok = barrier(Tables.documents(s, d)
+        .withColumn("wt", expr(TextKit.toks)))
+        .select(col("doc_id"), explode(col("wt")).as("t"))
+      val tf = tok.groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
+        .localCheckpoint()
+      val dl = tf.groupBy("doc_id").agg(sum("c").as("len"))
+      val dfr = tf.groupBy("t").agg(count(lit(1)).as("df"))
+      val nd = broadcast(Tables.documents(s, d).agg(count(lit(1)).as("nn")))
+      val w = tf.join(dl, "doc_id").join(dfr, "t").crossJoin(nd)
+        .filter(col("df") * 10 <= col("nn"))
+        .select(col("doc_id"), col("t"),
+          round((col("c").cast("double") / col("len")) *
+            log(col("nn").cast("double") / col("df")), 9).as("w"))
+        .localCheckpoint()
+      Tables.unpin(tf)
+      w
+    }
     val nrm = w.groupBy("doc_id")
       .agg(sum(round(col("w") * col("w"), 12).cast(DecimalType(38, 12)))
         .cast("double").as("n2"))

@@ -772,9 +772,8 @@ object TimeSeries {
         |SELECT user_id, count(*) AS n_pairs,
         |  round(quantile_cont(slope, 0.5), 6) + 0.0 AS sen_slope
         |FROM p GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-      val cap = s.conf.get("spark.graft.theilsen.maxGroupRows", "2000").toInt
-      require(cap >= 2,
-        s"spark.graft.theilsen.maxGroupRows must be >= 2, got $cap")
+      val cap = boundedLong("spark.graft.theilsen.maxGroupRows",
+        s.conf.get("spark.graft.theilsen.maxGroupRows", "2000"), 2, Int.MaxValue).toInt
       val raw = Tables.events(s, d)
         .select(col("user_id"), col("value"),
           expr("unix_micros(ts)").as("us"))

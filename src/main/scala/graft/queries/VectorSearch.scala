@@ -962,7 +962,8 @@ object VectorSearch {
           System.err.println(
             s"[graft] lsh.planes=auto resolved to $p (n=$n)")
           p
-        case v => v.toInt
+        // Below 4 planes a band holds no bit.
+        case v => boundedLong("spark.graft.lsh.planes", v, 4, Int.MaxValue).toInt
       }
       val bitsPerBand = planesN / 4
       def planeVal(p: Int, k: Int): Double = {

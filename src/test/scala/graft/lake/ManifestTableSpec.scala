@@ -1,9 +1,13 @@
 package graft.lake
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 
-import graft.SparkTestBase
+import graft.{SparkEntry, SparkTestBase, Tables}
+import graft.streaming.StreamingOps
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The commit protocol's three claims: versions advance one commit at
   * a time; concurrent writers serialize (both effects land — no lost
@@ -117,11 +121,11 @@ class ManifestTableSpec extends SparkTestBase {
     // Every truncation point of a valid manifest must raise the
     // loud 'malformed manifest' error, never an index exception.
     val full = """{"version":1,"files":["data/a.parquet","b\\c","d\"e"]}"""
-    assert(ManifestTable.parseStrings(full) ===
+    assert(ManifestTable.parseManifest(full).files ===
       Seq("data/a.parquet", "b\\c", "d\"e"))
     (0 until full.length).foreach { cut =>
       val t = full.substring(0, cut)
-      try { ManifestTable.parseStrings(t); () }
+      try { ManifestTable.parseManifest(t); () }
       catch {
         case e: IllegalArgumentException =>
           assert(e.getMessage.contains("malformed manifest"), s"cut=$cut: $e")
@@ -139,9 +143,157 @@ class ManifestTableSpec extends SparkTestBase {
       "{\"files\":[\"a\\uZZZZ\"]}" // non-hex \u payload
     ).foreach { bad =>
       val e = intercept[IllegalArgumentException](
-        ManifestTable.parseStrings(bad))
+        ManifestTable.parseManifest(bad))
       assert(e.getMessage.contains("malformed manifest"), s"input: $bad")
     }
+    // With the schema field: the files array is found by its key and
+    // ends at its own bracket, not at the schema JSON's last one, and
+    // every truncation of the manifest fails loudly.
+    val schema = StructType(Seq(StructField("files", ArrayType(StringType))))
+    val withSchema = "{\"version\":2,\"files\":[\"data/a.parquet\",\"b]\"]," +
+      "\"schema\":\"" + ManifestTable.esc(schema.json) + "\"}"
+    assert(ManifestTable.parseManifest(withSchema) ===
+      ManifestTable.Manifest(Seq("data/a.parquet", "b]"), Some(schema)))
+    (0 until withSchema.length).foreach { cut =>
+      val e = intercept[IllegalArgumentException](
+        ManifestTable.parseManifest(withSchema.substring(0, cut)))
+      assert(e.getMessage.contains("malformed manifest"), s"cut=$cut: $e")
+    }
+  }
+
+  /** Jobs started from `commit`'s call until its transform is handed
+    * the snapshot. */
+  private def jobsBeforeTransform(t: ManifestTable)(
+      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    var seen = -1
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(l)
+    try t.commit { snap =>
+      org.apache.spark.TestBus.drain(sc)
+      seen = started.get()
+      transform(snap)
+    } finally sc.removeSparkListener(l)
+    seen
+  }
+
+  test("a snapshot read runs no Spark job: each commit records its schema") {
+    val s = spark
+    import s.implicits._
+    val t = ManifestTable.create(s, freshRoot(),
+      (1 to 10).map(i => (i.toLong, i * 2)).toDF("id", "x"))
+    t.commit(_.withColumn("x", col("x") + 1))
+    t.read().collect() // warm-up
+    assert(jobsDuring(t.read()) === 0)
+    assert(jobsDuring(t.readAt(1)) === 0)
+    assert(jobsBeforeTransform(t)(_.withColumn("x", col("x") + 1)) === 0)
+    assert(t.read().orderBy("id").collect().map(_.getInt(1)).toSeq ===
+      (1 to 10).map(_ * 2 + 2))
+  }
+
+  /** Every retained manifest of the table at `root` records the schema
+    * a parquet read of its files infers. */
+  private def assertRecordsInferredSchema(root: String): Unit = {
+    val t = ManifestTable.open(spark, root)
+    val versions = (1 to t.currentVersion())
+      .filter(v => Files.exists(Paths.get(root, "_manifests", s"v$v.json")))
+    assert(versions.nonEmpty, s"no manifest under $root")
+    versions.foreach { v =>
+      val m = t.manifest(v)
+      val inferred = spark.read.parquet(m.files.map(ManifestTable.globEsc): _*).schema
+      assert(m.schema === Some(inferred), s"$root v$v")
+    }
+  }
+
+  test("the recorded schema is the one a parquet read infers, for every table the engine commits") {
+    val s = spark
+    import s.implicits._
+    // The upsert's change rows, with a non-null ARRAY<FLOAT> column.
+    val changes = StructType(Seq(
+      StructField("k", LongType, false), StructField("ver", LongType, false),
+      StructField("embedding", ArrayType(FloatType, false), false)))
+    val watched = Files.createTempDirectory("graft_mtable_changes_")
+    Seq(Seq((1L, 1L), (2L, 2L)), Seq((1L, 3L), (3L, 4L))).foreach { rows =>
+      s.createDataFrame(s.sparkContext.parallelize(rows.map { case (k, v) =>
+          org.apache.spark.sql.Row(k, v, Seq(k.toFloat, v.toFloat)) }, 1), changes)
+        .write.mode("append").parquet(watched.toString)
+    }
+    val upserted = freshRoot()
+    StreamingOps.drainUpsert(s, s.readStream.schema(changes)
+        .option("maxFilesPerTrigger", "1").parquet(watched.toString),
+      keys = Seq("k"), ord = Seq("ver"), tableRootOpt = Some(upserted))
+    assert(ManifestTable.open(s, upserted).currentVersion() === 2)
+    assertRecordsInferredSchema(upserted)
+    // Nested nullability: struct fields, array elements, map values.
+    val nested = StructType(Seq(StructField("s", StructType(Seq(
+      StructField("a", ArrayType(IntegerType, false), false),
+      StructField("m", MapType(StringType, DoubleType, false), false))), false)))
+    val nestedRoot = freshRoot()
+    ManifestTable.create(s, nestedRoot, s.createDataFrame(s.sparkContext.parallelize(Seq(
+      org.apache.spark.sql.Row(org.apache.spark.sql.Row(Seq(1, 2), Map("x" -> 1.0))))), nested))
+    assertRecordsInferredSchema(nestedRoot)
+    // The fixture tables, timestamps included, with stats on a
+    // timestamp and a string column.
+    val sf = "/root/testdata/sf0.001"
+    assume(new java.io.File(s"$sf/events.parquet").exists())
+    val ev = freshRoot()
+    ManifestTable.create(s, ev, Tables.events(s, sf), statsCols = Seq("ts", "event_type"))
+    assertRecordsInferredSchema(ev)
+    val docs = freshRoot()
+    ManifestTable.create(s, docs, Tables.documents(s, sf))
+      .commit(_.filter(col("doc_id") % 2 === 0))
+    assertRecordsInferredSchema(docs)
+    // The lake tables the registry's operators stage: the commit log,
+    // the stats tables and the compacted table.
+    Seq("q_table_commit", "q_manifest_prune", "q_stats_prune_str", "q_compaction_exec")
+      .foreach(k => SparkEntry.queries(k)(s, sf).collect())
+    Seq("mtable" -> "documents", "mstats" -> "events", "mtstats" -> "documents",
+        "compact" -> "documents").foreach { case (kind, table) =>
+      val root = Tables.stagedDir(kind, s"$sf/$table.parquet")
+      assert(root.isDefined, s"$kind not staged")
+      assertRecordsInferredSchema(root.get)
+    }
+  }
+
+  test("a manifest without a schema field still reads, commits on and vacuums") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    val t = ManifestTable.create(s, root, (1 to 6).map(i => (i.toLong, i)).toDF("id", "x"))
+    t.commit(_.withColumn("x", col("x") * 10))
+    // Rewrite both manifests in the form written before schemas were
+    // recorded.
+    (1 to 2).foreach { v =>
+      val p = Paths.get(root, "_manifests", s"v$v.json")
+      val txt = new String(Files.readAllBytes(p), UTF_8)
+      Files.write(p, (txt.substring(0, txt.indexOf(",\"schema\"")) + "}").getBytes(UTF_8))
+      assert(t.manifest(v).schema === None)
+    }
+    assert(t.read().orderBy("id").collect().map(_.getInt(1)).toSeq === (1 to 6).map(_ * 10))
+    assert(t.readAt(1).count() === 6)
+    assert(t.readWhere("id", 2, 3).count() === 2)
+    assert(t.commit(_.filter(col("id") <= 4)) === 3)
+    assert(t.manifest(3).schema.isDefined)
+    assert(t.vacuum(keepLast = 1) === ((2, 2)))
+    assert(t.read().orderBy("id").collect().map(_.getInt(1)).toSeq === (1 to 4).map(_ * 10))
+  }
+
+  test("a commit of an empty frame reads back empty, with its schema") {
+    val s = spark
+    import s.implicits._
+    val t = ManifestTable.create(s, freshRoot(), Seq.empty[(Long, String)].toDF("id", "s"))
+    assert(t.read().count() === 0)
+    assert(t.read().schema === ManifestTable.readSchema(
+      Seq.empty[(Long, String)].toDF("id", "s").schema))
+    t.commit(_.unionByName(Seq((1L, "a")).toDF("id", "s")))
+    t.commit(_.filter(lit(false)))
+    assert(t.read().count() === 0)
+    assert(t.read().columns.toSeq === Seq("id", "s"))
+    assert(t.readAt(2).count() === 1)
   }
 
   test("vacuum skips foreign data dirs with unparseable or overflowing version tags") {

@@ -161,14 +161,35 @@ class Round12OpsSpec extends SparkTestBase {
       }
       assert(ex.getMessage.contains("spark.graft.tfidf.pairsWarnDocs"))
     } finally spark.conf.unset("spark.graft.tfidf.pairsWarnDocs")
-    // After the builds above, a rebuild runs no job beyond the tf-idf
-    // frames it pins at build time, as q_tfidf_topk's does: the gate
-    // reads the memoized doc count.
+    // After the builds above, a rebuild of either runs no job: the
+    // gate reads the memoized doc count, and the tf-idf postings are
+    // pinned once per corpus.
     val (pairs, topk) = (SparkEntry.queries("q_tfidf_pairs"), SparkEntry.queries("q_tfidf_topk"))
     topk(spark, sf).queryExecution.analyzed
     assert(jobsDuring(Semantic.tfidfPairsAtScale(spark, sf)) === 0)
-    assert(jobsDuring(pairs(spark, sf).queryExecution.analyzed) ===
-      jobsDuring(topk(spark, sf).queryExecution.analyzed))
+    assert(jobsDuring(pairs(spark, sf).queryExecution.analyzed) === 0)
+    assert(jobsDuring(topk(spark, sf).queryExecution.analyzed) === 0)
+  }
+
+  test("the tf-idf postings are built once per corpus and released on a rewrite") {
+    val sf = "/root/testdata/sf0.001"
+    assume(new java.io.File(s"$sf/documents.parquet").exists())
+    val d = copyOf(sf)
+    def persistentRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def rows(key: String, dir: String) =
+      SparkEntry.queries(key)(spark, dir).collect().map(_.toSeq).toSeq
+    val before = persistentRdds
+    val first = rows("q_tfidf_pairs", d)
+    val pinned = persistentRdds -- before
+    assert(pinned.size === 1, "the build holds one pin, the postings")
+    assert(jobsDuring(SparkEntry.queries("q_tfidf_topk")(spark, d).queryExecution.analyzed) === 0)
+    assert(jobsDuring(SparkEntry.queries("q_tfidf_pairs")(spark, d).queryExecution.analyzed) === 0)
+    assert(rows("q_tfidf_pairs", d) === first)
+    rewriteHalf(d, "documents", "doc_id")
+    val again = rows("q_tfidf_pairs", d)
+    assert(again != first, "the rewrite must change the result")
+    assert((persistentRdds intersect pinned).isEmpty, "the rewrite releases the old pin")
+    assert(again === rows("q_tfidf_pairs", copyOf(d)))
   }
 
   // -------------------------------------------------- dbscan ann arm

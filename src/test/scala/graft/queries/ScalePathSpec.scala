@@ -740,6 +740,16 @@ class ScalePathSpec extends SparkTestBase {
       DedupStages.pairBucketCap(s))
     failsNaming("spark.graft.tfidf.bandRows", "three")(
       Semantic.tfidfBandRows(s, 500))
+    failsNaming("spark.graft.cobasket.hot", "hot")(
+      Graphs.coCounts(s, Seq((1L, 2L)).toDF("o", "p"), 2))
+    // Settings read while an operator builds its frame.
+    val sf = "/root/testdata/sf0.001"
+    def build(key: String) = graft.SparkEntry.queries(key)(s, sf)
+    failsNaming("spark.graft.theilsen.maxGroupRows", "many")(build("q_theil_sen"))
+    failsNaming("spark.graft.semdedup.k", "k")(build("q_semdedup"))
+    failsNaming("spark.graft.lsh.planes", "sixteen")(build("q_lsh_embed"))
+    failsNaming("spark.graft.lsh.planes", "2")(build("q_lsh_embed"))
+    failsNaming("spark.graft.interval.cellMicros", "hour")(build("q_join_interval"))
   }
 
   test("min-label propagation stops at the fixpoint: round count = diameter-bound + proof round") {

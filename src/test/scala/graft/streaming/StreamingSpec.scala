@@ -65,6 +65,15 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("the local session writes streaming checkpoint logs through the FileSystem API") {
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConf()
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    assert(CheckpointFileManager.create(new org.apache.hadoop.fs.Path(dir), conf)
+      .isInstanceOf[FileSystemBasedCheckpointFileManager])
+  }
+
   test("drainUpsert folds multiple micro-batches into the batch latest-wins result") {
     // Two parquet files + maxFilesPerTrigger=1 force TWO micro-batches
     // through the foreachBatch merge: the later file re-keys (1,'a')
