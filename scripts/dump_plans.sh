@@ -33,7 +33,9 @@ awk -v out="$OUT" -v suf="$SUF" '
     }
     return out s
   }
-  /^===== / {
+  # A key header opens the files of that key. The formatted plan has
+  # its own "===== Subqueries =====" section: it stays with its key.
+  /^===== / && $2 != "Subqueries" {
     if (f) { close(f); close(nf) }
     key = $2; f = out "/" key "_" suf ".txt"; nf = out "/norm_" suf "/" key ".txt"
     next

@@ -17,7 +17,7 @@ object DedupStages {
   val P = 2147483647L // 2^31 - 1; (29-bit a)·(28-bit h) + b < 2^58
 
   /** The 32 universal-family permutation coefficients, shared by
-    * bandKeys, MinHashUnionAggregator, and every oracle twin (one
+    * sketchOf, MinHashUnionAggregator, and every oracle twin (one
     * definition → one hash family across engines). */
   def aCoef(i: Int): Long = graft.ml.Embedders.h28("a#" + i) * 2 + 1
   def bCoef(i: Int): Long = graft.ml.Embedders.h28("b#" + i)
@@ -39,24 +39,70 @@ object DedupStages {
     barrier(fanout(docs).select(col("doc_id"),
       expr("word_shingles(lower(text), 3, true)").as("s")))
 
-  /** (doc_id, band, bk): 8 bands × 4 rows of 32 minhash permutations,
-    * computed scan-locally (one md5 per shingle + arithmetic rehash,
-    * see q_dedup_minhash's notes). */
-  def bandKeys(sh: DataFrame): DataFrame = {
+  /** The MinHash sketch (doc_id, hs, sig) of a (doc_id, s) shingle
+    * frame — the one place a document's signature is computed.
+    * Documents with no shingles are dropped: their signature would be
+    * 32 NULL minima, one band key shared by all of them. Each shingle
+    * is hashed once, below one barrier, so Catalyst cannot inline the
+    * md5 back into the per-permutation lambda (32 md5s per shingle):
+    *  - `hs`: the sorted 60-bit verify set ([[verifySet]]);
+    *  - `sig`: the 32 minima of the universal family
+    *    (a_i·h28 + b_i) mod P over the shingles. */
+  def sketchOf(sh: DataFrame): DataFrame = {
     val aArr = "array(" + (0 until 32).map(aCoef).mkString(",") + ")"
     val bArr = "array(" + (0 until 32).map(bCoef).mkString(",") + ")"
-    val hashed = barrier(sh.select(col("doc_id"),
-      expr(s"transform(s, x -> ${h28("x")})").as("hs")))
-    val sig = barrier(hashed.select(col("doc_id"), expr(
+    val hashed = barrier(sh.filter(size(col("s")) >= 1).select(col("doc_id"),
+      verifySet, expr(s"transform(s, x -> ${h28("x")})").as("h28s")))
+    hashed.select(col("doc_id"), col("hs"), expr(
       s"""transform(sequence(0, 31), i ->
-         |  array_min(transform(hs, h ->
+         |  array_min(transform(h28s, h ->
          |    (element_at($aArr, i + 1) * h + element_at($bArr, i + 1)) % $P)))""".stripMargin)
-      .as("sig")))
-    sig.select(col("doc_id"), posexplode(expr(
-      "transform(sequence(0, 7), b -> md5(concat_ws(','," +
-        " transform(slice(sig, b * 4 + 1, 4), x -> CAST(x AS STRING)))))"))
-      .as(Seq("band", "bk")))
+      .as("sig"))
   }
+
+  /** The sketch of the documents table under `d`, built once per
+    * corpus under [[Tables.pinned]] (kind `dedup sketch`, keyed on the
+    * documents' [[Tables.TableId]]) and read by every MinHash
+    * consumer on it: q_dedup_minhash's band keys and verify sets, and
+    * the banded frame of the pair-output operators. */
+  def sketch(s: SparkSession, d: String): DataFrame =
+    Tables.pinned(s, "dedup sketch", s"$d/documents.parquet", "") {
+      val sk = sketchOf(shingleSets(Tables.documents(s, d))).transform(Tables.loopPin)
+      sk.count()
+      sk
+    }
+
+  /** The sorted 60-bit hash set `hs` of a shingle frame's `s`: what
+    * every exact Jaccard / containment check verifies with
+    * ([[verified]]). */
+  def verifySet: Column =
+    expr(s"array_sort(transform(s, x -> ${TextKit.h60("x")}))").as("hs")
+
+  /** Candidate pairs (id1, id2) scored against both sides' verify sets
+    * of `hsets` (doc_id, hs): (id1, id2, ix, na, nb). ix is
+    * sorted_intersect_count, an allocation-free merge walk over the
+    * sorted distinct hash sets — exactly size(array_intersect) on these
+    * inputs, without the per-pair OpenHashSet + array the built-in
+    * allocates (the hot expression of the dedup family). No broadcast
+    * hint: Catalyst picks broadcast from size estimates at small sf and
+    * sort-merge on doc_id at scale. */
+  def verified(cand: DataFrame, hsets: DataFrame): DataFrame =
+    cand
+      .join(hsets.select(col("doc_id").as("id1"), col("hs").as("h1")), "id1")
+      .join(hsets.select(col("doc_id").as("id2"), col("hs").as("h2")), "id2")
+      .select(col("id1"), col("id2"),
+        expr("CAST(sorted_intersect_count(h1, h2) AS DOUBLE)").as("ix"),
+        size(col("h1")).as("na"), size(col("h2")).as("nb"))
+
+  /** (doc_id, band, bk): 8 bands × 4 rows of a sketch's 32-value
+    * `sig`, each band key the md5 of its 4 minima. A bare (doc_id, s)
+    * shingle frame is sketched first ([[sketchOf]]). */
+  def bandKeys(sk: DataFrame): DataFrame =
+    (if (sk.columns.contains("sig")) sk else sketchOf(sk))
+      .select(col("doc_id"), posexplode(expr(
+        "transform(sequence(0, 7), b -> md5(concat_ws(','," +
+          " transform(slice(sig, b * 4 + 1, 4), x -> CAST(x AS STRING)))))"))
+        .as(Seq("band", "bk")))
 
   /** Distinct (id1, id2) band-collision candidates: the equi-join
     * that replaces the all-pairs scan. */
@@ -99,26 +145,9 @@ object DedupStages {
   /** Same exact pipeline over an already-shingled (doc_id, s) frame —
     * lets an audit pin ONE shingle materialization for several arms
     * (q_minhash_recall). */
-  def nearDupPairsFromShingles(sh: DataFrame, tau: Double): DataFrame = {
-    val cand = prefixCandidates(sh, tau)
-    val hsets = sh.select(col("doc_id"),
-      expr(s"array_sort(transform(s, x -> ${TextKit.h60("x")}))").as("hs"))
-    // sorted_intersect_count: allocation-free merge walk over the
-    // array_sort'ed distinct hash sets — exactly size(array_intersect)
-    // on these inputs, without the per-pair OpenHashSet+array the
-    // built-in allocates (the hot expression of the whole dedup
-    // family at bucket volume).
-    val pairs = barrier(cand
-      .join(hsets.select(col("doc_id").as("id1"), col("hs").as("h1")), "id1")
-      .join(hsets.select(col("doc_id").as("id2"), col("hs").as("h2")), "id2")
-      .select(col("id1"), col("id2"),
-        expr("CAST(sorted_intersect_count(h1, h2) AS DOUBLE)").as("ix"),
-        size(col("h1")).as("na"), size(col("h2")).as("nb")))
-    pairs
-      .withColumn("jac", round(col("ix") / (col("na") + col("nb") - col("ix")), 6))
-      .filter(col("jac") >= tau)
-      .select("id1", "id2", "jac")
-  }
+  def nearDupPairsFromShingles(sh: DataFrame, tau: Double): DataFrame =
+    jaccardScreen(barrier(verified(prefixCandidates(sh, tau),
+      sh.select(col("doc_id"), verifySet))), tau).drop("ix")
 
   /** CONVERGENCE-BOUNDED iterative MIN-LABEL PROPAGATION with
     * pointer jumping — connected components over a near-dup pair
@@ -243,37 +272,22 @@ object DedupStages {
     (l, round)
   }
 
-  /** The pinned (doc_id, hs, mhs, band, mh) banded frame feeding
-    * [[bandedScoredPairs]]'s self-join.
+  /** The pinned (doc_id, hs, mhs, band, mh) banded frame of a sketch
+    * ([[sketchOf]]) feeding [[bandedScoredPairs]]'s self-join: `mhs`
+    * is the first 16 values of the sketch's `sig`, one r = 1 band each.
     *
     * ONE bucket-key exchange, MATERIALIZED: the capped build side
     * and the probe side both consume this frame — without the
-    * pin each re-derives the whole scan→shingle→md5→minhash
-    * pipeline through its OWN exchange (round-16 plan audit: two
-    * identical 9-node subtrees; ReuseExchange can't fire because
-    * the sides' null filters differ), doubling the corpus hash work
-    * and the shuffle. The pin preserves the (band, mh)
+    * pin each re-derives the whole pipeline below it through its OWN
+    * exchange (round-16 plan audit: two identical 9-node subtrees;
+    * ReuseExchange can't fire because the sides' null filters
+    * differ), doubling the shuffle. The pin preserves the (band, mh)
     * partitioning, so the window and the join add no exchange —
-    * the tfidf cluster route's checkpointed-posting discipline.
-    *
-    * Each shingle is hashed once: the h28 array is computed below
-    * the barrier and the 16 permutations read it above, so Catalyst
-    * cannot inline the hashing back into the per-permutation lambda
-    * (16 md5s per shingle). */
-  def bandedFrame(docs: DataFrame): DataFrame = {
-    val sh = shingleSets(docs)
-    val aArr = "array(" + (0 until 16).map(aCoef).mkString(",") + ")"
-    val bArr = "array(" + (0 until 16).map(bCoef).mkString(",") + ")"
-    val hashed = barrier(sh.filter(size(col("s")) >= 1).select(col("doc_id"),
-      expr(s"array_sort(transform(s, x -> ${TextKit.h60("x")}))").as("hs"),
-      expr(s"transform(s, x -> ${h28("x")})").as("h28s")))
-    val hs = hashed.select(col("doc_id"), col("hs"), expr(
-      s"""transform(sequence(0, 15), i ->
-         |  array_min(transform(h28s, h ->
-         |    (element_at($aArr, i + 1) * h + element_at($bArr, i + 1)) % $P)))""".stripMargin)
-      .as("mhs"))
-    val banded = hs.select(col("doc_id"), col("hs"), col("mhs"),
-      posexplode(col("mhs")).as(Seq("band", "mh")))
+    * the tfidf cluster route's checkpointed-posting discipline. */
+  def bandedFrame(sk: DataFrame): DataFrame = {
+    val banded = sk.withColumn("mhs", expr("slice(sig, 1, 16)"))
+      .select(col("doc_id"), col("hs"), col("mhs"),
+        posexplode(col("mhs")).as(Seq("band", "mh")))
     // Loop-frame storage route (Tables.loopPin, round 18) — above
     // the fixture gate this is a columnar persist: the frame is
     // ~8 M rows each dragging a full h60 array — deserialized
@@ -324,7 +338,7 @@ object DedupStages {
     * only, so a pair appears at most twice, once per direction (heap
     * folds dedup by id2; min-label propagation ignores multiplicity). */
   def bandedScoredPairs(docs: DataFrame, cap: Int): DataFrame =
-    scoredPairs(bandedFrame(docs), cap)
+    scoredPairs(bandedFrame(sketchOf(shingleSets(docs))), cap)
 
   /** [[bandedScoredPairs]] over an already-built [[bandedFrame]]. */
   private def scoredPairs(f: DataFrame, cap: Int): DataFrame = {
@@ -376,10 +390,11 @@ object DedupStages {
     boundedLong(key, s.conf.get(key, "64"), 6, 100000).toInt
   }
 
-  /** The τ-screened directed scored pairs (id1, id2, ix, jac) of a
-    * [[bandedScoredPairs]] stream: jac = round(ix / (na + nb − ix), 6)
-    * ≥ τ, bit-identical to the exact pipeline's value. */
-  private def jaccardScreen(scored: DataFrame, tau: Double): DataFrame =
+  /** The τ-screened pairs (id1, id2, ix, jac) of a scored
+    * (id1, id2, ix, na, nb) stream ([[verified]],
+    * [[bandedScoredPairs]]): jac = round(ix / (na + nb − ix), 6) ≥ τ,
+    * the same value on every route. */
+  def jaccardScreen(scored: DataFrame, tau: Double): DataFrame =
     scored
       .withColumn("jac",
         round(col("ix") / (col("na") + col("nb") - col("ix")), 6))
@@ -412,7 +427,7 @@ object DedupStages {
   def bandedJaccardPairs(s: SparkSession, d: String, tau: Double, cap: Int)
       : DataFrame =
     Tables.pinned(s, "dedup banded", s"$d/documents.parquet", s"cap=$cap tau=$tau") {
-      val f = bandedFrame(Tables.documents(s, d))
+      val f = bandedFrame(sketch(s, d))
       val pairs = jaccardScreen(scoredPairs(f, cap), tau).transform(Tables.loopPin)
       pairs.count()
       Tables.unpin(f)
@@ -442,7 +457,7 @@ object DedupStages {
   def containmentBanded(s: SparkSession, d: String, tau: Double, cap: Int)
       : DataFrame = {
     val bands = Tables.pinned(s, "dedup band", s"$d/documents.parquet", "") {
-      val f = bandedFrame(Tables.documents(s, d))
+      val f = bandedFrame(sketch(s, d))
       f.count()
       f
     }
@@ -531,43 +546,20 @@ object DedupSketches {
          |                  JOIN sh b ON b.doc_id = c.id2)
          |SELECT id1, id2, jac FROM v WHERE jac >= 0.6
          |ORDER BY id1, id2""".stripMargin) { (s, d) =>
-      // Stages shared with the scale stress tests (DedupStages):
-      // barriers between the computed array columns (tokens →
-      // shingles → shingle hashes → signature) stop Catalyst from
-      // inlining each array expression into the next stage's lambdas
-      // (the interpreted HOF evaluator would recompute it per
-      // element — one md5 per shingle would become 32 md5s per
-      // shingle). The whole signature is computed SCAN-LOCALLY: one
-      // md5 per shingle, then 32 arithmetic rehashes folded by
+      // The corpus sketch (DedupStages.sketch) is built once per
+      // documents table and shared with the banded pair operators:
+      // one md5 per shingle, then 32 arithmetic rehashes folded by
       // array_min inside a single projection — no seed cross-join,
       // no (doc, seed) shuffle. Hash family parameters are
       // driver-computed constants (bit-equal to the oracle's in-SQL
-      // derivation; parity is unit-tested). No size filter: pushdown
-      // would inline the shingle chain into a per-row interpreted
-      // Filter (see q_dedup_near); empty arrays hash to no band rows
-      // and are dropped by explode/join anyway.
-      val sh = DedupStages.shingleSets(Tables.documents(s, d))
-      val cand = DedupStages.bandCandidates(DedupStages.bandKeys(sh))
-      // Verify join: NO broadcast hint — the full shingle-set table
-      // must never be forced onto every executor (8 GB ceiling at
-      // scale). At this sf Catalyst's size estimate picks broadcast
-      // by itself; at 100 TB it degrades to sort-merge on doc_id,
-      // which is the right plan there. Verification runs on sorted
-      // 60-bit shingle hashes through the allocation-free
-      // sorted_intersect_count merge walk (the q_dedup_near verify
-      // representation — same counts as raw-string array_intersect,
-      // oracle-checked) instead of two string-set intersections.
-      val hsets = sh.select(col("doc_id"),
-        expr(s"array_sort(transform(s, x -> ${TextKit.h60("x")}))").as("hs"))
-      cand
-        .join(hsets.select(col("doc_id").as("id1"), col("hs").as("h1")), "id1")
-        .join(hsets.select(col("doc_id").as("id2"), col("hs").as("h2")), "id2")
-        .select(col("id1"), col("id2"),
-          expr("CAST(sorted_intersect_count(h1, h2) AS DOUBLE)").as("ix"),
-          size(col("h1")).as("na"), size(col("h2")).as("nb"))
-        .withColumn("jac",
-          round(col("ix") / (col("na") + col("nb") - col("ix")), 6))
-        .filter(col("jac") >= 0.6)
+      // derivation; parity is unit-tested). Documents with no
+      // shingles are not in the sketch, as the oracle's len(w) >= 3
+      // drops them. Candidates are verified against the sketch's
+      // sorted 60-bit verify sets (DedupStages.verified — same counts
+      // as raw-string array_intersect, oracle-checked).
+      val sk = DedupStages.sketch(s, d)
+      val cand = DedupStages.bandCandidates(DedupStages.bandKeys(sk))
+      DedupStages.jaccardScreen(DedupStages.verified(cand, sk), 0.6)
         .select("id1", "id2", "jac")
         .orderBy("id1", "id2")
     },
@@ -797,8 +789,9 @@ object DedupSketches {
       // Truth arm = the exact prefix-filtered pipeline (PPJoin lemma
       // — exact for Jaccard ≥ τ, property-tested in ScalePathSpec);
       // the O(n²) brute force lives only in the small-sf oracle.
-      // Candidate arm = the deployed band join. Shingle sets are
-      // pinned once for both arms.
+      // Candidate arm = the deployed band join over the sample's own
+      // sketch (DedupStages.sketchOf). Shingle sets are pinned once
+      // for both arms.
       // PANEL GATE (round 16): past spark.graft.dedup.pairGateDocs
       // the truth arm's exact pair enumeration is clique-quadratic —
       // the 100× sweep died ENOSPC inside it. No exact τ-pair method
@@ -811,16 +804,11 @@ object DedupSketches {
       // pair population. Below the gate (every oracled sf) the full
       // corpus runs — CORRECTNESS unchanged.
       val docsAll = Tables.documents(s, d)
-      val docs = {
-        val gate = boundedLong("spark.graft.dedup.pairGateDocs",
-          s.conf.get("spark.graft.dedup.pairGateDocs", "20000"), 1)
-        val nDocs = Tables.docCount(s, d)
-        if (auditOn(s) && nDocs >= gate) {
-          val stride = (nDocs + gate - 1) / gate
-          System.err.println(
-            s"[graft] minhash recall audit: corpus $nDocs >= gate " +
-              s"$gate — auditing on the deterministic 1/$stride panel " +
-              "(the exact truth arm is clique-quadratic past the gate)")
+      val docs =
+        if (auditOn(s) && atScale(s, "minhash recall audit panel", "spark.graft.dedup.pairGateDocs",
+            20000)(Some(Tables.docCount(s, d)))) {
+          val gate = gateThreshold(s, "spark.graft.dedup.pairGateDocs", 20000)
+          val stride = (Tables.docCount(s, d) + gate - 1) / gate
           // Sample on a HASH of the id, not the raw id (round-16
           // advice): replica cliques are laid out as base*k+i, so a
           // raw doc_id % stride sharing a factor with the clique
@@ -830,10 +818,9 @@ object DedupSketches {
           // deterministic per corpus.
           docsAll.filter(pmod(hash(col("doc_id")), lit(stride)) === 0)
         } else docsAll
-      }
       val sh = DedupStages.shingleSets(docs)
         .localCheckpoint(eager = false)
-      val cand = DedupStages.bandCandidates(DedupStages.bandKeys(sh))
+      val cand = DedupStages.bandCandidates(DedupStages.bandKeys(DedupStages.sketchOf(sh)))
       val nc = cand.agg(count(lit(1)).as("n_cand"))
       // Truth arm under spark.graft.audit=false: never built — n_true
       // and hits come back NULL and recall/precision NULL out through

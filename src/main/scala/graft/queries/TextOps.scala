@@ -1035,14 +1035,7 @@ object TextOps {
           col("a.sh") === col("b.sh") && col("a.doc_id") =!= col("b.doc_id"))
         .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
         .distinct()
-      val hsets = sh.select(col("doc_id"),
-        expr(s"array_sort(transform(s, x -> ${h60("x")}))").as("hs"))
-      barrier(cand
-        .join(hsets.select(col("doc_id").as("id1"), col("hs").as("h1")), "id1")
-        .join(hsets.select(col("doc_id").as("id2"), col("hs").as("h2")), "id2")
-        .select(col("id1"), col("id2"),
-          expr("CAST(sorted_intersect_count(h1, h2) AS DOUBLE)").as("ix"),
-          size(col("h1")).as("na")))
+      barrier(DedupStages.verified(cand, sh.select(col("doc_id"), DedupStages.verifySet)))
         .withColumn("cont", round(col("ix") / col("na"), 6))
         .filter(col("cont") >= tau)
         .select("id1", "id2", "cont")

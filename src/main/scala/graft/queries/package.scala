@@ -135,6 +135,11 @@ package object queries {
     raw.toLongOption.filter(v => v >= lo && v <= hi).getOrElse(
       throw new IllegalArgumentException(s"$key must be an integer in [$lo, $hi], got '$raw'"))
 
+  /** The threshold `key` of a size gate (default `default`), an
+    * integer of at least 1. */
+  def gateThreshold(s: SparkSession, key: String, default: Long): Long =
+    s.conf.getOption(key).fold(default)(boundedLong(key, _, 1))
+
   /** The size gate of every auto-routed operator: true (take the
     * scale route) when `size` is known and at least the threshold
     * `key` (default `default`, at least 1). An unknown size stays on
@@ -143,7 +148,7 @@ package object queries {
     * route is noted on stderr with the gate's input and threshold. */
   def atScale(s: SparkSession, gate: String, key: String, default: Long)(
       size: => Option[BigInt]): Boolean = {
-    val threshold = s.conf.getOption(key).fold(default)(boundedLong(key, _, 1))
+    val threshold = gateThreshold(s, key, default)
     size.filter(_ >= threshold) match {
       case Some(n) =>
         System.err.println(s"[graft] $gate: scale route, size $n >= $key=$threshold")

@@ -88,6 +88,29 @@ trait SparkTestBase extends AnyFunSuite {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** A fixture directory whose documents table is one parquet file:
+    * 40 seeded clusters of 5 texts, each a 30-word base with 0-4 words
+    * replaced, so every cluster holds pairs above and below τ = 0.6. */
+  def clusteredCorpus(): String = {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(31)
+    val bases = (0 until 40).map(_ => Seq.fill(30)("w" + rnd.nextInt(5000)))
+    val docs = (0 until 200).map { i =>
+      val w = bases(i / 5).toArray
+      (0 until i % 5).foreach(_ => w(rnd.nextInt(w.length)) = "v" + rnd.nextInt(5000))
+      (i.toLong, w.mkString(" "))
+    }.toDF("doc_id", "text")
+    val d = tmpDir()
+    writeOneFile(docs, d, "documents")
+    d
+  }
+
+  /** The Spark jobs of `body` that build the `kind` artefact of the
+    * documents table under `d` (see `Tables.pinned`). */
+  def buildJobs(d: String, kind: String)(body: => Any): Int =
+    jobDescriptionsDuring(body).count(_ == s"graft $kind $d/documents.parquet")
+
   /** Rewrites `d`'s `table` at the same path, as one file holding the
     * rows with an even `id`. */
   def rewriteHalf(d: String, table: String, id: String): Unit = {

@@ -11,24 +11,6 @@ import graft.{SparkEntry, SparkTestBase}
 class DedupMemoSpec extends SparkTestBase {
   private val ops = Seq("q_dedup_near", "q_dup_clusters")
 
-  /** A fixture directory whose documents table is one parquet file:
-    * 40 seeded clusters of 5 texts, each a 30-word base with 0-4 words
-    * replaced, so every cluster holds pairs above and below τ = 0.6. */
-  private def corpus(): String = {
-    val s = spark
-    import s.implicits._
-    val rnd = new scala.util.Random(31)
-    val bases = (0 until 40).map(_ => Seq.fill(30)("w" + rnd.nextInt(5000)))
-    val docs = (0 until 200).map { i =>
-      val w = bases(i / 5).toArray
-      (0 until i % 5).foreach(_ => w(rnd.nextInt(w.length)) = "v" + rnd.nextInt(5000))
-      (i.toLong, w.mkString(" "))
-    }.toDF("doc_id", "text")
-    val d = tmpDir()
-    writeOneFile(docs, d, "documents")
-    d
-  }
-
   /** `key`'s rows on `d`, on the banded route forced by a doc gate of 1. */
   private def rows(key: String, d: String): Seq[Seq[Any]] =
     withConf("spark.graft.dedup.pairGateDocs", "1") {
@@ -36,24 +18,20 @@ class DedupMemoSpec extends SparkTestBase {
       SparkEntry.queries(key)(spark, d).collect().map(_.toSeq).toSeq
     }
 
-  /** The Spark jobs of `body` that build the `kind` artefact of `d`. */
-  private def buildJobs(d: String, kind: String = "dedup banded")(body: => Any): Int =
-    jobDescriptionsDuring(body).count(_ == s"graft $kind $d/documents.parquet")
-
   private def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("q_dup_clusters right after q_dedup_near runs no banded build job") {
-    val d = corpus()
-    assert(buildJobs(d)(rows("q_dedup_near", d)) > 0, "the first operator builds")
+    val d = clusteredCorpus()
+    assert(buildJobs(d, "dedup banded")(rows("q_dedup_near", d)) > 0, "the first operator builds")
     // Zero also shows the build restored the caller's job description.
-    assert(buildJobs(d)(rows("q_dup_clusters", d)) === 0)
+    assert(buildJobs(d, "dedup banded")(rows("q_dup_clusters", d)) === 0)
   }
 
   test("both operators read documents rewritten at the same path") {
-    val d = corpus()
+    val d = clusteredCorpus()
     val before = ops.map(rows(_, d))
     rewriteHalf(d, "documents", "doc_id")
-    assert(buildJobs(d)(rows("q_dedup_near", d)) > 0, "a rewrite rebuilds")
+    assert(buildJobs(d, "dedup banded")(rows("q_dedup_near", d)) > 0, "a rewrite rebuilds")
     val again = ops.map(rows(_, d))
     assert(again.head != before.head && again(1) != before(1),
       "the rewrite must change both results")
@@ -62,7 +40,7 @@ class DedupMemoSpec extends SparkTestBase {
   }
 
   test("banded q_jaccard_containment builds its band frame once per corpus and releases it on a rewrite") {
-    val d = corpus()
+    val d = clusteredCorpus()
     val containment = "q_jaccard_containment"
     val before = persistentRdds
     var first = Seq.empty[Seq[Any]]
@@ -83,10 +61,10 @@ class DedupMemoSpec extends SparkTestBase {
   }
 
   test("after the session is stopped and rebuilt both operators rebuild and agree") {
-    val d = corpus()
+    val d = clusteredCorpus()
     val before = ops.map(rows(_, d))
     spark.stop() // the next `spark` is a fresh Sessions.build
-    assert(buildJobs(d)(rows("q_dedup_near", d)) > 0, "a new session rebuilds")
+    assert(buildJobs(d, "dedup banded")(rows("q_dedup_near", d)) > 0, "a new session rebuilds")
     assert(ops.map(rows(_, d)) === before)
   }
 }

@@ -858,7 +858,8 @@ class ScalePathSpec extends SparkTestBase {
         .as("mhs"))
     // The columnar pin keeps the frame's physical plan inspectable.
     s.conf.set("spark.graft.loop.columnar", "on")
-    val f = try DedupStages.bandedFrame(docs) finally s.conf.unset("spark.graft.loop.columnar")
+    val f = try DedupStages.bandedFrame(DedupStages.sketchOf(DedupStages.shingleSets(docs)))
+    finally s.conf.unset("spark.graft.loop.columnar")
     try {
       val cached = f.queryExecution.withCachedData.collectFirst {
         case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder.cachedPlan
@@ -880,6 +881,47 @@ class ScalePathSpec extends SparkTestBase {
       assert(got.count() === 160)
       assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     } finally f.unpersist()
+  }
+
+  test("q_dedup_minhash and the banded q_dedup_near on one corpus sketch it once") {
+    val d = clusteredCorpus()
+    val minhash = graft.SparkEntry.queries("q_dedup_minhash")
+    assert(buildJobs(d, "dedup sketch")(minhash(spark, d).collect()) > 0,
+      "the first operator sketches the corpus")
+    var near = Array.empty[org.apache.spark.sql.Row]
+    assert(buildJobs(d, "dedup sketch") { near = dedupAt("q_dedup_near", d, "banded") } === 0)
+    assert(near.nonEmpty)
+  }
+
+  test("a rewrite of the documents at the same path rebuilds the sketch") {
+    val d = clusteredCorpus()
+    def rows(d: String): Seq[Seq[Seq[Any]]] = Seq(
+      graft.SparkEntry.queries("q_dedup_minhash")(spark, d).collect(),
+      dedupAt("q_dedup_near", d, "banded")).map(_.map(_.toSeq).toSeq)
+    val before = rows(d)
+    rewriteHalf(d, "documents", "doc_id")
+    var again = Seq.empty[Seq[Seq[Any]]]
+    assert(buildJobs(d, "dedup sketch") { again = rows(d) } > 0, "a rewrite rebuilds")
+    assert(again.head != before.head && again(1) != before(1),
+      "the rewrite must change both results")
+    assert(again === rows(copyOf(d)))
+  }
+
+  test("documents with fewer than 3 tokens are never MinHash candidates") {
+    // Such a document has no shingles. Sketched, it would get 32 NULL
+    // minima and one band key shared by all of them: every pair of
+    // them a candidate, verified at 0 / 0.
+    val s = spark
+    import s.implicits._
+    val d = tmpDir()
+    val dup = "the quick brown fox jumps over the lazy dog"
+    writeOneFile(Seq((1L, dup), (2L, dup), (3L, "short one"), (4L, "tiny"), (5L, "two words"))
+      .toDF("doc_id", "text"), d, "documents")
+    assert(graft.SparkEntry.queries("q_dedup_minhash")(s, d).collect().map(_.toSeq).toSeq ===
+      Seq(Seq(1L, 2L, 1.0)))
+    val r = graft.SparkEntry.queries("q_minhash_recall")(s, d).head()
+    assert(Seq("n_true", "n_cand", "hits").map(r.getAs[Long]) === Seq(1L, 1L, 1L))
+    assert(r.getAs[Double]("recall") === 1.0 && r.getAs[Double]("precision") === 1.0)
   }
 
   test("lsh plane auto-sizing: declared 16 at test sfs, log2(n) band " +
