@@ -1,7 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, LongType}
 
 /** Column-level API for the vector expressions.
   *
@@ -12,12 +15,78 @@ import org.apache.spark.sql.functions._
   * builder calls it via the SparkEntry wrapper.
   */
 object GraftFunctions {
-  val names: Seq[String] =
-    Seq("dot_product", "cosine_distance", "l2_distance", "sq_l2_distance",
-      "l2_norm", "norm_sq", "cosine_distance_pre_norm", "char_shingles",
-      "sorted_intersect_count", "sorted_dot_stats", "word_shingles",
-      "first_eq_index", "bloom_might_contain", "min_common_long",
-      "nearest_cells")
+  /** One SQL kernel: its name, the usage line `DESCRIBE FUNCTION`
+    * prints, and its builder over the call's arguments. */
+  final case class Kernel(name: String, usage: String,
+      build: Seq[Expression] => Expression)
+
+  /** Every kernel, as both [[register]] and [[graft.plans.GraftExtensions]]
+    * install it, so the two paths build the same expression trees. */
+  val kernels: Seq[Kernel] = {
+    // Widen any numeric array (parquet ARRAY<FLOAT>) to ARRAY<DOUBLE>
+    // before the kernel — f32→f64 widening is exact, keeping parity
+    // with the DuckDB oracle (SURVEY §7 "ARRAY<FLOAT> interop").
+    // Unconditional: SimplifyCasts removes the no-op case, and not
+    // touching e.dataType keeps the builder safe on unresolved children.
+    def d(e: Expression): Expression = Cast(e, ArrayType(DoubleType))
+    // Probe-cell arrays arrive as whatever integral type the cell id
+    // carries; widen to ARRAY<BIGINT> (exact) like d() widens floats.
+    def dl(e: Expression): Expression = Cast(e, ArrayType(LongType))
+    // The codebook, p and the metric fold out of the tree when the
+    // function is built, like the bloom bytes.
+    def folded(e: Expression, what: String): Any = {
+      require(e.foldable, s"nearest_cells expects a foldable $what, got $e")
+      e.eval()
+    }
+    Seq(
+      Kernel("dot_product", "dot_product(a, b) - sum_i a_i*b_i",
+        es => DotProduct(d(es(0)), d(es(1)))),
+      Kernel("cosine_distance", "cosine_distance(a, b) - 1 - cos(a, b)",
+        es => CosineDistance(d(es(0)), d(es(1)))),
+      Kernel("l2_distance", "l2_distance(a, b) - ||a - b||_2",
+        es => L2Distance(d(es(0)), d(es(1)))),
+      Kernel("sq_l2_distance", "sq_l2_distance(a, b) - ||a - b||_2^2",
+        es => SqL2Distance(d(es(0)), d(es(1)))),
+      Kernel("l2_norm", "l2_norm(a) - ||a||_2", es => L2Norm(d(es.head))),
+      Kernel("norm_sq", "norm_sq(a) - ||a||_2^2", es => NormSq(d(es.head))),
+      Kernel("cosine_distance_pre_norm", "cosine_distance_pre_norm(a, b, " +
+        "norm_sq(a), norm_sq(b)) - cosine_distance(a, b) with the squared norms supplied",
+        es => CosineDistancePreNorm(d(es(0)), d(es(1)), es(2), es(3))),
+      Kernel("char_shingles", "char_shingles(text, n) - one (pos, gram) row per " +
+        "character n-gram", es => CharShingles(es(0), es(1))),
+      Kernel("sorted_intersect_count", "sorted_intersect_count(a, b) - |a n b| " +
+        "over sorted distinct ARRAY<BIGINT> (merge walk)",
+        es => SortedIntersectCount(es(0), es(1))),
+      Kernel("sorted_dot_stats", "sorted_dot_stats(ka, wa, kb, wb) - [dp, n_shared] " +
+        "sparse dot over sorted key/weight array pairs (merge walk, decimal-rounded products)",
+        es => SortedDotStats(es(0), d(es(1)), es(2), d(es(3)))),
+      Kernel("word_shingles", "word_shingles(text, n, distinct) - word n-grams of " +
+        "the space-tokenized text, one compiled pass",
+        es => WordShingles(es(0), es(1), es(2))),
+      Kernel("first_eq_index", "first_eq_index(a, b) - first index where the " +
+        "ARRAY<BIGINT> inputs agree, -1 if none", es => FirstEqIndex(es(0), es(1))),
+      // The bloom bytes arrive as a foldable BINARY literal and are
+      // folded OUT of the expression tree at build time (see the
+      // BloomMightContainLong scaladoc: a ~35 MB literal child would
+      // hex-render through every plan toString).
+      Kernel("bloom_might_contain", "bloom_might_contain(bloom, probe) - false " +
+        "only if the BIGINT probe is not in the bloom filter",
+        es => BloomMightContainLong(es(1), es(0) match {
+          case e if e.foldable && e.dataType == BinaryType =>
+            e.eval(null).asInstanceOf[Array[Byte]]
+          case other => throw new IllegalArgumentException(
+            "bloom_might_contain expects (foldable BINARY bloom, BIGINT probe), " +
+              s"got a non-foldable ${other.dataType.simpleString} bloom side")
+        })),
+      Kernel("min_common_long", "min_common_long(a, b) - least element common " +
+        "to both arrays, NULL if none", es => MinCommonLong(dl(es(0)), dl(es(1)))),
+      Kernel("nearest_cells", "nearest_cells(v, codebook, p, metric) - the p " +
+        "nearest cells of v, nearest first",
+        es => NearestCells(es(0), Codebook.fold(es(1)),
+          folded(es(2), "INT p").asInstanceOf[Int], CellMetric(folded(es(3), "metric").toString))))
+  }
+
+  val names: Seq[String] = kernels.map(_.name)
 
   // Names graft itself registered, per session (weak keys — a closed
   // session drops its entry). A foreign squatter is also recorded
@@ -41,15 +110,6 @@ object GraftFunctions {
   }
 
   def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    // Widen any numeric array (parquet ARRAY<FLOAT>) to ARRAY<DOUBLE>
-    // before the kernel — f32→f64 widening is exact, keeping parity
-    // with the DuckDB oracle (SURVEY §7 "ARRAY<FLOAT> interop").
-    // Unconditional: SimplifyCasts removes the no-op case, and not
-    // touching e.dataType keeps the builder safe on unresolved children.
-    def d(e: Expression): Expression = Cast(e, ArrayType(DoubleType))
     val reg = spark.sessionState.functionRegistry
     // Idempotence is PER NAME (not a single head-name sentinel): if a
     // session somehow carries a partial registration — or a foreign
@@ -72,9 +132,9 @@ object GraftFunctions {
     def isGrafts(name: String): Boolean =
       reg.lookupFunction(FunctionIdentifier(name))
         .exists(i => Option(i.getClassName).exists(_.startsWith("graft.")))
-    def ensure(name: String)(builder: Seq[Expression] => Expression): Unit =
+    kernels.foreach { case Kernel(name, _, build) =>
       if (!reg.functionExists(FunctionIdentifier(name))) {
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
+        reg.createOrReplaceTempFunction(name, build, "built-in")
         mine.add(name)
       } else if (!mine.contains(name)) {
         if (isGrafts(name)) mine.add(name)
@@ -85,45 +145,7 @@ object GraftFunctions {
               "being kept (its semantics will be used wherever the " +
               "kernel is called)")
       }
-    ensure("dot_product")(es => DotProduct(d(es(0)), d(es(1))))
-    ensure("cosine_distance")(es => CosineDistance(d(es(0)), d(es(1))))
-    ensure("l2_distance")(es => L2Distance(d(es(0)), d(es(1))))
-    ensure("sq_l2_distance")(es => SqL2Distance(d(es(0)), d(es(1))))
-    ensure("l2_norm")(es => L2Norm(d(es.head)))
-    ensure("norm_sq")(es => NormSq(d(es.head)))
-    ensure("cosine_distance_pre_norm")(es =>
-      CosineDistancePreNorm(d(es(0)), d(es(1)), es(2), es(3)))
-    ensure("char_shingles")(es => CharShingles(es(0), es(1)))
-    ensure("sorted_intersect_count")(es => SortedIntersectCount(es(0), es(1)))
-    ensure("first_eq_index")(es => FirstEqIndex(es(0), es(1)))
-    ensure("sorted_dot_stats")(es =>
-      SortedDotStats(es(0), d(es(1)), es(2), d(es(3))))
-    ensure("word_shingles")(es => WordShingles(es(0), es(1), es(2)))
-    // Probe-cell arrays arrive as whatever integral type the cell id
-    // carries; widen to ARRAY<BIGINT> (exact) like d() widens floats.
-    def dl(e: Expression): Expression =
-      Cast(e, org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType))
-    ensure("min_common_long")(es => MinCommonLong(dl(es(0)), dl(es(1))))
-    // The bloom bytes arrive as a foldable BINARY literal and are
-    // folded OUT of the expression tree at build time (see the
-    // BloomMightContainLong scaladoc: a ~35 MB literal child would
-    // hex-render through every plan toString).
-    ensure("bloom_might_contain")(es => BloomMightContainLong(es(1), es(0) match {
-      case e if e.foldable &&
-          e.dataType == org.apache.spark.sql.types.BinaryType =>
-        e.eval(null).asInstanceOf[Array[Byte]]
-      case other => throw new IllegalArgumentException(
-        "bloom_might_contain expects (foldable BINARY bloom, BIGINT probe), " +
-          s"got a non-foldable ${other.dataType.simpleString} bloom side")
-    }))
-    // The codebook, p and the metric fold out of the tree the same way.
-    def folded(e: Expression, what: String): Any = {
-      require(e.foldable, s"nearest_cells expects a foldable $what, got $e")
-      e.eval()
     }
-    ensure("nearest_cells")(es => NearestCells(es(0), Codebook.fold(es(1)),
-      folded(es(2), "INT p").asInstanceOf[Int], CellMetric(folded(es(3), "metric").toString)))
   }
 
   def dot_product(a: Column, b: Column): Column =

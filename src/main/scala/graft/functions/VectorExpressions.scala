@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -19,25 +18,17 @@ import org.apache.spark.sql.types._
   * `aggregate(zip_with(...))` higher-order composition (virtual calls
   * per element); at 100 TB every embedding row passes through this.
   *
+  * The SQL builders in [[GraftFunctions.kernels]] wrap every vector
+  * argument in a cast to ARRAY<DOUBLE>, so any numeric array arrives
+  * widened.
+  *
   * Null elements inside a vector are treated as 0.0; mismatched
   * lengths use the common prefix (testdata vectors are fixed 64-dim,
   * so neither occurs in practice).
   */
 abstract class BinaryVectorExpression extends BinaryExpression
-    with Serializable {
-  // Inputs must already be ARRAY<DOUBLE>; GraftFunctions.register
-  // wraps both children in Cast(_, ArrayType(DoubleType)) so any
-  // numeric array (the parquet ARRAY<FLOAT>) arrives widened.
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<DOUBLE> inputs, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+    with ExpectsInputTypes with Serializable {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
 
@@ -127,41 +118,19 @@ case class CosineDistance(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Euclidean distance ||a - b||_2 (IVF assignment / alternative metric). */
+/** Euclidean distance ||a - b||_2 (IVF assignment / alternative metric):
+  * the sqrt of [[SqL2Distance]]'s sum. */
 case class L2Distance(left: Expression, right: Expression)
     extends BinaryVectorExpression {
   override def prettyName: String = "l2_distance"
 
-  override protected def compute(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (a.isNullAt(i)) 0.0 else a.getDouble(i)
-      val y = if (b.isNullAt(i)) 0.0 else b.getDouble(i)
-      val d = x - y
-      s += d * d
-      i += 1
-    }
-    math.sqrt(s)
-  }
+  override protected def compute(a: ArrayData, b: ArrayData): Double =
+    math.sqrt(SqL2Distance.sum(a, b))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i"); val x = ctx.freshName("x")
-      val y = ctx.freshName("y"); val dd = ctx.freshName("dd")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $a.isNullAt($i) ? 0.0 : $a.getDouble($i);
-         |  double $y = $b.isNullAt($i) ? 0.0 : $b.getDouble($i);
-         |  double $dd = $x - $y;
-         |  $acc += $dd * $dd;
-         |}
-         |${ev.value} = java.lang.Math.sqrt($acc);
-       """.stripMargin
+      val (code, acc) = SqL2Distance.sumCode(ctx, a, b)
+      s"$code\n${ev.value} = java.lang.Math.sqrt($acc);"
     })
 
   override protected def withNewChildrenInternal(
@@ -187,7 +156,24 @@ case class SqL2Distance(left: Expression, right: Expression)
     extends BinaryVectorExpression {
   override def prettyName: String = "sq_l2_distance"
 
-  override protected def compute(a: ArrayData, b: ArrayData): Double = {
+  override protected def compute(a: ArrayData, b: ArrayData): Double =
+    SqL2Distance.sum(a, b)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val (code, acc) = SqL2Distance.sumCode(ctx, a, b)
+      s"$code\n${ev.value} = $acc;"
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object SqL2Distance {
+  /** sum_i (a_i - b_i)², null elements read as 0.0 — the loop of both
+    * [[SqL2Distance]] and [[L2Distance]]. */
+  def sum(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var s = 0.0
     var i = 0
@@ -201,65 +187,40 @@ case class SqL2Distance(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i"); val x = ctx.freshName("x")
-      val y = ctx.freshName("y"); val dd = ctx.freshName("dd")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $a.isNullAt($i) ? 0.0 : $a.getDouble($i);
-         |  double $y = $b.isNullAt($i) ? 0.0 : $b.getDouble($i);
-         |  double $dd = $x - $y;
-         |  $acc += $dd * $dd;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  /** [[sum]] as generated Java, and the variable that holds it. Each
+    * query compiles its own copy of the loop, so the element reads stay
+    * specialised to that query's array classes. */
+  def sumCode(ctx: CodegenContext, a: String, b: String): (String, String) = {
+    val n = ctx.freshName("n"); val acc = ctx.freshName("acc")
+    val i = ctx.freshName("i"); val x = ctx.freshName("x")
+    val y = ctx.freshName("y"); val dd = ctx.freshName("dd")
+    (s"""
+       |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+       |double $acc = 0.0;
+       |for (int $i = 0; $i < $n; $i++) {
+       |  double $x = $a.isNullAt($i) ? 0.0 : $a.getDouble($i);
+       |  double $y = $b.isNullAt($i) ? 0.0 : $b.getDouble($i);
+       |  double $dd = $x - $y;
+       |  $acc += $dd * $dd;
+       |}""".stripMargin, acc)
+  }
 }
 
-/** ||a||_2 */
+/** ||a||_2: the sqrt of [[NormSq]]'s sum. */
 case class L2Norm(child: Expression) extends UnaryExpression
-    with Serializable {
+    with ExpectsInputTypes with Serializable {
   override def prettyName: String = "l2_norm"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<DOUBLE> input, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i)) { val x = a.getDouble(i); s += x * x }
-      i += 1
-    }
-    math.sqrt(s)
-  }
+  override def nullSafeEval(v: Any): Any =
+    math.sqrt(NormSq.sum(v.asInstanceOf[ArrayData]))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i"); val x = ctx.freshName("x")
-      s"""
-         |int $n = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) { double $x = $a.getDouble($i); $acc += $x * $x; }
-         |}
-         |${ev.value} = java.lang.Math.sqrt($acc);
-       """.stripMargin
+      val (code, acc) = NormSq.sumCode(ctx, a)
+      s"$code\n${ev.value} = java.lang.Math.sqrt($acc);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -280,18 +241,28 @@ case class L2Norm(child: Expression) extends UnaryExpression
   * callers hoisting across ragged arrays would change semantics, so
   * [[CosineDistancePreNorm]] documents the equal-length contract). */
 case class NormSq(child: Expression) extends UnaryExpression
-    with Serializable {
+    with ExpectsInputTypes with Serializable {
   override def prettyName: String = "norm_sq"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<DOUBLE> input, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
+  override def nullSafeEval(v: Any): Any = NormSq.sum(v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => {
+      val (code, acc) = NormSq.sumCode(ctx, a)
+      s"$code\n${ev.value} = $acc;"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object NormSq {
+  /** sum_i a_i², null elements skipped — the loop of both [[NormSq]]
+    * and [[L2Norm]]. */
+  def sum(a: ArrayData): Double = {
     val n = a.numElements()
     var s = 0.0
     var i = 0
@@ -302,22 +273,18 @@ case class NormSq(child: Expression) extends UnaryExpression
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i"); val x = ctx.freshName("x")
-      s"""
-         |int $n = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) { double $x = $a.getDouble($i); $acc += $x * $x; }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  /** [[sum]] as generated Java, and the variable that holds it (see
+    * [[SqL2Distance.sumCode]]). */
+  def sumCode(ctx: CodegenContext, a: String): (String, String) = {
+    val n = ctx.freshName("n"); val acc = ctx.freshName("acc")
+    val i = ctx.freshName("i"); val x = ctx.freshName("x")
+    (s"""
+       |int $n = $a.numElements();
+       |double $acc = 0.0;
+       |for (int $i = 0; $i < $n; $i++) {
+       |  if (!$a.isNullAt($i)) { double $x = $a.getDouble($i); $acc += $x * $x; }
+       |}""".stripMargin, acc)
+  }
 }
 
 /** `1 - dot(a,b) / sqrt(nasq * nbsq)` with the squared norms supplied
@@ -340,22 +307,10 @@ case class NormSq(child: Expression) extends UnaryExpression
   * one such table. CosinePreNormSpec pins the bit-equality. */
 case class CosineDistancePreNorm(first: Expression, second: Expression,
     third: Expression, fourth: Expression)
-    extends QuaternaryExpression with Serializable {
+    extends QuaternaryExpression with ExpectsInputTypes with Serializable {
   override def prettyName: String = "cosine_distance_pre_norm"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val arraysOk = Seq(first, second).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    val normsOk = Seq(third, fourth).forall(_.dataType == DoubleType)
-    if (arraysOk && normsOk) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (ARRAY<DOUBLE>, ARRAY<DOUBLE>, DOUBLE, " +
-        s"DOUBLE), got (${first.dataType.simpleString}, " +
-        s"${second.dataType.simpleString}, ${third.dataType.simpleString}, " +
-        s"${fourth.dataType.simpleString})")
-  }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType), DoubleType, DoubleType)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean =
     first.nullable || second.nullable || third.nullable || fourth.nullable
@@ -421,18 +376,9 @@ case class CosineDistancePreNorm(first: Expression, second: Expression,
   * null.
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
+    extends BinaryExpression with ExpectsInputTypes with Serializable {
   override def prettyName: String = "sorted_intersect_count"
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<BIGINT> inputs, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
 
@@ -500,18 +446,9 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   * minimal-colliding-band screen of the banded dedup route, run once
   * per candidate pair (~10⁸ at the 100× fixture). */
 case class FirstEqIndex(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
+    extends BinaryExpression with ExpectsInputTypes with Serializable {
   override def prettyName: String = "first_eq_index"
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<BIGINT> inputs, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
 
@@ -563,15 +500,10 @@ case class FirstEqIndex(left: Expression, right: Expression)
   * hash-match is the proof).
   */
 case class WordShingles(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression with Serializable {
+    third: Expression) extends TernaryExpression with ExpectsInputTypes
+    with Serializable {
   override def prettyName: String = "word_shingles"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, IntegerType, BooleanType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (STRING, INT, BOOLEAN), got $other")
-    }
+  override def inputTypes: Seq[DataType] = Seq(StringType, IntegerType, BooleanType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullIntolerant: Boolean = true
 
@@ -655,19 +587,10 @@ object WordShingles {
   */
 case class SortedDotStats(first: Expression, second: Expression,
     third: Expression, fourth: Expression)
-    extends QuaternaryExpression with Serializable {
+    extends QuaternaryExpression with ExpectsInputTypes with Serializable {
   override def prettyName: String = "sorted_dot_stats"
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(first, third).forall(_.dataType match {
-      case ArrayType(LongType, _) => true; case _ => false
-    }) && Seq(second, fourth).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true; case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (ARRAY<BIGINT>, ARRAY<DOUBLE>) × 2, got " +
-        children.map(_.dataType.simpleString).mkString("(", ", ", ")"))
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType),
+    ArrayType(DoubleType), ArrayType(LongType), ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullIntolerant: Boolean = true
 
@@ -775,12 +698,9 @@ object SortedDotStats {
   * pairs them).
   */
 case class BloomMightContainLong(child: Expression, bytes: Array[Byte])
-    extends UnaryExpression with Predicate with Serializable {
+    extends UnaryExpression with Predicate with ExpectsInputTypes with Serializable {
   override def prettyName: String = "bloom_might_contain"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a BIGINT probe, got ${child.dataType.simpleString}")
+  override def inputTypes: Seq[DataType] = Seq(LongType)
   override def nullIntolerant: Boolean = true
 
   @transient private lazy val bloom =
@@ -831,18 +751,9 @@ case class BloomMightContainLong(child: Expression, bytes: Array[Byte])
   * Null ELEMENTS cannot occur (cells are pmod results); they are
   * skipped defensively. */
 case class MinCommonLong(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
+    extends BinaryExpression with ExpectsInputTypes with Serializable {
   override def prettyName: String = "min_common_long"
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<BIGINT> inputs, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true

@@ -2,9 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{ArrayType, DoubleType}
-import graft.functions._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.GraftFunctions
 
 /** Cluster deployment entry point: registers the vector kernels
   * through the sanctioned extension seam instead of per-session
@@ -17,52 +16,21 @@ import graft.functions._
   * }}}
   *
   * Every session the cluster creates (including thrift-server /
-  * connect sessions the library never sees) then resolves
-  * `cosine_distance` & co. in SQL text as well as the DataFrame API.
-  * `GraftFunctions.register` remains as the session-local equivalent
-  * for embedded use; both produce the identical expression trees.
+  * connect sessions the library never sees) then resolves every kernel
+  * of `GraftFunctions.kernels` in SQL text as well as the DataFrame
+  * API. `GraftFunctions.register` remains as the session-local
+  * equivalent for embedded use; both install the builders of that one
+  * table, so they build the same expression trees.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def widen(e: Expression): Expression = Cast(e, ArrayType(DoubleType))
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     // Transparent IVF top-k pruning for IvfIndex-registered tables
     // (SURVEY §4's optional ANN rewrite).
     ext.injectOptimizerRule(IvfKnnPruning)
-    ext.injectFunction((FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - sum_i a_i*b_i"),
-      (es: Seq[Expression]) => DotProduct(widen(es(0)), widen(es(1)))))
-    ext.injectFunction((FunctionIdentifier("cosine_distance"),
-      info("cosine_distance", "cosine_distance(a, b) - 1 - cos(a, b)"),
-      (es: Seq[Expression]) => CosineDistance(widen(es(0)), widen(es(1)))))
-    ext.injectFunction((FunctionIdentifier("l2_distance"),
-      info("l2_distance", "l2_distance(a, b) - ||a - b||_2"),
-      (es: Seq[Expression]) => L2Distance(widen(es(0)), widen(es(1)))))
-    ext.injectFunction((FunctionIdentifier("sq_l2_distance"),
-      info("sq_l2_distance", "sq_l2_distance(a, b) - ||a - b||_2^2"),
-      (es: Seq[Expression]) => SqL2Distance(widen(es(0)), widen(es(1)))))
-    ext.injectFunction((FunctionIdentifier("l2_norm"),
-      info("l2_norm", "l2_norm(a) - ||a||_2"),
-      (es: Seq[Expression]) => L2Norm(widen(es.head))))
-    ext.injectFunction((FunctionIdentifier("sorted_intersect_count"),
-      info("sorted_intersect_count",
-        "sorted_intersect_count(a, b) - |a n b| over sorted distinct " +
-          "ARRAY<BIGINT> (merge walk)"),
-      (es: Seq[Expression]) => SortedIntersectCount(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("sorted_dot_stats"),
-      info("sorted_dot_stats",
-        "sorted_dot_stats(ka, wa, kb, wb) - [dp, n_shared] sparse dot " +
-          "over sorted key/weight array pairs (merge walk, decimal-" +
-          "rounded products)"),
-      (es: Seq[Expression]) =>
-        SortedDotStats(es(0), widen(es(1)), es(2), widen(es(3)))))
-    ext.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles",
-        "word_shingles(text, n, distinct) - word n-grams of the " +
-          "space-tokenized text, one compiled pass"),
-      (es: Seq[Expression]) => WordShingles(es(0), es(1), es(2))))
+    GraftFunctions.kernels.foreach { k =>
+      ext.injectFunction((FunctionIdentifier(k.name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, k.name, k.usage, ""),
+        k.build))
+    }
   }
 }

@@ -53,6 +53,20 @@ trait SparkTestBase extends AnyFunSuite {
     try body finally spark.conf.unset(key)
   }
 
+  /** Runs `body` with whole-stage codegen off and expressions
+    * interpreted, then restores both settings to what they were. */
+  def interpreted[T](body: => T): T = {
+    val conf = spark.conf
+    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val before = keys.map { case (k, _) => k -> conf.getOption(k) }
+    keys.foreach { case (k, v) => conf.set(k, v) }
+    try body finally before.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   /** `body`'s result and what it printed to `System.err`. */
   def capturingErr[T](body: => T): (T, String) = {
     val buf = new java.io.ByteArrayOutputStream()

@@ -47,17 +47,9 @@ class CosinePreNormSpec extends SparkTestBase {
       assert(bits(fused) === bits(pre),
         s"row $id: fused $fused != pre-norm $pre")
     }
-    val conf = spark.conf
-    conf.set("spark.sql.codegen.wholeStage", "false")
-    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      run().foreach { case (id, fused, pre) =>
-        assert(bits(fused) === bits(pre),
-          s"row $id (interpreted): fused $fused != pre-norm $pre")
-      }
-    } finally {
-      conf.set("spark.sql.codegen.wholeStage", "true")
-      conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    interpreted(run()).foreach { case (id, fused, pre) =>
+      assert(bits(fused) === bits(pre),
+        s"row $id (interpreted): fused $fused != pre-norm $pre")
     }
   }
 

@@ -48,16 +48,6 @@ class NearestCellsSpec extends SparkTestBase {
     vecs.select(col("id"), GraftFunctions.nearest_cells(col("v"), cb, p, m))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
 
-  private def interpreted[T](body: => T): T = {
-    val conf = spark.conf
-    conf.set("spark.sql.codegen.wholeStage", "false")
-    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try body finally {
-      conf.set("spark.sql.codegen.wholeStage", "true")
-      conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
-  }
-
   private def driver(vecs: DataFrame, cb: Codebook, m: CellMetric,
       p: Int): Map[Long, Seq[Long]] = {
     val rows = Codebook.collect(vecs.select("id", "v"))

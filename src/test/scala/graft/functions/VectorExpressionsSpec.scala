@@ -1,39 +1,64 @@
 package graft.functions
 
 import graft.SparkTestBase
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** Unit fixtures for the codegen vector kernels: hand-computed 2-4
   * dim values, edge cases (nulls, empty, zero-norm, mismatched
   * lengths), codegen-vs-interpreted parity, and kernel-vs-HOF parity
   * (the higher-order formulations in GraftFunctions are the
   * independent reference implementation). */
-class VectorExpressionsSpec extends SparkTestBase {
+class VectorExpressionsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import org.apache.spark.sql.functions._
+
+  /** `df` behind a shuffle. A projection straight over a local
+    * `Seq(...).toDF` frame is evaluated, interpreted, while the plan is
+    * optimized (ConvertToLocalRelation), so it would never reach codegen. */
+  private def staged(df: DataFrame): DataFrame = df.repartition(1)
+
+  /** `df`'s rows, after checking that `kernel` ran inside a
+    * whole-stage-codegen stage. */
+  private def compiled(df: DataFrame, kernel: String): Array[Row] = {
+    val rows = df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(collect(plan) { case w: WholeStageCodegenExec => w }
+      .exists(_.child.toString.contains(kernel + "(")),
+      s"$kernel ran outside whole-stage codegen:\n$plan")
+    rows
+  }
+
+  /** The kernel columns `k` of `base` (compiled, see [[compiled]]) next
+    * to the reference columns `ref`, as (kernel, reference) row pairs
+    * matched on `base`'s `id`. A higher-order reference in the kernel's
+    * projection would keep that projection out of whole-stage codegen,
+    * so the two run as separate projections. */
+  private def againstRef(base: DataFrame, kernel: String, k: Seq[Column],
+      ref: Seq[Column]): Seq[(Row, Row)] = {
+    def byId(rs: Array[Row]) = rs.map(r => r.getLong(0) -> r).toMap
+    val got = byId(compiled(base.select(col("id") +: k: _*), kernel))
+    val want = byId(base.select(col("id") +: ref: _*).collect())
+    assert(got.keySet == want.keySet)
+    got.toSeq.map { case (id, r) => (r, want(id)) }
+  }
+
+  /** `rows` with a row id in front. */
+  private def keyed[A, B](rows: Seq[(A, B)]): Seq[(Long, A, B)] =
+    rows.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
 
   private def df1(a: Seq[java.lang.Double], b: Seq[java.lang.Double]) = {
     val s = spark
     import s.implicits._
-    Seq((a, b)).toDF("a", "b")
+    staged(Seq((a, b)).toDF("a", "b"))
   }
 
   private def evalBoth(a: Seq[java.lang.Double], b: Seq[java.lang.Double],
       exprSql: String): (Double, Double) = {
     val base = df1(a, b)
-    val codegen = base.selectExpr(exprSql).head.getDouble(0)
-    // Force the interpreted path: no whole-stage codegen and
-    // interpreted expression evaluation.
-    val conf = spark.conf
-    val ws = conf.get("spark.sql.codegen.wholeStage", "true")
-    conf.set("spark.sql.codegen.wholeStage", "false")
-    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interpreted =
-      try base.selectExpr(exprSql).head.getDouble(0)
-      finally {
-        conf.set("spark.sql.codegen.wholeStage", ws)
-        conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      }
-    (codegen, interpreted)
+    val codegen = compiled(base.selectExpr(exprSql), exprSql.takeWhile(_ != '('))
+      .head.getDouble(0)
+    (codegen, interpreted(base.selectExpr(exprSql).head.getDouble(0)))
   }
 
   private def d(xs: Double*): Seq[java.lang.Double] = xs.map(Double.box)
@@ -80,22 +105,31 @@ class VectorExpressionsSpec extends SparkTestBase {
     assert(base.selectExpr("dot_product(a, b)").head.isNullAt(0))
   }
 
+  test("a wrong input type names the kernel, the parameter and both types") {
+    def failure(sql: String): String =
+      intercept[org.apache.spark.sql.AnalysisException](spark.sql(sql).collect()).getMessage
+    val longs = failure("SELECT sorted_intersect_count(array('x'), array(1L))")
+    Seq("sorted_intersect_count", "first parameter", "ARRAY<BIGINT>", "ARRAY<STRING>")
+      .foreach(w => assert(longs.contains(w), longs))
+    val norms = failure("SELECT cosine_distance_pre_norm(array(1D), array(1D), 'x', 1D)")
+    Seq("cosine_distance_pre_norm", "third parameter", "\"DOUBLE\"", "\"STRING\"")
+      .foreach(w => assert(norms.contains(w), norms))
+  }
+
   test("kernel == HOF fallback on random vectors (seeded)") {
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(42)
     val rows = Seq.fill(50)((Seq.fill(16)(rnd.nextDouble() - 0.5),
       Seq.fill(16)(rnd.nextDouble() - 0.5)))
-    val base = rows.toDF("a", "b")
-    val got = base.select(
-      GraftFunctions.dot_product(col("a"), col("b")).as("k"),
-      GraftFunctions.dotProductHof(col("a"), col("b")).as("h"),
-      GraftFunctions.cosine_distance(col("a"), col("b")).as("ck"),
-      GraftFunctions.cosineDistanceHof(col("a"), col("b")).as("ch"),
-      GraftFunctions.l2_norm(col("a")).as("nk"),
-      GraftFunctions.l2NormHof(col("a")).as("nh")).collect()
-    got.foreach { case Row(k: Double, h: Double, ck: Double, ch: Double,
-        nk: Double, nh: Double) =>
+    val base = staged(keyed(rows).toDF("id", "a", "b"))
+    val (a, b) = (col("a"), col("b"))
+    againstRef(base, "l2_norm",
+      Seq(GraftFunctions.dot_product(a, b), GraftFunctions.cosine_distance(a, b),
+        GraftFunctions.l2_norm(a)),
+      Seq(GraftFunctions.dotProductHof(a, b), GraftFunctions.cosineDistanceHof(a, b),
+        GraftFunctions.l2NormHof(a))).foreach {
+      case (Row(_, k: Double, ck: Double, nk: Double), Row(_, h: Double, ch: Double, nh: Double)) =>
       assert(math.abs(k - h) < 1e-12)
       assert(math.abs(ck - ch) < 1e-12)
       assert(math.abs(nk - nh) < 1e-12)
@@ -118,12 +152,12 @@ class VectorExpressionsSpec extends SparkTestBase {
     val rnd = new scala.util.Random(11)
     val rows = Seq.fill(100)((Seq.fill(64)(rnd.nextDouble() * 10 - 5),
       Seq.fill(64)(rnd.nextDouble() * 10 - 5)))
-    val base = rows.toDF("a", "b")
-    base.select(
-      GraftFunctions.sq_l2_distance(col("a"), col("b")).as("k"),
-      expr("aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), " +
-        "CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)").as("h"))
-      .collect().foreach { case Row(k: Double, h: Double) =>
+    val base = staged(keyed(rows).toDF("id", "a", "b"))
+    againstRef(base, "sq_l2_distance",
+      Seq(GraftFunctions.sq_l2_distance(col("a"), col("b"))),
+      Seq(expr("aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), " +
+        "CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)")))
+      .foreach { case (Row(_, k: Double), Row(_, h: Double)) =>
         assert(k == h, s"kernel $k != fold $h")
       }
   }
@@ -138,25 +172,16 @@ class VectorExpressionsSpec extends SparkTestBase {
     val rows = Seq.fill(200)((
       rnd.shuffle((0L to 400L).toList).take(rnd.nextInt(60)).sorted,
       rnd.shuffle((0L to 400L).toList).take(rnd.nextInt(60)).sorted))
-    val base = rows.toDF("a", "b")
-    base.selectExpr("sorted_intersect_count(a, b) AS k",
-      "CAST(size(array_intersect(a, b)) AS BIGINT) AS r")
-      .collect().foreach { case Row(k: Long, r: Long) =>
+    val base = staged(rows.toDF("a", "b"))
+    compiled(base.selectExpr("sorted_intersect_count(a, b) AS k",
+      "CAST(size(array_intersect(a, b)) AS BIGINT) AS r"), "sorted_intersect_count")
+      .foreach { case Row(k: Long, r: Long) =>
         assert(k === r, s"merge walk $k != array_intersect $r")
       }
     // Interpreted parity on one fixture.
     val one = Seq((Seq(1L, 3L, 5L, 9L), Seq(2L, 3L, 9L, 11L)))
       .toDF("a", "b")
-    val conf = spark.conf
-    conf.set("spark.sql.codegen.wholeStage", "false")
-    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interp =
-      try one.selectExpr("sorted_intersect_count(a, b)").head.getLong(0)
-      finally {
-        conf.set("spark.sql.codegen.wholeStage", "true")
-        conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      }
-    assert(interp === 2L)
+    assert(interpreted(one.selectExpr("sorted_intersect_count(a, b)").head.getLong(0)) === 2L)
   }
 
   test("first_eq_index == the HOF filter form on random signatures; " +
@@ -171,25 +196,16 @@ class VectorExpressionsSpec extends SparkTestBase {
       Seq.fill(16)(rnd.nextInt(6).toLong),
       Seq.fill(16)(rnd.nextInt(6).toLong))) :+
       (Seq(7L, 8L), Seq(9L, 8L, 7L))
-    val base = rows.toDF("a", "b")
-    base.selectExpr("first_eq_index(a, b) AS k",
-      "CAST(coalesce(try_element_at(filter(sequence(0, CAST(least(size(a), " +
+    val base = staged(keyed(rows).toDF("id", "a", "b"))
+    againstRef(base, "first_eq_index", Seq(expr("first_eq_index(a, b)")),
+      Seq(expr("CAST(coalesce(try_element_at(filter(sequence(0, CAST(least(size(a), " +
         "size(b)) AS INT) - 1), i -> element_at(a, CAST(i AS INT) + 1) = " +
-        "element_at(b, CAST(i AS INT) + 1)), 1), -1) AS INT) AS r")
-      .collect().foreach { case Row(k: Int, r: Int) =>
+        "element_at(b, CAST(i AS INT) + 1)), 1), -1) AS INT)")))
+      .foreach { case (Row(_, k: Int), Row(_, r: Int)) =>
         assert(k === r, s"kernel $k != HOF $r")
       }
     val one = Seq((Seq(5L, 1L, 9L), Seq(4L, 1L, 9L))).toDF("a", "b")
-    val conf = spark.conf
-    conf.set("spark.sql.codegen.wholeStage", "false")
-    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interp =
-      try one.selectExpr("first_eq_index(a, b)").head.getInt(0)
-      finally {
-        conf.set("spark.sql.codegen.wholeStage", "true")
-        conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      }
-    assert(interp === 1)
+    assert(interpreted(one.selectExpr("first_eq_index(a, b)").head.getInt(0)) === 1)
   }
 
   test("sorted_intersect_count == size(array_intersect) on sorted arrays " +
@@ -209,24 +225,15 @@ class VectorExpressionsSpec extends SparkTestBase {
     val fuzz = Seq.fill(300)((
       Seq.fill(rnd.nextInt(40))(rnd.nextLong(12)).sorted,
       Seq.fill(rnd.nextInt(40))(rnd.nextLong(12)).sorted))
-    (pinned ++ fuzz).toDF("a", "b")
+    compiled(staged((pinned ++ fuzz).toDF("a", "b"))
       .selectExpr("sorted_intersect_count(a, b) AS k",
-        "CAST(size(array_intersect(a, b)) AS BIGINT) AS r")
-      .collect().foreach { case Row(k: Long, r: Long) =>
+        "CAST(size(array_intersect(a, b)) AS BIGINT) AS r"), "sorted_intersect_count")
+      .foreach { case Row(k: Long, r: Long) =>
         assert(k === r, s"merge walk $k != array_intersect $r")
       }
     // Interpreted path covers the duplicate-run skip too.
-    val conf = spark.conf
-    conf.set("spark.sql.codegen.wholeStage", "false")
-    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interp =
-      try Seq((Seq(5L, 5L), Seq(5L, 5L))).toDF("a", "b")
-        .selectExpr("sorted_intersect_count(a, b)").head.getLong(0)
-      finally {
-        conf.set("spark.sql.codegen.wholeStage", "true")
-        conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      }
-    assert(interp === 1L)
+    assert(interpreted(Seq((Seq(5L, 5L), Seq(5L, 5L))).toDF("a", "b")
+      .selectExpr("sorted_intersect_count(a, b)").head.getLong(0)) === 1L)
   }
 
   test("distance properties: symmetric, in [0, 2], d(x,x) ~ 0") {
@@ -266,9 +273,9 @@ class VectorExpressionsSpec extends SparkTestBase {
     }
     val base = rows.toDF("id", "ka", "wa", "kb", "wb")
       .localCheckpoint(eager = true)
-    val kernel = base.selectExpr("id",
-      "sorted_dot_stats(ka, wa, kb, wb) AS st")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val kernel = compiled(base.selectExpr("id",
+      "sorted_dot_stats(ka, wa, kb, wb) AS st"), "sorted_dot_stats")
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     // Truth: the EXACT expression of the flat tf-idf plan — explode
     // both sides to (key, w) postings, equi-join on key, then
     // sum(CAST(round(wa*wb,12) AS DECIMAL(38,12))) cast to double.
@@ -319,16 +326,42 @@ class VectorExpressionsSpec extends SparkTestBase {
     // but the codegen wrapper path must agree too).
     val one = Seq((Seq(1L, 3L, 9L), Seq(0.5, 2.0, 13.0),
       Seq(3L, 9L, 11L), Seq(4.0, 0.125, 7.0))).toDF("ka", "wa", "kb", "wb")
-    val conf = spark.conf
-    conf.set("spark.sql.codegen.wholeStage", "false")
-    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interp =
-      try one.selectExpr("sorted_dot_stats(ka, wa, kb, wb)")
-        .head.getSeq[Double](0)
-      finally {
-        conf.set("spark.sql.codegen.wholeStage", "true")
-        conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      }
+    val interp = interpreted(one.selectExpr("sorted_dot_stats(ka, wa, kb, wb)")
+      .head.getSeq[Double](0))
     assert(interp === Seq(2.0 * 4.0 + 13.0 * 0.125, 2.0))
+  }
+
+  test("min_common_long == array_min(array_intersect) on small cell arrays, " +
+    "codegen == interpreted") {
+    val s = spark
+    import s.implicits._
+    def l(xs: java.lang.Long*): Seq[java.lang.Long] = xs
+    val rnd = new scala.util.Random(53)
+    // Probe-cell shapes: up to 8 cells over a small id domain, so
+    // shared, disjoint and empty inputs all occur; a null element now
+    // and then, which both forms skip.
+    def cells(): Seq[java.lang.Long] = Seq.fill(rnd.nextInt(9))(
+      if (rnd.nextInt(10) == 0) null else java.lang.Long.valueOf(rnd.nextInt(12).toLong))
+    val pinned = Seq(
+      (l(1L, 2L), l(3L, 4L)), // disjoint: NULL
+      (l(4L, 2L, 9L), l(9L, 2L)), // equal minima
+      (l(2L, 9L), l(2L, 7L)), // equal minima first on both sides
+      (l(null, 3L), l(null, 4L)), // only a null in common: NULL
+      (l(null, 6L, 5L), l(5L, null, 6L)),
+      (l(), l(1L)))
+    val rows = keyed(pinned ++ Seq.fill(400)((cells(), cells())))
+    def q = staged(rows.toDF("id", "a", "b")).selectExpr("id",
+      "min_common_long(a, b) AS k", "array_min(array_intersect(a, b)) AS r")
+    def read(rs: Array[Row]): Map[Long, (Option[Long], Option[Long])] = rs.map(r =>
+      r.getLong(0) -> (Option(r.get(1)).map(_.asInstanceOf[Long]),
+        Option(r.get(2)).map(_.asInstanceOf[Long]))).toMap
+    val codegen = read(compiled(q, "min_common_long"))
+    val interp = read(interpreted(q.collect()))
+    assert(codegen.size === rows.size)
+    codegen.foreach { case (id, (k, r)) =>
+      assert(k === r, s"row $id: kernel $k != array_min(array_intersect) $r")
+      assert(interp(id) === (k, r), s"row $id: interpreted ${interp(id)._1} != codegen $k")
+    }
+    assert(codegen.values.exists(_._1.isEmpty) && codegen.values.exists(_._1.isDefined))
   }
 }
